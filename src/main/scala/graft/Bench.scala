@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * A warm-up pass (table footers + a no-op job) runs before timing so
@@ -10,72 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Size post-shuffle partitions to the DATA, not the core count
-      // (r13 verdict ask 1): with parallelismFirst (Spark's default)
-      // AQE keeps one shuffle partition per core even when the whole
-      // exchange is a few MB, so at SPARK_GRAFT_CPUS=32 every sub-GB
-      // shuffle paid 32 tiny tasks of scheduling tax — q03/q07 ran
-      // 3.3x/4.8x their local[4] pins with identical plans.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      // r16 re-measurement of the advisory size: 16m (the r13 pick)
-      // over-coalesces CPU-dense small-byte exchanges into one task —
-      // a low-cardinality window key like q176's 3-value flag
-      // serializes a 2.2 task-sec sort onto one core (wall == CPU).
-      // A 36-query sweep at 16m/8m/4m/2m (min-of-two warm runs,
-      // /tmp-logged and summarized in OPTIMIZATION_r16.md) read
-      // 38.8 / 41.4 / 36.8 / 55.9 s: 4m recovers the q176/q213-class
-      // parallelism without 2m's task-explosion blowups (q160 8x).
-      // Parameterised (SPARK_GRAFT_ADVISORY) with the 4m local
-      // default; a production 100 TB deployment sets 64m+ — partition
-      // BYTES per task should track per-task CPU seconds, and at
-      // sf0.1 the corpus is ~100x denser in CPU per byte than the
-      // TPC-H side.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "4m"))
-      // r16: the codegen hash-aggregate's two-level "fast map" first
-      // level degenerates on this workload's grouping keys — md5-
-      // derived hashes and packed (p1·2^32+p2) pair longs drive its
-      // cheap first-level hash into linear probe storms (QueryMetrics:
-      // avgHashProbe 144 on q205's pair count, 480 on its partial agg,
-      // 70 on q128 — healthy is ~1-2). Disabling the first level
-      // falls back to the robust UnsafeFixedWidthAggregationMap:
-      // interleaved min-of-3 A/B over 16 agg-heavy queries read
-      // 14.7 s vs 17.1 s (-14%), no query regressing. Key-shape is a
-      // property of the workload, not the scale factor — the same
-      // keys degenerate identically at 100 TB — so the default is
-      // off at every deployment size (env-overridable).
-      .config("spark.sql.codegen.aggregate.map.twolevel.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AGG_TWOLEVEL", "false"))
-      // r17: at <= 200 shuffle partitions Spark's bypass-merge shuffle
-      // writer opens ONE FILE PER REDUCE PARTITION per map task — at
-      // local[32] that is 1024 file create/close cycles per exchange,
-      // measured 150-200 ms of executorRunTime per map task for
-      // KB-scale shuffles (TaskOverheadProbe: a single 260k-row
-      // exchange read 5-7.4 task-sec; threshold 1 reads 0.9-2.1, wall
-      // 0.40 -> 0.27 s). This was the bulk of the r16 "task-sec is
-      // 10-100x napkin math" anomaly. Threshold 1 routes every
-      // exchange through the serialized UnsafeShuffleWriter (one spill
-      // file + index per task) — the SAME writer a production >200-
-      // partition deployment uses, so this config ALIGNS local mode
-      // with the 100 TB path rather than tuning away from it.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BYPASS", "1"))
-      // r17 experiment knob: let AQE coalesce the OUTPUT partitioning
-      // of cached plans (the session memos cache at the static
-      // 32-partition layout otherwise, so every map stage over a
-      // KB-scale memo pays 32 tasks of fixed overhead).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "false"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession()
     // executor-task-time accumulator (r13 verdict ask 2): per-query
     // wall-vs-task-time is the telemetry that separates "tasks
     // idle-waiting" from "work actually grew" — see TaskTimeProbe.
@@ -289,7 +223,7 @@ object Bench {
           qs.filterNot(declared.contains).foreach { qn =>
             passErrors.getOrElseUpdate(s"memo_census:$m",
               s"undeclared consumer $qn of lazy memo $m - re-run " +
-                "tools.MemoCensus and update Prewarm.lazyMemos")
+                "graft.Probe memo and update Prewarm.lazyMemos")
           }
         }
     }
@@ -385,7 +319,7 @@ object Bench {
     }
     val gateVerdict0: BenchGate.Verdict = try
       BenchGate.decide(pinThr, pass1, pass2,
-        passErrors.keySet.toSet, cpus.toInt, ncpu)
+        passErrors.keySet.toSet, cpus, ncpu)
     catch {
       case scala.util.control.NonFatal(_) =>
         BenchGate.Verdict(Seq.empty, Seq.empty, Seq.empty)
@@ -397,12 +331,12 @@ object Bench {
     // that inflates task-seconds with no /proc/stat witness (r15
     // q262). So the artifact now adjudicates itself: each standing
     // fail re-runs ONCE here (same JVM, memos warm, transients
-    // dropped — the exact pass-2 measurement conditions, via the
-    // BenchOne discipline), and BenchGate.applyRerun downgrades fails
-    // whose rerun lands under threshold (evidence in the
-    // adjudication) while a rerun still over threshold CONFIRMS the
-    // regression in-artifact. Genuine plan regressions reproduce in
-    // isolation by definition; contention windows do not.
+    // dropped — the exact pass-2 measurement conditions), and
+    // BenchGate.applyRerun downgrades fails whose rerun lands under
+    // threshold (evidence in the adjudication) while a rerun still
+    // over threshold CONFIRMS the regression in-artifact. Genuine plan
+    // regressions reproduce in isolation by definition; contention
+    // windows do not.
     val rerunQuints =
       scala.collection.mutable.LinkedHashMap[String, (Double, Double, Long)]()
     gateVerdict0.regressed.foreach { case (n, _, _) =>

@@ -189,7 +189,7 @@ object BenchGate {
     *    the rerun figures in the adjudication (never silent);
     *  - rerun still over threshold -> the fail STANDS and the
     *    artifact carries its own confirmation (a reader no longer
-    *    needs a manual BenchOne session to adjudicate);
+    *    needs a manual `graft.Probe time` run to adjudicate);
     *  - no rerun measured (rerun itself errored) -> the fail stands
     *    unchanged.
     * A genuine plan regression cannot pass this gate: it reproduces

@@ -428,8 +428,7 @@ object Analytics {
       val dg = ed.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       val edd = ed.join(dg, "src").tcache()
       val docs = documents(s, d).select(col("doc_id"))
-      val localMax =
-        s.conf.get("spark.graft.graph.localEdgeMax", "4000000").toLong
+      val localMax = graft.GraftConf.GraphLocalEdgeMax.get(s)
       val r =
         if (Tables.fitsLocal(edd, localMax)) {
           // r16 fast path (see GraphKernel): the 3 integer rank rounds

@@ -81,8 +81,7 @@ object Curation {
     // Past the bound (a corpus whose aggregated vocabulary exceeds
     // one task's memory) the distributed per-round loop below remains
     // the scale path.
-    val localMax =
-      s.conf.get("spark.graft.bpe.localVocabMax", "4000000").toLong
+    val localMax = graft.GraftConf.BpeLocalVocabMax.get(s)
     val nWords = boundedCollect(df0.groupBy(col("s")).agg(
         sum(col("cnt")).as("cnt"))
         .agg(count(lit(1)).as("nw")), 1, "BPE vocab size")(0).getLong(0)

@@ -9,7 +9,7 @@ package graft.ops
   * + aggregations per round, lazy lineage cuts), but at bench scale
   * every round's 2–3 exchanges cost an AQE stage cycle each — q218's
   * six label-prop rounds ran 38 jobs for 0.4 task-seconds of actual
-  * arithmetic (ProfileOverhead, OPTIMIZATION_r16.md). Below a
+  * arithmetic (`Probe metrics`, OPTIMIZATION_r16.md). Below a
   * configured edge bound the whole fixed-round recurrence runs inside
   * ONE executor task over the (pair-graph-bounded, NOT corpus-bounded)
   * edge list; past the bound the unchanged distributed loop remains

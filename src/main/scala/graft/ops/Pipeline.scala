@@ -52,8 +52,7 @@ object Pipeline {
       // builds from the single-task kernel (cached: session memo, the
       // distributed loop's checkpoint pinned blocks the same way) and
       // the convergence loop below stays the scale path.
-      val localMax =
-        s.conf.get("spark.graft.graph.localEdgeMax", "4000000").toLong
+      val localMax = graft.GraftConf.GraphLocalEdgeMax.get(s)
       val pairs0 = jaccardPairs(s, d).select(col("d1"), col("d2"))
       if (Tables.fitsLocal(pairs0, localMax)) {
         val ss = s; import ss.implicits._
@@ -1900,8 +1899,7 @@ object Pipeline {
     * below remains the 100 TB path. */
   private[graft] def starContraction(pairs: DataFrame): DataFrame = {
     val s = pairs.sparkSession
-    val localMax =
-      s.conf.get("spark.graft.graph.localEdgeMax", "4000000").toLong
+    val localMax = graft.GraftConf.GraphLocalEdgeMax.get(s)
     val p2 = pairs.toDF("d1", "d2")
     if (Tables.fitsLocal(p2, localMax)) {
       val ss = s; import ss.implicits._
@@ -1972,18 +1970,14 @@ object Pipeline {
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
 
-    val verbose = sys.env.contains("SPARK_GRAFT_CC_VERBOSE")
     var prev = digest(edges)
     var converged = false
     var iter = 0
     while (!converged && iter < 30) {
-      val t0 = System.nanoTime()
       // lazy checkpoint: the digest job both materializes the round's
       // edge set and measures it — one Spark job per round, not two
       val next = smallStar(largeStar(edges)).localCheckpoint(eager = false)
       val cur = digest(next)
-      if (verbose) println(
-        f"CC round $iter%2d  ${(System.nanoTime() - t0) / 1e9}%6.2f s  edges=${cur._1}")
       converged = cur == prev
       prev = cur
       edges = next

@@ -140,7 +140,7 @@ object Prewarm {
     * on first touch inside its own consumer's timing instead —
     * honest attribution, deterministic under the bench's name-sorted
     * pass order. Consumers here are the measured census
-    * (`tools.MemoCensus`, 2026-08-16, sf0.001 — re-run it when a new
+    * (`graft.Probe memo`, 2026-08-16, sf0.001 — re-run it when a new
     * query adopts one of these memos: a second consumer is the
     * signal to move the memo back into a chain). MemoRegistrySpec
     * enforces the dichotomy: every registered memo is either built
@@ -172,7 +172,7 @@ object Prewarm {
     Curation.bpe256Merges(s, d); ()
   }
 
-  /** Per-memo build seconds, in build order (tools.MemoTime prints
+  /** Per-memo build seconds, in build order (`graft.Probe memo` prints
     * them; Bench reports only the total). */
   def timed(s: SparkSession, d: String): Seq[(String, Double)] = {
     graft.cdc.GraftFunctions.register(s)

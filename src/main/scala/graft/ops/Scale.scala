@@ -1062,7 +1062,7 @@ object Scale {
       // Exact-J per pair by record fetch (r17, q130's verify recipe):
       // the former shape joined every pair against d1's FULL shingle
       // postings and then d2's — a pairs×postings row expansion whose
-      // pipeline read ~30 task-sec (QueryMetrics). Fetch both docs'
+      // pipeline read ~30 task-sec (`Probe metrics`). Fetch both docs'
       // sorted shingle arrays instead (two keyed joins, no expansion)
       // and count the intersection natively; i = 0 pairs fall out of
       // the two-pointer count exactly like the old left join's

@@ -104,8 +104,7 @@ object Signals {
     // runs in one task below the edge bound; identical Long
     // arithmetic (per-edge DIV then sum), q187/q210 oracles pin it.
     val s = edd.sparkSession
-    val localMax =
-      s.conf.get("spark.graft.graph.localEdgeMax", "4000000").toLong
+    val localMax = graft.GraftConf.GraphLocalEdgeMax.get(s)
     if (Tables.fitsLocal(edd, localMax)) {
       val ss = s; import ss.implicits._
       return edd.select(col("src").cast("string"),
@@ -162,8 +161,7 @@ object Signals {
     // below stays the scale path. Same output bit-for-bit
     // (GraphKernelSpec + the q218 oracle at both SFs).
     val s = ed.sparkSession
-    val localMax =
-      s.conf.get("spark.graft.graph.localEdgeMax", "4000000").toLong
+    val localMax = graft.GraftConf.GraphLocalEdgeMax.get(s)
     if (Tables.fitsLocal(ed, localMax)) {
       val ss = s; import ss.implicits._
       return ed.select(col("a").cast("long"), col("b").cast("long"))
@@ -205,8 +203,7 @@ object Signals {
       rounds: Int): DataFrame = {
     // r16 fast path (see GraphKernel): same dispatch as minLabelProp.
     val s = ed.sparkSession
-    val localMax =
-      s.conf.get("spark.graft.graph.localEdgeMax", "4000000").toLong
+    val localMax = graft.GraftConf.GraphLocalEdgeMax.get(s)
     if (Tables.fitsLocal(ed, localMax)) {
       val ss = s; import ss.implicits._
       return ed.select(col("a").cast("long"), col("b").cast("long"))

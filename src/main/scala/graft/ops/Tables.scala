@@ -22,7 +22,7 @@ object Tables {
     * driver-side file listing + footer schema read on every call, and
     * the bench's ~310 queries × 2 passes × several tables each made
     * that the single largest slice of per-query DataFrame-construction
-    * time (r16 ProfileOverhead: 45 s of build across a 180 s warm
+    * time (r16 `Probe metrics`: 45 s of build across a 180 s warm
     * suite). Reusing the resolved relation removes the repeated
     * listing/inference; safe because a dataset dir is immutable for
     * the life of a session (fixtures that rewrite files use their own
@@ -291,7 +291,7 @@ object Tables {
     * layout make every consumer map stage launch 32 tasks — for a
     * KB-scale dimension (the near-dup pair graph, per-doc signature
     * tables) that is pure fixed overhead ×32 ×consumers (q160's whole
-    * 18.9 task-sec was this; ProfileOverhead puts the suite floor at
+    * 18.9 task-sec was this; `Probe metrics` puts the suite floor at
     * ~40 ms/job dominated by task dispatch). AQE cannot re-lay cached
     * plans (output partitioning pinned by default, and the global
     * canChangeCachedPlanOutputPartitioning flag was A/B'd and
@@ -302,7 +302,7 @@ object Tables {
     * parallelism stand — a 100 TB relation keeps its thousands of
     * partitions. */
   private[ops] def cacheSized(df: DataFrame, rowsPerPart: Long = 65536L,
-      maxLocal: Long = 4000000L): DataFrame = {
+      maxLocal: Long = graft.GraftConf.LocalMax): DataFrame = {
     val built = df.cache()
     val n = built.count()
     if (n <= maxLocal) {

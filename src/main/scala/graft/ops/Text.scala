@@ -341,8 +341,8 @@ object Text {
       // stage under the static layout (q160 1.58 → 0.86 s from this
       // alone). Bound = the kernel edge bound: past it the build's
       // layout and parallelism stand.
-      Tables.cacheSized(buildJaccardPairs(s, d), maxLocal =
-        s.conf.get("spark.graft.graph.localEdgeMax", "4000000").toLong)
+      Tables.cacheSized(buildJaccardPairs(s, d),
+        maxLocal = graft.GraftConf.GraphLocalEdgeMax.get(s))
     }
 
   private def buildJaccardPairs(s: SparkSession, d: String): DataFrame =
@@ -1370,7 +1370,7 @@ object Text {
       // Candidate VERIFY by record fetch (r17): the former shape
       // joined every candidate pair against d1's FULL shingle set and
       // then d2's — a 9.8M-row intermediate for 137k candidates whose
-      // pipeline read 38 task-sec (QueryMetrics). The SSJoin-canonical
+      // pipeline read 38 task-sec (`Probe metrics`). The SSJoin-canonical
       // verify instead fetches both docs' sorted shingle arrays (two
       // keyed joins, no row expansion — arrays are doc-bounded,
       // ScalingSpec territory) and counts the intersection with the

@@ -121,6 +121,23 @@ object CdcReplaySource {
       }
     }
 
+  /** The lines of `f` from `startByte` (a line boundary) up to the
+    * file's length when it is opened. A live writer appends while the
+    * replay reads, and flushes only at ack, so the log can end
+    * mid-line. Bounding the read at the open-time length keeps that
+    * half-written line the LAST one read — dropped by
+    * [[completeLines]] as a torn tail and read whole next poll —
+    * where an unbounded look-ahead would read on into its rest, see
+    * a torn line followed by more, and fail as corrupt. */
+  private[streaming] def openLines(
+      f: String, startByte: Long): scala.io.BufferedSource = {
+    val in = new java.io.FileInputStream(f)
+    val end = in.getChannel.size()
+    in.getChannel.position(startByte)
+    scala.io.Source.fromInputStream(com.google.common.io.ByteStreams
+      .limit(in, math.max(0L, end - startByte)))
+  }
+
   /** Driver-side index scan: all (file, lsn) pairs, lsn-sorted.
     * Enforces the per-shard LSN-sort format invariant (this reads
     * every line anyway, so the check is free here). */
@@ -142,14 +159,8 @@ object CdcReplaySource {
     * offsets are absolute. */
   private[streaming] def lsnIndexOfFileFrom(
       f: String, startByte: Long): Seq[(Long, Long)] = {
-    val stream = new java.io.FileInputStream(f)
+    val src = openLines(f, startByte)
     try {
-      var toSkip = startByte
-      while (toSkip > 0) {
-        val skipped = stream.skip(toSkip)
-        if (skipped <= 0) toSkip = 0 else toSkip -= skipped
-      }
-      val src = scala.io.Source.fromInputStream(stream)
       var at = startByte
       val entries = completeLines(f, src.getLines())
         .map { l =>
@@ -164,7 +175,7 @@ object CdcReplaySource {
         case _ => ()
       }
       entries
-    } finally stream.close()
+    } finally src.close()
   }
 
   private[streaming] def parseLsn(line: String): Long = {
@@ -1041,15 +1052,7 @@ class CdcReplayReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CdcReplayPartition]
     new PartitionReader[InternalRow] {
-      private val stream = new java.io.FileInputStream(p.file)
-      private val source = {
-        var toSkip = p.startByte
-        while (toSkip > 0) { // skip() may stop short; loop to the mark
-          val skipped = stream.skip(toSkip)
-          if (skipped <= 0) toSkip = 0 else toSkip -= skipped
-        }
-        scala.io.Source.fromInputStream(stream)
-      }
+      private val source = CdcReplaySource.openLines(p.file, p.startByte)
       // log files are LSN-sorted per shard — a FORMAT INVARIANT that
       // both the streaming offsets and the pushed-down batch bounds
       // rely on. Monotonicity is checked on every line this reader

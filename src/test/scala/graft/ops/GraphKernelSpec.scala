@@ -135,12 +135,12 @@ class GraphKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("dispatch: a tiny localEdgeMax routes to the distributed path") {
     val ed = bothDirs(fixtureEdges)
-    spark.conf.set("spark.graft.graph.localEdgeMax", "1")
+    spark.conf.set(graft.GraftConf.GraphLocalEdgeMax.key, "1")
     try {
       val dist = sortedRows(Signals.minLabelProp(ed, 2))
       val ref = sortedRows(Signals.minLabelPropDistributed(ed, 2))
       assert(dist == ref)
-    } finally spark.conf.unset("spark.graft.graph.localEdgeMax")
+    } finally spark.conf.unset(graft.GraftConf.GraphLocalEdgeMax.key)
     Tables.dropTransientCaches()
   }
 }

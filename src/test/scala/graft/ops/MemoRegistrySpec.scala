@@ -130,7 +130,7 @@ class MemoRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
       val ghost = consumers.filterNot(queries.contains)
       assert(ghost.isEmpty,
         s"lazy memo $m declares consumers that are not registered " +
-          s"queries: $ghost — re-run tools.MemoCensus and update")
+          s"queries: $ghost — re-run `graft.Probe memo` and update")
     }
 
     // (3) ... every registered DfMemo entry for THIS session is
@@ -176,7 +176,7 @@ class MemoRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
         val touched = Tables.memoConsumers().getOrElse(memo, Seq.empty)
         assert(touched.contains(qn),
           s"declared consumer $qn of lazy memo $memo never touched " +
-            "it — the census is stale; re-run tools.MemoCensus and " +
+            "it — the census is stale; re-run `graft.Probe memo` and " +
             "prune Prewarm.lazyMemos")
       }
     }
