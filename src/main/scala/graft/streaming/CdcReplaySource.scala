@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, ReportsSourceMetrics, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -130,12 +130,24 @@ object CdcReplaySource {
     * where an unbounded look-ahead would read on into its rest, see
     * a torn line followed by more, and fail as corrupt. */
   private[streaming] def openLines(
-      f: String, startByte: Long): scala.io.BufferedSource = {
+      f: String, startByte: Long): (scala.io.BufferedSource, Long) = {
     val in = new java.io.FileInputStream(f)
     val end = in.getChannel.size()
     in.getChannel.position(startByte)
-    scala.io.Source.fromInputStream(com.google.common.io.ByteStreams
-      .limit(in, math.max(0L, end - startByte)))
+    (scala.io.Source.fromInputStream(com.google.common.io.ByteStreams
+      .limit(in, math.max(0L, end - startByte))), end)
+  }
+
+  /** Up to `n` bytes of `f` from byte `off` (fewer at end of file), in
+    * one positioned read: the driver index's bounded look at a cached
+    * line, where reading the whole line would cost O(line). */
+  private[streaming] def readPrefix(f: String, off: Long, n: Int): Array[Byte] = {
+    val ch = new java.io.FileInputStream(f).getChannel
+    try {
+      val buf = java.nio.ByteBuffer.allocate(n)
+      while (buf.hasRemaining && ch.read(buf, off + buf.position()) > 0) ()
+      java.util.Arrays.copyOf(buf.array(), buf.position())
+    } finally ch.close()
   }
 
   /** Driver-side index scan: all (file, lsn) pairs, lsn-sorted.
@@ -150,16 +162,21 @@ object CdcReplaySource {
     * every trigger (the log format is ASCII by construction — hex,
     * digits, fixed punctuation — so bytes = chars + the newline). */
   private[streaming] def lsnIndexOfFile(f: String): Seq[(Long, Long)] =
-    lsnIndexOfFileFrom(f, 0L)
+    lsnIndexOfFileFrom(f, 0L)._1
 
   /** [[lsnIndexOfFile]] resumed at `startByte` (must be a line
     * boundary — the `parsedBytes` high-water mark of a previous
     * parse): the incremental half of the driver index, so a GROWING
-    * shard costs O(appended bytes) per trigger, not O(file). Entries'
-    * offsets are absolute. */
-  private[streaming] def lsnIndexOfFileFrom(
-      f: String, startByte: Long): Seq[(Long, Long)] = {
-    val src = openLines(f, startByte)
+    * shard costs O(appended bytes) per trigger, not O(file). One
+    * buffered pass reads each byte once and returns the entries
+    * (absolute offsets), the high-water mark just past the last
+    * complete line, and the file length the pass read up to. The
+    * mark is clamped to that length: a final line without a trailing
+    * newline counts one byte long (the `at += len + 1` convention),
+    * and a mark past EOF would skip a later append into mid-line. */
+  private[streaming] def lsnIndexOfFileFrom(f: String,
+      startByte: Long): (Seq[(Long, Long)], Long, Long) = {
+    val (src, end) = openLines(f, startByte)
     try {
       var at = startByte
       val entries = completeLines(f, src.getLines())
@@ -174,7 +191,7 @@ object CdcReplaySource {
             "cdc-replay shards must be written in LSN order")
         case _ => ()
       }
-      entries
+      (entries, math.min(at, end), end)
     } finally src.close()
   }
 
@@ -825,7 +842,8 @@ object ShardOffsets {
 
 class CdcReplayStream(path: String, initial: ShardOffsets,
     maxPerTrigger: Long)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+    extends MicroBatchStream with SupportsTriggerAvailableNow
+    with ReportsSourceMetrics {
 
   private def startingLsn: Long = initial.floor
 
@@ -852,13 +870,20 @@ class CdcReplayStream(path: String, initial: ShardOffsets,
     * appended shard must cost O(delta), not O(file), per poll). */
   @volatile private[streaming] var indexBytesParsed: Long = 0L
 
+  /** Total bytes the driver index has read from disk, the intact
+    * check's prefix included — the "each byte once" guard: a poll
+    * reads what it parses plus a torn tail and a bounded prefix. */
+  @volatile private[streaming] var indexBytesRead: Long = 0L
+
   /** shard name → (path, (lsn, byteStart) entries), consistent
     * within one poll. Per-file cache keyed on (length, mtime); an
     * APPEND (length grew, prefix untouched by the append-only
     * writer) re-parses only the tail past the high-water mark — the
     * live-tail path where a 100 GB shard must not be re-read per
     * trigger. Anything else that changed (shrunk, or same-length
-    * different mtime: a rewrite) re-parses from byte 0. */
+    * different mtime: a rewrite) re-parses from byte 0. Either way
+    * the index is one buffered pass that reads each byte once and
+    * yields the new high-water mark with the entries. */
   private def refreshIndex(): Map[String, (String, Seq[(Long, Long)])] =
     synchronized {
       CdcReplaySource.listLogFiles(path).map { f =>
@@ -866,85 +891,44 @@ class CdcReplayStream(path: String, initial: ShardOffsets,
         val key = (file.length(), file.lastModified())
         val lsns = fileCache.get(f) match {
           case Some((cached, _, ls)) if cached == key => ls
-          case Some((cached, parsed, ls))
-              if cached._1 < file.length() && ls.nonEmpty &&
-                lastEntryIntact(f, ls.last) =>
-            val tail = CdcReplaySource.lsnIndexOfFileFrom(f, parsed)
-            // the sort invariant must hold across the append boundary
-            tail.headOption.foreach { case (lsn, _) =>
-              if (lsn < ls.last._1) throw new IllegalStateException(
-                s"$f is not LSN-sorted ($lsn appended after " +
-                  s"${ls.last._1}); cdc-replay shards must be " +
-                  "written in LSN order")
+          case entry =>
+            val (from, prior) = entry match {
+              case Some((cached, parsed, ls))
+                  if cached._1 < file.length() && ls.nonEmpty &&
+                    lastEntryIntact(f, ls.last) => (parsed, ls)
+              case _ => (0L, Nil)
             }
-            val all = ls ++ tail
-            // clamp: a final line without a trailing newline measures
-            // one byte long (the at += len + 1 convention); the mark
-            // must never pass EOF or a later append would be skipped
-            // into mid-line
-            val parsedTo = tail.lastOption
-              .map { case (_, off) =>
-                math.min(off + lineLen(f, off), file.length()) }
-              .getOrElse(parsed)
-            indexBytesParsed += parsedTo - parsed
+            val (tail, parsedTo, end) =
+              CdcReplaySource.lsnIndexOfFileFrom(f, from)
+            // the sort invariant must hold across the append boundary
+            for ((last, _) <- prior.lastOption; (lsn, _) <- tail.headOption)
+              if (lsn < last) throw new IllegalStateException(
+                s"$f is not LSN-sorted ($lsn appended after $last); " +
+                  "cdc-replay shards must be written in LSN order")
+            val all = prior ++ tail
+            indexBytesRead += end - from
+            indexBytesParsed += parsedTo - from
             fileCache(f) = (key, parsedTo, all)
             all
-          case _ =>
-            val ls = CdcReplaySource.lsnIndexOfFile(f)
-            val parsedTo = ls.lastOption
-              .map { case (_, off) =>
-                math.min(off + lineLen(f, off), file.length()) }
-              .getOrElse(0L)
-            indexBytesParsed += parsedTo
-            fileCache(f) = (key, parsedTo, ls)
-            ls
         }
         file.getName -> (f, lsns)
       }.toMap
     }
 
-  /** Length (incl. newline) of the complete line starting at `off` —
-    * one small seek+scan to close the high-water mark over the final
-    * entry (the earlier entries' extents are implied by their
-    * successors). */
   /** Append-path guard: length growth alone does not prove the
     * prefix is untouched — a line-boundary-aligned truncate-and-
     * rewrite that lands LONGER would otherwise keep stale
-    * (lsn, offset) entries pointing into rewritten bytes. Re-parse
-    * the last cached entry's line and compare its LSN; a mismatch
-    * rejects the incremental path and forces a full re-parse. One
-    * seek + one line read — O(1) per poll. */
+    * (lsn, offset) entries pointing into rewritten bytes. Re-read the
+    * last cached entry's `{"lsn":<digits>` prefix and compare its
+    * LSN; a mismatch rejects the incremental path and forces a full
+    * re-parse. One positioned read of at most 27 bytes per poll. */
   private def lastEntryIntact(f: String, last: (Long, Long)): Boolean =
     try {
-      val in = new java.io.FileInputStream(f)
-      try {
-        var toSkip = last._2
-        while (toSkip > 0) {
-          val skipped = in.skip(toSkip)
-          if (skipped <= 0) toSkip = 0 else toSkip -= skipped
-        }
-        val sb = new java.lang.StringBuilder
-        var c = in.read()
-        while (c >= 0 && c != '\n') { sb.append(c.toChar); c = in.read() }
-        val line = sb.toString
-        line.contains("\"lsn\":") && CdcReplaySource.parseLsn(line) == last._1
-      } finally in.close()
+      val prefix = CdcReplaySource.readPrefix(f, last._2, 7 + 20)
+      indexBytesRead += prefix.length
+      val line = new String(prefix, java.nio.charset.StandardCharsets.US_ASCII)
+      line.startsWith("{\"lsn\":") && CdcReplaySource.parseLsn(line) == last._1
     } catch { case _: Exception => false }
-
-  private def lineLen(f: String, off: Long): Long = {
-    val in = new java.io.FileInputStream(f)
-    try {
-      var toSkip = off
-      while (toSkip > 0) {
-        val skipped = in.skip(toSkip)
-        if (skipped <= 0) toSkip = 0 else toSkip -= skipped
-      }
-      var n = 1L
-      var c = in.read()
-      while (c >= 0 && c != '\n') { n += 1; c = in.read() }
-      n
-    } finally in.close()
-  }
 
   // Trigger.AvailableNow bound: per-shard tails fixed at query start
   private var availableNowEnd: Option[Map[String, Long]] = None
@@ -1040,6 +1024,23 @@ class CdcReplayStream(path: String, initial: ShardOffsets,
     CdcReplaySource.writeAckedLsn(path, acked)
   }
 
+  /** Per-trigger source metrics (`progress.sources(i).metrics`): the
+    * driver index's byte counters, and `txBehindLatest`, the indexed
+    * transactions past the consumed offset (0 once caught up). */
+  override def metrics(
+      latestConsumedOffset: java.util.Optional[Offset]): util.Map[String, String] =
+    synchronized {
+      val consumed = if (latestConsumedOffset.isPresent)
+        ShardOffsets.from(latestConsumedOffset.get) else initial
+      val behind = fileCache.iterator.map { case (f, (_, _, ls)) =>
+        val done = consumed.of(new java.io.File(f).getName)
+        ls.count(_._1 > done).toLong
+      }.sum
+      Map("indexBytesParsed" -> indexBytesParsed.toString,
+        "indexBytesRead" -> indexBytesRead.toString,
+        "txBehindLatest" -> behind.toString).asJava
+    }
+
   override def stop(): Unit = ()
 }
 
@@ -1052,7 +1053,7 @@ class CdcReplayReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CdcReplayPartition]
     new PartitionReader[InternalRow] {
-      private val source = CdcReplaySource.openLines(p.file, p.startByte)
+      private val source = CdcReplaySource.openLines(p.file, p.startByte)._1
       // log files are LSN-sorted per shard — a FORMAT INVARIANT that
       // both the streaming offsets and the pushed-down batch bounds
       // rely on. Monotonicity is checked on every line this reader

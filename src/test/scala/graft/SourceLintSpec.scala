@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-level rules for `src/main/scala`: one way to build a
   * session, no environment knobs beyond the four keys the mains
   * document (cores, dataset, bench output dir, bench passes), no
-  * one-off mains in the library packages — and the one session's
+  * one-off mains in the library packages, no unbuffered frame-log
+  * reads in the streaming package — and the one session's
   * settings pinned, so a drift from the benchmark's copy fails here
   * instead of silently timing a different plan. */
 class SourceLintSpec extends AnyFunSuite {
@@ -47,6 +48,24 @@ class SourceLintSpec extends AnyFunSuite {
           .findFirstIn(text).isDefined => f
     }
     assert(bad.isEmpty, bad.mkString(", "))
+  }
+
+  test("streaming opens a raw FileInputStream only in the two bounded readers") {
+    // every frame-log read goes through openLines (buffered, bounded at
+    // the open-time length) or readPrefix (one positioned read); an
+    // unbuffered stream read byte by byte is one syscall per byte
+    val sites = sources.filter(_._1.startsWith("graft/streaming/"))
+      .flatMap { case (f, text) =>
+        """new\s+(java\.io\.)?FileInputStream\(""".r.findAllMatchIn(text)
+          .map { m =>
+            val encl = """def\s+(\w+)""".r
+              .findAllMatchIn(text.substring(0, m.start)).map(_.group(1))
+              .toSeq.lastOption.getOrElse("<none>")
+            s"$f:$encl"
+          }
+      }
+    assert(sites.sorted == Seq("graft/streaming/CdcReplaySource.scala:openLines",
+      "graft/streaming/CdcReplaySource.scala:readPrefix"), sites.mkString("\n"))
   }
 
   private val tuned = Map(

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A frame log is read while the socket client is still appending to
@@ -45,5 +46,43 @@ class LiveTailReadSpec extends AnyFunSuite {
       "the next read sees the finished lines whole")
     assert(CdcReplaySource.lsnIndexOfFile(f.getPath).map(_._1) ==
       Seq(10L, 20L, 30L, 40L))
+  }
+
+  test("the driver index polls while the writer completes torn lines") {
+    val f = shard()
+    val stream = new CdcReplayStream(f.getParent,
+      ShardOffsets(0L, Map.empty), Long.MaxValue)
+    def poll(): Long = ShardOffsets.from(stream.latestOffset(
+      stream.initialOffset(), ReadLimit.allAvailable())).of(f.getName)
+    append(f, """{"lsn":30,"frames":["2a""")
+    assert(poll() == 20L, "a torn tail is not indexed")
+    // each line lands in two writes while the index polls: a poll that
+    // opens on a torn line must end there, never fail as corrupt
+    val lsns = 30L to 2000L by 10L
+    val body = "2b" * 2000
+    val writer = new Thread(() => {
+      append(f, body + "\"]}\n")
+      lsns.tail.foreach { l =>
+        append(f, s"""{"lsn":$l,"frames":["$body""")
+        append(f, "\"]}\n")
+      }
+    })
+    writer.start()
+    var seen = 20L
+    while (writer.isAlive) {
+      val at = poll()
+      assert(at >= seen, s"the indexed tail went back from $seen to $at")
+      seen = at
+    }
+    writer.join()
+    assert(poll() == lsns.last)
+    // a poll that stats the file mid-write can see the new mtime at the
+    // old length, which the index treats as a rewrite (full re-parse);
+    // so only the quiet append after the race is held to one parse
+    val (parsed, len) = (stream.indexBytesParsed, f.length())
+    append(f, """{"lsn":2010,"frames":["2c"]}""" + "\n")
+    assert(poll() == 2010L)
+    assert(stream.indexBytesParsed - parsed == f.length() - len,
+      "the appended bytes are parsed exactly once")
   }
 }

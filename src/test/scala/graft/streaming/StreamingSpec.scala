@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -570,5 +572,30 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .load().filter("lsn > 100 AND lsn <= 300")
     val lsns = df.select("lsn").collect().map(_.getLong(0)).sorted
     assert(lsns.toSeq == (11 to 30).map(_ * 10L))
+  }
+
+  test("progress carries the source's index and lag metrics") {
+    val dir = java.nio.file.Files.createTempDirectory("replay-metrics").toString
+    CdcReplaySource.writeLog(dir,
+      (1 to 6).map(i => (i * 10L, Seq(Array[Byte](i.toByte)))))
+    val q = spark.readStream.format(CdcReplaySource.FORMAT)
+      .option("path", dir)
+      .option("maxFramesPerTrigger", "2")
+      .load()
+      .writeStream.format("memory").queryName("replay_metrics")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("ckpt-metrics").toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(120000)
+    val metrics = q.recentProgress.map(_.sources(0).metrics)
+    assert(metrics.length == 3)
+    metrics.foreach { m =>
+      assert(Set("indexBytesParsed", "indexBytesRead", "txBehindLatest")
+        .subsetOf(m.keySet().asScala), m)
+    }
+    assert(metrics.map(_.get("txBehindLatest")).toSeq == Seq("4", "2", "0"))
+    val logBytes = new java.io.File(dir, "part-0.jsonl").length()
+    assert(metrics.last.get("indexBytesParsed").toLong == logBytes)
   }
 }
