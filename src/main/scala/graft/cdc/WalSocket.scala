@@ -184,7 +184,20 @@ final class LoopbackWalServer(
     tls: Boolean = false,
     /** With tls: demand a CLIENT certificate chained to the loopback
       * store (mutual TLS) — a certless client fails the session. */
-    requireClientCert: Boolean = false) {
+    requireClientCert: Boolean = false,
+    /** Socket write buffer: a stream shorter than it leaves in one
+      * write at the final keepalive — a backlog queued in full before
+      * the client reads any of it. */
+    writeBufferBytes: Int = 1 << 16,
+    /** Follow each transaction with a keepalive that asks no reply and
+      * wait (up to 5 s) for the client to confirm it before sending
+      * the next — a source whose next commit waits on the previous
+      * one's ack. */
+    pacedAcks: Boolean = false,
+    /** Called on the ack-reader thread as each standby status arrives,
+      * before it is recorded — lets specs inspect the client's
+      * durable state at the moment an ack lands. */
+    onStatus: Transport.StandbyStatus => Unit = _ => ()) {
 
   private val server = new ServerSocket(0)
   def port: Int = server.getLocalPort
@@ -232,7 +245,8 @@ final class LoopbackWalServer(
 
   private def serve(sock: Socket): Unit = {
     var in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    var out = new java.io.BufferedOutputStream(sock.getOutputStream, 1 << 16)
+    var out = new java.io.BufferedOutputStream(sock.getOutputStream,
+      writeBufferBytes)
     var sslSock: Option[javax.net.ssl.SSLSocket] = None
     try {
       // ---- libpq startup preceding any command ---------------------
@@ -250,7 +264,8 @@ final class LoopbackWalServer(
             else Tls.wrapServer(sock)
           in = new DataInputStream(
             new BufferedInputStream(ssl.getInputStream))
-          out = new java.io.BufferedOutputStream(ssl.getOutputStream, 1 << 16)
+          out = new java.io.BufferedOutputStream(ssl.getOutputStream,
+            writeBufferBytes)
           sslSock = Some(ssl)
           tlsCount += 1
         } else {
@@ -389,6 +404,7 @@ final class LoopbackWalServer(
             m.get match {
               case WalWire.Msg('d', body) if body.nonEmpty && body(0) == 'r' =>
                 val st = Transport.decodeStandbyStatus(body)
+                onStatus(st)
                 synchronized(statuses += st)
                 if (Lsn.compare(st.flushed, confirmed) > 0) confirmed = st.flushed
               case _ => () // reference warns and drops unknown tags (:147-149)
@@ -424,6 +440,15 @@ final class LoopbackWalServer(
           WalWire.write(out, 'd', Transport.encodeXLogData(lsn, lsn, nowMicros, f))
         }
         sent += 1
+        if (pacedAcks) {
+          WalWire.write(out, 'd',
+            Transport.encodeKeepalive(lsn, nowMicros, shouldRespond = false))
+          out.flush()
+          val deadline = System.currentTimeMillis() + 5000
+          while (Lsn.compare(confirmed, lsn) <= 0 &&
+              System.currentTimeMillis() < deadline)
+            Thread.sleep(1)
+        }
         if (keepaliveAfter(sent)) {
           WalWire.write(out, 'd',
             Transport.encodeKeepalive(lsn, nowMicros, shouldRespond = true))
@@ -474,11 +499,21 @@ final class LoopbackWalServer(
   * ([[Transport.demux]], `:146-174`), group frames into transactions
   * by walStart, append each to the cdc-replay frame log *durably
   * before acking* (the at-least-once contract: an ack claims
-  * delivery, so the log write precedes it), auto-ack per transaction
-  * (`acknowledge.auto`, `:186-191`), and reply immediately to
-  * shouldRespond keepalives with the last seen LSN (`:165-173` — the
-  * reference overwrites `_lastLsn` with keepalive LSNs too, so the
-  * reply position advances even between transactions).
+  * delivery, so the log write precedes it), auto-ack delivered
+  * transactions (`acknowledge.auto`, `:186-191`), and reply
+  * immediately to shouldRespond keepalives with the last seen LSN
+  * (`:165-173` — the reference overwrites `_lastLsn` with keepalive
+  * LSNs too, so the reply position advances even between
+  * transactions).
+  *
+  * Acks are group commits, as PostgreSQL's own walreceiver does them:
+  * completed transactions collect while more input is already
+  * buffered, and one log write, one sidecar publication and one
+  * standby status cover the group once the receive buffer is drained
+  * (or the group reaches `ackEveryTxs` transactions or
+  * [[WalSocketClient.MaxGroupBytes]]). A transaction whose successor
+  * has not arrived yet is acked at once; in a backlog catch-up, one
+  * ack covers up to `ackEveryTxs` transactions.
   *
   * The delivered log feeds [[graft.streaming.ReplicationSession]] /
   * the cdc-replay source: socket ingest and Spark consumption are
@@ -488,12 +523,14 @@ final class WalSocketClient(
     host: String, port: Int,
     format: CdcFormat, slotName: String,
     logDir: String, shard: Int,
-    /** Ack (and advance the durable sidecar) every N delivered
-      * transactions rather than each one — the standard at-least-once
-      * batching: the log is flushed BEFORE the covering ack, so a
-      * crash replays at most N transactions. Keepalive replies and
-      * stream end always flush+ack pending work immediately. */
-    ackEveryTxs: Int = 1,
+    /** The most delivered transactions one ack may cover — the
+      * crash-replay window: the log is written BEFORE the covering
+      * ack, so a crash replays at most this many. Group commit acks
+      * sooner whenever the receive buffer drains, so a live stream is
+      * acked per transaction and only a backlog fills whole groups.
+      * 1 acks every transaction on its own. Keepalive replies, stream
+      * end and errors always flush+ack pending work immediately. */
+    ackEveryTxs: Int = 256,
     /** Re-ack the confirmed position when no standby status has been
       * sent for this long — the reference's `checkStandbyStatus` 1 s
       * timer (`logical-replication-service.ts:231-248`,
@@ -538,10 +575,14 @@ final class WalSocketClient(
     s"unsupported sslmode '${sslmode.get}' " +
       "(expected disable | require | verify-ca | verify-full)")
 
+  /** `groupCommits`: flushAndAck calls — each one log write, one
+    * sidecar publication and one standby status. `acksSent` also
+    * counts the re-ack timer's statuses. */
   final case class RunResult(
       txs: Seq[(Long, Seq[Array[Byte]])],
       heartbeats: Int,
-      acksSent: Int)
+      acksSent: Int,
+      groupCommits: Int)
 
   @volatile private var srvParams = Map.empty[String, String]
   @volatile private var backend = (0, 0)
@@ -571,14 +612,18 @@ final class WalSocketClient(
     sock.setSoTimeout(30000)
     var in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
     var out = new java.io.BufferedOutputStream(sock.getOutputStream, 1 << 16)
-    val logFile = new java.io.File(logDir, s"part-$shard.jsonl")
+    val shardName = s"part-$shard.jsonl"
+    val logFile = new java.io.File(logDir, shardName)
     logFile.getParentFile.mkdirs()
-    val logOut = new java.io.PrintWriter(new java.io.BufferedWriter(
-      new java.io.FileWriter(logFile, /* append = */ true), 1 << 16))
+    val logOut = new java.io.FileOutputStream(logFile, /* append = */ true)
+    // the pending group's complete lines, handed to the OS in one write
+    // at flushAndAck: a buffered writer would flush mid-line
+    var group = new java.io.ByteArrayOutputStream()
 
     val delivered = ArrayBuffer.empty[(Long, Seq[Array[Byte]])]
     var heartbeats = 0
     var acks = 0
+    var commits = 0
     var lastLsn = resume
     var curLsn = -1L
     var curFrames = ArrayBuffer.empty[Array[Byte]]
@@ -598,15 +643,16 @@ final class WalSocketClient(
     // liveness signal a walsender uses to not kill the slot.
     // The census rides inside it (q293's live twin): delivery→ack
     // latency per advancing LSN, published to the `_ack_lag@<slot>`
-    // sidecar on every flush+ack and at session end, so the SLO pane
-    // (`StreamOps.ackLagReport`) tracks a RUNNING session, not just
-    // finished ones.
+    // sidecar with every ack publication (as of the previous ack: the
+    // sidecars precede the status that closes this group) and at
+    // session end, so the SLO pane (`StreamOps.ackLagReport`) tracks a
+    // RUNNING session, not just finished ones.
     val lagCensus = new AckLagCensus()
     val scheduler = new AckScheduler(math.max(ackTimeoutSeconds, 1),
       send = lsn => sendStatus(lsn), census = lagCensus)
     def publishLag(): Unit =
       try graft.streaming.CdcReplaySource.writeAckLag(
-        logDir, slotName, s"part-$shard.jsonl", lagCensus.census())
+        logDir, slotName, shardName, lagCensus.census())
       catch { case scala.util.control.NonFatal(_) => () } // the sidecar
       // is best-effort telemetry: ANY failure in its lock/temp-file
       // path (not just IO) must never kill the live replication loop
@@ -623,36 +669,35 @@ final class WalSocketClient(
         t
       }
 
-    // durable-then-ack: flush the appended tx lines, advance the
-    // sidecar, THEN send the covering standby status
+    // durable-then-ack: write the group's lines, publish the sidecars
+    // (one locked publication), THEN send the covering standby status
     var sinceAck = 0
+    var groupLsn = -1L
     def flushAndAck(lsn: Long): Unit = {
-      logOut.flush()
-      // per-slot record first (the slot's confirmed_flush_lsn — what
-      // THIS stream resumes from), then the legacy global scalar for
-      // pre-upgrade readers. A slot's ack never advances another
-      // slot's resume position.
-      graft.streaming.CdcReplaySource.writeSlotAckedLsn(
-        logDir, slotName, lsn)
-      graft.streaming.CdcReplaySource.writeAckedLsn(logDir, lsn)
-      // per-SHARD record too: with two slots sharing a logDir the
-      // global scalar reaches the LEADING slot's LSN, and a
-      // no-checkpoint resume that falls back to it as an all-shard
-      // floor would skip the lagging shard's frames ≤ that ack. The
-      // _acked_offsets sidecar records only THIS shard's position
-      // (floor stays MinValue), so the fallback never floors a shard
-      // it didn't ack.
-      graft.streaming.CdcReplaySource.writeAckedOffsets(logDir,
-        graft.streaming.ShardOffsets(Long.MinValue,
-          Map(s"part-$shard.jsonl" -> lsn)))
+      // a failed log write must fail the run, never pass for a socket
+      // cut (whose handler acks pending work)
+      try group.writeTo(logOut)
+      catch { case e: IOException => throw new java.io.UncheckedIOException(e) }
+      // a huge transaction's buffer is not kept for the whole session
+      if (group.size() > WalSocketClient.MaxGroupBytes)
+        group = new java.io.ByteArrayOutputStream()
+      else group.reset()
+      graft.streaming.CdcReplaySource.publishAck(
+        logDir, slotName, shardName, lsn, lagCensus.census())
       scheduler.delivered(lsn)
       // position 0 is the scheduler's InvalidLsn sentinel — a
       // keepalive reply at the stream origin still goes on the wire
       if (lsn != Lsn.InvalidLsn) scheduler.ack() // send + reset timer
       else sendStatus(lsn)
-      publishLag()
       sinceAck = 0
+      commits += 1
     }
+    // group commit: ack once the receive buffer is drained — the next
+    // transaction is not here yet — or the group is full
+    def commitIfDue(): Unit =
+      if (sinceAck > 0 && (sinceAck >= ackEveryTxs ||
+          group.size() >= WalSocketClient.MaxGroupBytes || in.available() == 0))
+        flushAndAck(groupLsn)
     // ---- pgoutput session schema registry ---------------------------
     // A real walsender announces each table's Relation ('R') and any
     // custom Type ('Y') message ONCE per decoding session (and again
@@ -727,13 +772,13 @@ final class WalSocketClient(
     }
     def finishTx(): Unit = if (curLsn >= 0) {
       val frames = selfContained(curFrames.toSeq)
-      val hex = frames.map(f =>
-        "\"" + graft.streaming.CdcReplaySource.hex(f) + "\"")
-      logOut.println(s"""{"lsn":$curLsn,"frames":[${hex.mkString(",")}]}""")
+      group.write(graft.streaming.CdcReplaySource.formatLine(curLsn, frames)
+        .getBytes(StandardCharsets.US_ASCII))
+      group.write('\n')
       delivered += ((curLsn, frames))
       if (Lsn.compare(curLsn, lastLsn) > 0) lastLsn = curLsn
+      groupLsn = curLsn
       sinceAck += 1
-      if (sinceAck >= ackEveryTxs) flushAndAck(curLsn)
       curLsn = -1L
       curFrames = ArrayBuffer.empty
     }
@@ -902,7 +947,7 @@ final class WalSocketClient(
             case WalWire.Msg('d', body) =>
               Transport.demux(body) match {
                 case Transport.XLogData(walStart, _, _, payload) =>
-                  if (walStart != curLsn) finishTx()
+                  if (walStart != curLsn) { finishTx(); commitIfDue() }
                   curLsn = walStart
                   curFrames += payload
                   observeSchemaFrame(payload)
@@ -910,7 +955,7 @@ final class WalSocketClient(
                   finishTx() // a keepalive never splits a transaction
                   heartbeats += 1
                   if (Lsn.compare(serverLsn, lastLsn) > 0) lastLsn = serverLsn
-                  if (shouldRespond) flushAndAck(lastLsn)
+                  if (shouldRespond) flushAndAck(lastLsn) else commitIfDue()
                 case Transport.Unknown(_) => ()
               }
             case WalWire.Msg('c', _) =>
@@ -975,7 +1020,7 @@ final class WalSocketClient(
       // completed work is durable + acked first; then the error
       // surfaces to the caller (the reference's error-event contract)
       serverError.foreach(e => throw new IOException(e))
-      RunResult(delivered.toSeq, heartbeats, acks)
+      RunResult(delivered.toSeq, heartbeats, acks, commits)
     } finally {
       closed = true
       ackTimer.foreach(_.interrupt())
@@ -984,4 +1029,12 @@ final class WalSocketClient(
       sock.close()
     }
   }
+}
+
+object WalSocketClient {
+  /** Bytes of pending log lines that close a group whatever input is
+    * buffered: a huge transaction is written and acked as soon as it
+    * completes, and the group buffer holds at most this plus one
+    * line. */
+  val MaxGroupBytes: Int = 1 << 20
 }

@@ -76,9 +76,10 @@ object CdcReplaySource {
 
   /** THE frame-log line serialization — single-sourced because the
     * scrub's idempotence/crash contract depends on rewritten lines
-    * being byte-identical to freshly written ones ([[scrubFrameLog]]
-    * and [[writeLogShard]] must never drift apart). */
-  private[streaming] def formatLine(lsn: Long,
+    * being byte-identical to freshly written ones ([[scrubFrameLog]],
+    * [[writeLogShard]] and the socket client's append must never
+    * drift apart). */
+  private[graft] def formatLine(lsn: Long,
       frames: Seq[Array[Byte]]): String = {
     val hexed = frames.map(f => "\"" + hex(f) + "\"")
     s"""{"lsn":$lsn,"frames":[${hexed.mkString(",")}]}"""
@@ -123,19 +124,33 @@ object CdcReplaySource {
 
   /** The lines of `f` from `startByte` (a line boundary) up to the
     * file's length when it is opened. A live writer appends while the
-    * replay reads, and flushes only at ack, so the log can end
-    * mid-line. Bounding the read at the open-time length keeps that
-    * half-written line the LAST one read — dropped by
-    * [[completeLines]] as a torn tail and read whole next poll —
-    * where an unbounded look-ahead would read on into its rest, see
-    * a torn line followed by more, and fail as corrupt. */
-  private[streaming] def openLines(
-      f: String, startByte: Long): (scala.io.BufferedSource, Long) = {
+    * replay reads, so the log can end mid-line. Bounding the read at
+    * the open-time length keeps that half-written line the LAST one
+    * read — dropped by [[completeLines]] as a torn tail and read whole
+    * next poll — where an unbounded look-ahead would read on into its
+    * rest, see a torn line followed by more, and fail as corrupt.
+    *
+    * A start that follows a line's closing `}` and sits on a newline
+    * is a high-water mark clamped before the newline of a final line
+    * indexed before that newline reached the file: the read resumes
+    * past the newline, which ends the line already indexed (read as a
+    * line of its own it would be an empty line before more: corrupt).
+    * Returns the lines, the byte they start at and the length. */
+  private[streaming] def openLines(f: String,
+      startByte: Long): (scala.io.BufferedSource, Long, Long) = {
     val in = new java.io.FileInputStream(f)
-    val end = in.getChannel.size()
-    in.getChannel.position(startByte)
+    val ch = in.getChannel
+    val end = ch.size()
+    val from = if (startByte <= 0) startByte else {
+      val two = java.nio.ByteBuffer.allocate(2)
+      while (two.hasRemaining && ch.read(two, startByte - 1 + two.position()) > 0) ()
+      if (two.position() == 2 && two.get(0) == '}' && two.get(1) == '\n')
+        startByte + 1
+      else startByte
+    }
+    ch.position(from)
     (scala.io.Source.fromInputStream(com.google.common.io.ByteStreams
-      .limit(in, math.max(0L, end - startByte))), end)
+      .limit(in, math.max(0L, end - from))), from, end)
   }
 
   /** Up to `n` bytes of `f` from byte `off` (fewer at end of file), in
@@ -173,12 +188,13 @@ object CdcReplaySource {
     * complete line, and the file length the pass read up to. The
     * mark is clamped to that length: a final line without a trailing
     * newline counts one byte long (the `at += len + 1` convention),
-    * and a mark past EOF would skip a later append into mid-line. */
+    * and a mark past EOF would skip a later append into mid-line.
+    * When that newline arrives, [[openLines]] resumes past it. */
   private[streaming] def lsnIndexOfFileFrom(f: String,
       startByte: Long): (Seq[(Long, Long)], Long, Long) = {
-    val (src, end) = openLines(f, startByte)
+    val (src, from, end) = openLines(f, startByte)
     try {
-      var at = startByte
+      var at = from
       val entries = completeLines(f, src.getLines())
         .map { l =>
           val e = (parseLsn(l), at)
@@ -258,29 +274,38 @@ object CdcReplaySource {
     } finally ch.close()
   }
 
+  /** A sidecar's text, None when it does not exist yet (every write
+    * is an atomic replace, so an existing sidecar is always whole). */
+  private def readSidecar(f: java.io.File): Option[String] =
+    if (!f.exists) None
+    else Some(new String(java.nio.file.Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8))
+
+  /** Whole-file atomic replace: a temp file in the log dir, then an
+    * ATOMIC_MOVE over `target`. Callers hold [[withDirLock]]. */
+  private def replaceSidecar(path: String, target: java.io.File,
+      tmpPrefix: String, text: String): Unit = {
+    val tmp = java.nio.file.Files.createTempFile(
+      java.nio.file.Paths.get(path), tmpPrefix, ".tmp")
+    java.nio.file.Files.write(tmp,
+      text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.move(tmp, target.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
   /** Atomic, MONOTONIC sidecar advance — every ack path (stream
     * commit, manual acknowledge, re-ack timer, socket client) funnels
     * here so a stale writer can never regress a newer position. */
-  def writeAckedLsn(path: String, lsn: Long): Unit = withDirLock(path) {
-    if (lastAckedLsn(path).forall(_ < lsn)) {
-      val dir = java.nio.file.Paths.get(path)
-      val tmp = java.nio.file.Files.createTempFile(dir, "_acked_lsn", ".tmp")
-      java.nio.file.Files.write(tmp,
-        lsn.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, ackSidecar(path).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-  }
+  def writeAckedLsn(path: String, lsn: Long): Unit =
+    withDirLock(path)(advanceAckedLsn(path, lsn))
 
-  def lastAckedLsn(path: String): Option[Long] = {
-    val f = ackSidecar(path)
-    if (!f.exists) None
-    else {
-      val src = scala.io.Source.fromFile(f)
-      try Some(src.mkString.trim.toLong) finally src.close()
-    }
-  }
+  private def advanceAckedLsn(path: String, lsn: Long): Unit =
+    if (lastAckedLsn(path).forall(_ < lsn))
+      replaceSidecar(path, ackSidecar(path), "_acked_lsn", lsn.toString)
+
+  def lastAckedLsn(path: String): Option[Long] =
+    readSidecar(ackSidecar(path)).map(_.trim.toLong)
 
   /** Per-SLOT confirmed position — the socket CLIENT's resume record,
     * mirroring PostgreSQL's own model where every replication slot
@@ -296,17 +321,13 @@ object CdcReplaySource {
   /** Atomic, monotonic per-slot advance (same contract as
     * [[writeAckedLsn]], scoped to one slot). */
   def writeSlotAckedLsn(path: String, slot: String, lsn: Long): Unit =
-    withDirLock(path) {
-      if (readSlotAcked(path, slot).forall(_ < lsn)) {
-        val dir = java.nio.file.Paths.get(path)
-        val tmp = java.nio.file.Files.createTempFile(dir, "_acked_slot", ".tmp")
-        java.nio.file.Files.write(tmp,
-          lsn.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        java.nio.file.Files.move(tmp, slotAckSidecar(path, slot).toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-    }
+    withDirLock(path)(advanceSlotAckedLsn(path, slot, lsn))
+
+  private def advanceSlotAckedLsn(path: String, slot: String,
+      lsn: Long): Unit =
+    if (readSlotAcked(path, slot).forall(_ < lsn))
+      replaceSidecar(path, slotAckSidecar(path, slot), "_acked_slot",
+        lsn.toString)
 
   /** Per-slot ack-lag metrics sidecar (`_ack_lag@<slot>`) — the live
     * loop's q293-shape SLO census, written by the socket client from
@@ -321,32 +342,44 @@ object CdcReplaySource {
 
   def writeAckLag(path: String, slot: String, shard: String,
       st: graft.cdc.AckLagCensus.Stats): Unit = {
-    val dir = java.nio.file.Paths.get(path)
     // before the lock: withDirLock opens <path>/_acked.lock with
     // CREATE, which throws if the DIRECTORY itself is missing
-    java.nio.file.Files.createDirectories(dir)
-    withDirLock(path) {
-    val tmp = java.nio.file.Files.createTempFile(dir, "_ack_lag", ".tmp")
-    // shard names are part-N.jsonl (ASCII, no quotes) — safe inline
-    val json = s"""{"shard":"$shard","n_frames":${st.nFrames},""" +
-      s""""p50_lag_sec":${st.p50LagSec},"p99_lag_sec":${st.p99LagSec},""" +
-      s""""max_lag_sec":${st.maxLagSec},"slo_milli":${st.sloMilli}}"""
-    java.nio.file.Files.write(tmp,
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, ackLagSidecar(path, slot).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
+    withDirLock(path)(replaceAckLag(path, slot, shard, st))
   }
 
-  private def readSlotAcked(path: String, slot: String): Option[Long] = {
-    val f = slotAckSidecar(path, slot)
-    if (!f.exists) None
-    else {
-      val src = scala.io.Source.fromFile(f)
-      try Some(src.mkString.trim.toLong) finally src.close()
-    }
+  private def replaceAckLag(path: String, slot: String, shard: String,
+      st: graft.cdc.AckLagCensus.Stats): Unit =
+    // shard names are part-N.jsonl (ASCII, no quotes) — safe inline
+    replaceSidecar(path, ackLagSidecar(path, slot), "_ack_lag",
+      s"""{"shard":"$shard","n_frames":${st.nFrames},""" +
+        s""""p50_lag_sec":${st.p50LagSec},"p99_lag_sec":${st.p99LagSec},""" +
+        s""""max_lag_sec":${st.maxLagSec},"slo_milli":${st.sloMilli}}""")
+
+  /** The socket client's whole ack publication under ONE directory
+    * lock: the slot record first (the slot's confirmed_flush_lsn —
+    * what this stream resumes from; one slot's ack never advances
+    * another's), then this shard's `_acked_offsets` entry (floor left
+    * at MinValue, so a no-checkpoint resume that falls back to it
+    * never floors a shard this slot did not ack), then the legacy
+    * global scalar for pre-upgrade readers, then the `_ack_lag`
+    * census. The offsets go before the scalar for the reason
+    * [[CdcReplayStream.commit]] gives: on a fresh dir their merge
+    * seeds from the scalar, which would lift the floor to this ack.
+    * Each record keeps its own monotone guard and format. The census
+    * is best-effort telemetry: no failure in it may fail the ack,
+    * where a failed position write does. */
+  def publishAck(path: String, slot: String, shard: String, lsn: Long,
+      census: graft.cdc.AckLagCensus.Stats): Unit = withDirLock(path) {
+    advanceSlotAckedLsn(path, slot, lsn)
+    mergeAckedOffsets(path, ShardOffsets(Long.MinValue, Map(shard -> lsn)))
+    advanceAckedLsn(path, lsn)
+    try replaceAckLag(path, slot, shard, census)
+    catch { case scala.util.control.NonFatal(_) => () }
   }
+
+  private def readSlotAcked(path: String, slot: String): Option[Long] =
+    readSidecar(slotAckSidecar(path, slot)).map(_.trim.toLong)
 
   /** The slot's confirmed position. Migration fallback: a log dir
     * with NO per-slot sidecars at all is pre-upgrade state — the
@@ -608,8 +641,7 @@ object CdcReplaySource {
         .getOrElse(Array.empty)
       files.toSeq.collect {
         case f if f.getName.startsWith("_acked_lsn@") =>
-          val src = scala.io.Source.fromFile(f)
-          try src.mkString.trim.toLong finally src.close()
+          readSidecar(f).get.trim.toLong
       } ++ lastAckedLsn(path).toSeq
     }
     listLogFiles(path).map { p =>
@@ -630,36 +662,27 @@ object CdcReplaySource {
     * same lock as the scalar sidecar; a concurrent writer can only
     * push entries forward. */
   def writeAckedOffsets(path: String, so: ShardOffsets): Unit =
-    withDirLock(path) {
-      val prev = lastAckedOffsets(path)
-        .getOrElse(ShardOffsets(Long.MinValue, Map.empty))
-      val mergedFloor = math.max(prev.floor, so.floor)
-      val merged = (prev.shards.keySet ++ so.shards.keySet).map { k =>
-        k -> math.max(prev.of(k), so.of(k))
-      }.toMap
-      val next = ShardOffsets(mergedFloor, merged)
-      if (next != prev) {
-        val dir = java.nio.file.Paths.get(path)
-        val tmp =
-          java.nio.file.Files.createTempFile(dir, "_acked_offsets", ".tmp")
-        java.nio.file.Files.write(tmp,
-          next.json().getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        java.nio.file.Files.move(tmp, ackOffsetsSidecar(path).toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-    }
+    withDirLock(path)(mergeAckedOffsets(path, so))
+
+  private def mergeAckedOffsets(path: String, so: ShardOffsets): Unit = {
+    val prev = lastAckedOffsets(path)
+      .getOrElse(ShardOffsets(Long.MinValue, Map.empty))
+    val mergedFloor = math.max(prev.floor, so.floor)
+    val merged = (prev.shards.keySet ++ so.shards.keySet).map { k =>
+      k -> math.max(prev.of(k), so.of(k))
+    }.toMap
+    val next = ShardOffsets(mergedFloor, merged)
+    if (next != prev)
+      replaceSidecar(path, ackOffsetsSidecar(path), "_acked_offsets",
+        next.json())
+  }
 
   /** The per-shard acked record; falls back to the legacy scalar
     * sidecar as a floor-only offset ("every shard delivered through
     * L" — the old semantics, conservative for mixed-version dirs). */
-  def lastAckedOffsets(path: String): Option[ShardOffsets] = {
-    val f = ackOffsetsSidecar(path)
-    if (f.exists) {
-      val src = scala.io.Source.fromFile(f)
-      try Some(ShardOffsets.parse(src.mkString)) finally src.close()
-    } else lastAckedLsn(path).map(ShardOffsets(_, Map.empty))
-  }
+  def lastAckedOffsets(path: String): Option[ShardOffsets] =
+    readSidecar(ackOffsetsSidecar(path)).map(ShardOffsets.parse)
+      .orElse(lastAckedLsn(path).map(ShardOffsets(_, Map.empty)))
 }
 
 class CdcReplayProvider extends TableProvider {

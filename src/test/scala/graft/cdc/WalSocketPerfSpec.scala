@@ -30,8 +30,7 @@ class WalSocketPerfSpec extends AnyFunSuite {
     try {
       val t0 = System.nanoTime()
       val r = new WalSocketClient("127.0.0.1", server.port,
-        new PgoutputFormat(), "slot_perf", dir, shard = 0,
-        ackEveryTxs = 256).run()
+        new PgoutputFormat(), "slot_perf", dir, shard = 0).run()
       val secs = (System.nanoTime() - t0) / 1e9
       val rate = nTx / secs
       assert(r.txs.size == nTx)

@@ -583,6 +583,25 @@ class WalSocketSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally server.close()
   }
 
+  test("a first ack on a fresh dir records only its own shard " +
+      "(the per-shard floor stays open)") {
+    // the socket client's _acked_offsets entry must not floor shards
+    // it never acked: a lagging slot's shard in the same dir resumes
+    // from its own position on a no-checkpoint subscribe
+    val log = (1 to 3).map(i => tx(i * 100L, i))
+    val server = new LoopbackWalServer(log)
+    val dir = tmpDir("walsock-floor")
+    try {
+      new WalSocketClient("127.0.0.1", server.port,
+        new PgoutputFormat(), "slot_a", dir, shard = 0).run()
+      val so = CdcReplaySource.lastAckedOffsets(dir).get
+      assert(so.of("part-0.jsonl") == 300L)
+      assert(so.floor == Long.MinValue,
+        s"the first ack lifted every shard's floor: ${so.json()}")
+      assert(CdcReplaySource.lastAckedLsn(dir).contains(300L))
+    } finally server.close()
+  }
+
   test("session schema registry: a tx without its Relation frame " +
       "logs self-contained (walsender sends 'R' once per session)") {
     // A real walsender announces each table's Relation message ONCE

@@ -85,4 +85,24 @@ class LiveTailReadSpec extends AnyFunSuite {
     assert(stream.indexBytesParsed - parsed == f.length() - len,
       "the appended bytes are parsed exactly once")
   }
+
+  test("a line indexed before its newline: the next poll consumes the " +
+      "newline, and an empty line before more is still corrupt") {
+    val f = shard()
+    val stream = new CdcReplayStream(f.getParent,
+      ShardOffsets(0L, Map.empty), Long.MaxValue)
+    def poll(): Long = ShardOffsets.from(stream.latestOffset(
+      stream.initialOffset(), ReadLimit.allAvailable())).of(f.getName)
+    // the writer's `]}` reached the file before its newline
+    append(f, """{"lsn":30,"frames":["2a"]}""")
+    assert(poll() == 30L, "a complete final line is indexed")
+    append(f, "\n" + """{"lsn":40,"frames":["2b"]}""" + "\n")
+    assert(poll() == 40L, "the newline ends line 30, not an empty line")
+    assert(stream.indexBytesParsed == f.length(), "each byte parsed once")
+    assert(readAll(f) == Seq(10L, 20L, 30L, 40L))
+    // a real empty line before more lines is corruption, as before
+    append(f, "\n" + """{"lsn":50,"frames":["2c"]}""" + "\n")
+    val e = intercept[IllegalStateException](poll())
+    assert(e.getMessage.contains("corrupt frame-log line"))
+  }
 }
