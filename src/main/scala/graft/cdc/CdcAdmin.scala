@@ -142,7 +142,7 @@ final class AckLagCensus(
 
 object AckLagCensus {
   /** Column-parity with q293's output row (minus the shard key the
-    * sidecar file carries). */
+    * ack record carries with it). */
   final case class Stats(nFrames: Long, p50LagSec: Long,
       p99LagSec: Long, maxLagSec: Long, sloMilli: Long)
 }

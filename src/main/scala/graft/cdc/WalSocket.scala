@@ -508,7 +508,7 @@ final class LoopbackWalServer(
   *
   * Acks are group commits, as PostgreSQL's own walreceiver does them:
   * completed transactions collect while more input is already
-  * buffered, and one log write, one sidecar publication and one
+  * buffered, and one log write, one ack-record update and one
   * standby status cover the group once the receive buffer is drained
   * (or the group reaches `ackEveryTxs` transactions or
   * [[WalSocketClient.MaxGroupBytes]]). A transaction whose successor
@@ -576,7 +576,7 @@ final class WalSocketClient(
       "(expected disable | require | verify-ca | verify-full)")
 
   /** `groupCommits`: flushAndAck calls — each one log write, one
-    * sidecar publication and one standby status. `acksSent` also
+    * ack-record update and one standby status. `acksSent` also
     * counts the re-ack timer's statuses. */
   final case class RunResult(
       txs: Seq[(Long, Seq[Array[Byte]])],
@@ -594,20 +594,20 @@ final class WalSocketClient(
   private def nowMicros: Long = System.currentTimeMillis() * 1000L
 
   /** Connect and consume until the server closes; returns what was
-    * delivered this session. Resume position: the log dir's acked
-    * sidecar (the reference's default of continuing from the
-    * server-confirmed position). */
+    * delivered this session. Resume position: the slot's entry in the
+    * log dir's ack record (the reference's default of continuing from
+    * the server-confirmed position). */
   def run(): RunResult = {
     // Resume from THIS SLOT's confirmed position (PG: per-slot
     // confirmed_flush_lsn), not the global scalar: after another
     // slot's client acked 500, this slot's undelivered frames at
     // LSN ≤ 500 must replay. The slot — not the shard file — is the
     // stable key, because each reconnect session appends a new
-    // part-N shard while remaining the same logical stream. Legacy
-    // dirs (no per-slot sidecars) fall back to the global scalar's
+    // part-N shard while remaining the same logical stream. A dir
+    // with no slot positions falls back to the global scalar's
     // documented single-slot semantics.
-    val resume = graft.streaming.CdcReplaySource
-      .lastSlotAckedLsn(logDir, slotName).getOrElse(0L)
+    val resume = graft.streaming.CdcReplaySource.acks(logDir)
+      .slot(slotName).getOrElse(0L)
     var sock: Socket = new Socket(host, port)
     sock.setSoTimeout(30000)
     var in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
@@ -642,20 +642,20 @@ final class WalSocketClient(
     // position when the wire has been quiet past the timeout — the
     // liveness signal a walsender uses to not kill the slot.
     // The census rides inside it (q293's live twin): delivery→ack
-    // latency per advancing LSN, published to the `_ack_lag@<slot>`
-    // sidecar with every ack publication (as of the previous ack: the
-    // sidecars precede the status that closes this group) and at
-    // session end, so the SLO pane (`StreamOps.ackLagReport`) tracks a
-    // RUNNING session, not just finished ones.
+    // latency per advancing LSN, published into the ack record's
+    // slot entry with every ack (as of the previous ack: the record
+    // precedes the status that closes this group) and at session end,
+    // so the SLO pane (`StreamOps.ackLagReport`) tracks a RUNNING
+    // session, not just finished ones.
     val lagCensus = new AckLagCensus()
     val scheduler = new AckScheduler(math.max(ackTimeoutSeconds, 1),
       send = lsn => sendStatus(lsn), census = lagCensus)
     def publishLag(): Unit =
-      try graft.streaming.CdcReplaySource.writeAckLag(
-        logDir, slotName, shardName, lagCensus.census())
-      catch { case scala.util.control.NonFatal(_) => () } // the sidecar
-      // is best-effort telemetry: ANY failure in its lock/temp-file
-      // path (not just IO) must never kill the live replication loop
+      try graft.streaming.CdcReplaySource.updateAcks(logDir)(
+        _.withLag(slotName, shardName, lagCensus.census()))
+      catch { case scala.util.control.NonFatal(_) => () } // the census
+      // alone is best-effort telemetry: ANY failure in its lock/temp-
+      // file path (not just IO) must never kill the live replication loop
     @volatile var closed = false
     val ackTimer: Option[Thread] =
       if (ackTimeoutSeconds <= 0) None
@@ -669,8 +669,8 @@ final class WalSocketClient(
         t
       }
 
-    // durable-then-ack: write the group's lines, publish the sidecars
-    // (one locked publication), THEN send the covering standby status
+    // durable-then-ack: write the group's lines, publish the ack record
+    // (one locked update), THEN send the covering standby status
     var sinceAck = 0
     var groupLsn = -1L
     def flushAndAck(lsn: Long): Unit = {
@@ -682,8 +682,14 @@ final class WalSocketClient(
       if (group.size() > WalSocketClient.MaxGroupBytes)
         group = new java.io.ByteArrayOutputStream()
       else group.reset()
-      graft.streaming.CdcReplaySource.publishAck(
-        logDir, slotName, shardName, lsn, lagCensus.census())
+      // the slot's confirmed_flush_lsn (what this stream resumes from;
+      // one slot's ack never advances another's), this shard's offsets
+      // entry (floor left open, so a no-checkpoint resume never floors
+      // a shard this slot did not ack), the scalar and the census
+      graft.streaming.CdcReplaySource.updateAcks(logDir)(_
+        .ackSlot(slotName, lsn)
+        .ackShards(graft.streaming.ShardOffsets(Long.MinValue, Map(shardName -> lsn)))
+        .ack(lsn).withLag(slotName, shardName, lagCensus.census()))
       scheduler.delivered(lsn)
       // position 0 is the scheduler's InvalidLsn sentinel — a
       // keepalive reply at the stream origin still goes on the wire

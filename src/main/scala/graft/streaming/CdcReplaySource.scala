@@ -21,10 +21,10 @@ import graft.cdc.Lsn
   *    `0/00000000` replays everything, `acknowledge.spec.ts:70-75`);
   *  - `maxFramesPerTrigger` bounds a micro-batch (the pull-based
   *    analogue of the reference's flow control, A12);
-  *  - `commit(offset)` emulates the standby-status ack by persisting
-  *    the acked LSN to an `_acked_lsn` sidecar (A9/A10) — restart
-  *    resumes from the checkpoint, replaying any unacked tail ⇒
-  *    at-least-once, deduplicated downstream;
+  *  - `commit(offset)` emulates the standby-status ack by merging
+  *    the acked offsets into the log dir's [[AckRecord]] (A9/A10) —
+  *    restart resumes from the checkpoint, replaying any unacked tail
+  *    ⇒ at-least-once, deduplicated downstream;
   *  - also exposes BATCH_READ so `spark.read` replays the same log.
   *
   * Log format: one JSON line per transaction:
@@ -254,15 +254,24 @@ object CdcReplaySource {
     out.result()
   }
 
-  def ackSidecar(path: String) = new java.io.File(path, "_acked_lsn")
+  /** The log dir's one ack record: every writer's state in one file,
+    * changed only by [[updateAcks]]. */
+  def ackFile(path: String) = new java.io.File(path, "_acks.json")
 
-  /** Cross-PROCESS mutual exclusion for every sidecar
-    * read-merge-write: the JVM-level `synchronized` alone would let
-    * two socket-client processes sharing one log dir interleave
-    * read→merge→write and lose the other's advance. One OS file lock
-    * per log dir (`_acked.lock`), taken inside the JVM lock (JVM
-    * first — OverlappingFileLockException fires if one process locks
-    * the same channel region twice). */
+  /** A file's text, None when it does not exist (every write is an
+    * atomic replace, so an existing file is always whole). */
+  private def readText(f: java.io.File): Option[String] =
+    try Some(new String(java.nio.file.Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8))
+    catch { case _: java.nio.file.NoSuchFileException => None }
+
+  /** Cross-PROCESS mutual exclusion for every read-merge-replace of
+    * the record (and for truncation and scrub): the JVM-level
+    * `synchronized` alone would let two socket-client processes
+    * sharing one log dir interleave read→merge→write and lose the
+    * other's advance. One OS file lock per log dir (`_acked.lock`),
+    * taken inside the JVM lock (JVM first — OverlappingFileLockException
+    * fires if one process locks the same channel region twice). */
   private def withDirLock[A](path: String)(body: => A): A = synchronized {
     val lockFile = new java.io.File(path, "_acked.lock")
     val ch = java.nio.channels.FileChannel.open(lockFile.toPath,
@@ -274,135 +283,73 @@ object CdcReplaySource {
     } finally ch.close()
   }
 
-  /** A sidecar's text, None when it does not exist yet (every write
-    * is an atomic replace, so an existing sidecar is always whole). */
-  private def readSidecar(f: java.io.File): Option[String] =
-    if (!f.exists) None
-    else Some(new String(java.nio.file.Files.readAllBytes(f.toPath),
-      java.nio.charset.StandardCharsets.UTF_8))
+  /** The dir's ack state in one read. A dir without a record is read
+    * from the sidecars older versions wrote, once per call until the
+    * first [[updateAcks]] migrates it (a migration racing this read
+    * deletes those files, so the record is read again after them). */
+  def acks(path: String): AckRecord =
+    readText(ackFile(path)).map(AckRecord.parse).getOrElse {
+      val legacy = legacyAcks(path)
+      readText(ackFile(path)).map(AckRecord.parse).getOrElse(legacy)
+    }
 
-  /** Whole-file atomic replace: a temp file in the log dir, then an
-    * ATOMIC_MOVE over `target`. Callers hold [[withDirLock]]. */
-  private def replaceSidecar(path: String, target: java.io.File,
-      tmpPrefix: String, text: String): Unit = {
-    val tmp = java.nio.file.Files.createTempFile(
-      java.nio.file.Paths.get(path), tmpPrefix, ".tmp")
-    java.nio.file.Files.write(tmp,
-      text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, target.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  /** The one migration read of the four pre-record sidecar kinds:
+    * `_acked_lsn` (scalar), `_acked_lsn@<slot>` and `_ack_lag@<slot>`
+    * (URL-encoded slot names) and `_acked_offsets`. Their old read
+    * fallback is kept: with no offsets sidecar the scalar is a
+    * floor-only offset ("every shard delivered through L"). */
+  private def legacyAcks(path: String): AckRecord = {
+    val names = Option(new java.io.File(path).list()).getOrElse(Array.empty[String])
+    def text(name: String) = readText(new java.io.File(path, name)).map(_.trim)
+    def perSlot[A](prefix: String)(parse: String => A): Map[String, A] =
+      names.toSeq.filter(_.startsWith(prefix)).flatMap(n => text(n).map(t =>
+        java.net.URLDecoder.decode(n.drop(prefix.length), "UTF-8") -> parse(t))).toMap
+    val lsn = text("_acked_lsn").map(_.toLong)
+    AckRecord(lsn,
+      text("_acked_offsets").map(ShardOffsets.parse)
+        .orElse(lsn.map(ShardOffsets(_, Map.empty))),
+      perSlot("_acked_lsn@")(_.toLong),
+      perSlot("_ack_lag@")(AckRecord.lagOf))
   }
 
-  /** Atomic, MONOTONIC sidecar advance — every ack path (stream
-    * commit, manual acknowledge, re-ack timer, socket client) funnels
-    * here so a stale writer can never regress a newer position. */
-  def writeAckedLsn(path: String, lsn: Long): Unit =
-    withDirLock(path)(advanceAckedLsn(path, lsn))
-
-  private def advanceAckedLsn(path: String, lsn: Long): Unit =
-    if (lastAckedLsn(path).forall(_ < lsn))
-      replaceSidecar(path, ackSidecar(path), "_acked_lsn", lsn.toString)
-
-  def lastAckedLsn(path: String): Option[Long] =
-    readSidecar(ackSidecar(path)).map(_.trim.toLong)
-
-  /** Per-SLOT confirmed position — the socket CLIENT's resume record,
-    * mirroring PostgreSQL's own model where every replication slot
-    * carries its own `confirmed_flush_lsn`: two slots sharing one log
-    * dir must not resume from each other's acks (after slot A acks
-    * 500, lagging slot B's undelivered frames at LSN ≤ 500 must still
-    * replay). A slot spans shard FILES (each reconnect session may
-    * append a new `part-N.jsonl`), so the file-keyed [[ShardOffsets]]
-    * record cannot serve here — the slot name is the stable key. */
-  def slotAckSidecar(path: String, slot: String) = new java.io.File(path,
-    "_acked_lsn@" + java.net.URLEncoder.encode(slot, "UTF-8"))
-
-  /** Atomic, monotonic per-slot advance (same contract as
-    * [[writeAckedLsn]], scoped to one slot). */
-  def writeSlotAckedLsn(path: String, slot: String, lsn: Long): Unit =
-    withDirLock(path)(advanceSlotAckedLsn(path, slot, lsn))
-
-  private def advanceSlotAckedLsn(path: String, slot: String,
-      lsn: Long): Unit =
-    if (readSlotAcked(path, slot).forall(_ < lsn))
-      replaceSidecar(path, slotAckSidecar(path, slot), "_acked_slot",
-        lsn.toString)
-
-  /** Per-slot ack-lag metrics sidecar (`_ack_lag@<slot>`) — the live
-    * loop's q293-shape SLO census, written by the socket client from
-    * its own [[graft.cdc.AckLagCensus]] and read back by
-    * [[graft.streaming.StreamOps.ackLagReport]] next to the
-    * retention pane. One JSON line, whole-file atomic replace (same
-    * publish discipline as the position sidecars; metrics are a
-    * SNAPSHOT, so unlike positions there is no monotonicity guard —
-    * the latest census simply wins). */
-  def ackLagSidecar(path: String, slot: String) = new java.io.File(path,
-    "_ack_lag@" + java.net.URLEncoder.encode(slot, "UTF-8"))
-
-  def writeAckLag(path: String, slot: String, shard: String,
-      st: graft.cdc.AckLagCensus.Stats): Unit = {
+  /** THE ack write: under the dir lock, read the record, apply `f`,
+    * and publish the result with one temp file + ATOMIC_MOVE when it
+    * changed. The first update of a pre-record dir writes the migrated
+    * record and deletes the old sidecars. Returns whether `f` changed
+    * the record. */
+  def updateAcks(path: String)(f: AckRecord => AckRecord): Boolean = {
     // before the lock: withDirLock opens <path>/_acked.lock with
     // CREATE, which throws if the DIRECTORY itself is missing
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
-    withDirLock(path)(replaceAckLag(path, slot, shard, st))
-  }
-
-  private def replaceAckLag(path: String, slot: String, shard: String,
-      st: graft.cdc.AckLagCensus.Stats): Unit =
-    // shard names are part-N.jsonl (ASCII, no quotes) — safe inline
-    replaceSidecar(path, ackLagSidecar(path, slot), "_ack_lag",
-      s"""{"shard":"$shard","n_frames":${st.nFrames},""" +
-        s""""p50_lag_sec":${st.p50LagSec},"p99_lag_sec":${st.p99LagSec},""" +
-        s""""max_lag_sec":${st.maxLagSec},"slo_milli":${st.sloMilli}}""")
-
-  /** The socket client's whole ack publication under ONE directory
-    * lock: the slot record first (the slot's confirmed_flush_lsn —
-    * what this stream resumes from; one slot's ack never advances
-    * another's), then this shard's `_acked_offsets` entry (floor left
-    * at MinValue, so a no-checkpoint resume that falls back to it
-    * never floors a shard this slot did not ack), then the legacy
-    * global scalar for pre-upgrade readers, then the `_ack_lag`
-    * census. The offsets go before the scalar for the reason
-    * [[CdcReplayStream.commit]] gives: on a fresh dir their merge
-    * seeds from the scalar, which would lift the floor to this ack.
-    * Each record keeps its own monotone guard and format. The census
-    * is best-effort telemetry: no failure in it may fail the ack,
-    * where a failed position write does. */
-  def publishAck(path: String, slot: String, shard: String, lsn: Long,
-      census: graft.cdc.AckLagCensus.Stats): Unit = withDirLock(path) {
-    advanceSlotAckedLsn(path, slot, lsn)
-    mergeAckedOffsets(path, ShardOffsets(Long.MinValue, Map(shard -> lsn)))
-    advanceAckedLsn(path, lsn)
-    try replaceAckLag(path, slot, shard, census)
-    catch { case scala.util.control.NonFatal(_) => () }
-  }
-
-  private def readSlotAcked(path: String, slot: String): Option[Long] =
-    readSidecar(slotAckSidecar(path, slot)).map(_.trim.toLong)
-
-  /** The slot's confirmed position. Migration fallback: a log dir
-    * with NO per-slot sidecars at all is pre-upgrade state — the
-    * legacy global scalar applies (its documented single-slot
-    * semantics). Once ANY slot has its own record, an absent record
-    * means a fresh slot, which must replay from 0 rather than borrow
-    * another slot's position (the cross-session skip this record
-    * exists to prevent). */
-  def lastSlotAckedLsn(path: String, slot: String): Option[Long] =
-    readSlotAcked(path, slot).orElse {
-      val files = new java.io.File(path).listFiles()
-      val anySlot = files != null &&
-        files.exists(_.getName.startsWith("_acked_lsn@"))
-      if (anySlot) None else lastAckedLsn(path)
+    withDirLock(path) {
+      val stored = readText(ackFile(path)).map(AckRecord.parse)
+      val prev = stored.getOrElse(legacyAcks(path))
+      val next = f(prev)
+      val migrated = stored.isEmpty && prev != AckRecord()
+      if (migrated || next != prev) {
+        val tmp = java.nio.file.Files.createTempFile(
+          java.nio.file.Paths.get(path), "_acks", ".tmp")
+        java.nio.file.Files.write(tmp, AckRecord.json(next)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        java.nio.file.Files.move(tmp, ackFile(path).toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      }
+      // the old sidecars and any temp file a crashed writer left
+      if (migrated) new java.io.File(path).listFiles()
+        .filter(g => g.getName.startsWith("_ack") &&
+          g.getName != "_acked.lock" && g.getName != ackFile(path).getName)
+        .foreach(g => { g.delete(); () })
+      next != prev
     }
+  }
 
   /** WAL recycling for the replay log — the ENFORCEMENT half of the
     * retention story [[graft.streaming.StreamOps.slotRetentionReport]]
-    * observes: drop every transaction at or below the MINIMUM of its
-    * shard's acked floor (`_acked_offsets`), every per-slot
-    * `_acked_lsn@<slot>` sidecar, and the legacy scalar — exactly
-    * what PostgreSQL does to WAL segments once EVERY slot's
-    * `confirmed_flush_lsn` passes them.
+    * observes: drop every transaction at or below its shard's
+    * [[retentionFloors]] entry, the MINIMUM over every consumer in the
+    * ack record — exactly what PostgreSQL does to WAL segments once
+    * EVERY slot's `confirmed_flush_lsn` passes them.
     * Per-file tmp-write + ATOMIC_MOVE: a crash leaves each shard file
     * either whole or fully truncated (no multi-file invariant — shards
     * are independent), and a rerun is idempotent. A torn final line
@@ -621,68 +568,13 @@ object CdcReplaySource {
       }.toMap
     }
 
-  /** Per-shard retention floor — the MIN over EVERY consumer's
-    * confirmed position: the shard's own `_acked_offsets` entry,
-    * every per-slot `_acked_lsn@<slot>` sidecar, and the legacy
-    * global scalar. PostgreSQL recycles WAL at exactly this minimum
-    * (a frame is droppable only once every slot has passed it); a
-    * slot lagging at 100 pins frames 100..500 even after a
-    * checkpointed query acked 500. ONE derivation shared by the
-    * enforcement half ([[truncateFrameLog]]) and the observation half
-    * ([[graft.streaming.StreamOps.slotRetentionReport]]) so the
-    * dashboard can never disagree with what truncation would do
-    * (r13 advisor finding: the report used to read only the shard
-    * offsets and understated lagging-consumer retention). */
-  def retentionFloors(path: String): Map[String, Long] = {
-    val so = lastAckedOffsets(path)
-      .getOrElse(ShardOffsets(Long.MinValue, Map.empty))
-    val slotFloors: Seq[Long] = {
-      val files = Option(new java.io.File(path).listFiles())
-        .getOrElse(Array.empty)
-      files.toSeq.collect {
-        case f if f.getName.startsWith("_acked_lsn@") =>
-          readSidecar(f).get.trim.toLong
-      } ++ lastAckedLsn(path).toSeq
-    }
-    listLogFiles(path).map { p =>
-      val nm = new java.io.File(p).getName
-      nm -> (so.of(nm) +: slotFloors).min
-    }.toMap
-  }
-
-  def ackOffsetsSidecar(path: String) = new java.io.File(path, "_acked_offsets")
-
-  /** PER-SHARD acked positions — the cross-session record the global
-    * `_acked_lsn` scalar cannot carry: after shard A acks 500, a
-    * lagging shard B's unseen frames at LSN ≤ 500 must still replay
-    * on a sidecar-based resume (no checkpoint). A running checkpointed
-    * query gets this from its own ShardOffsets; this sidecar gives the
-    * same floor to `ReplicationSession.subscribe` (no uptoLsn) and
-    * `WalSocketClient.run`. Advance is per-shard monotonic under the
-    * same lock as the scalar sidecar; a concurrent writer can only
-    * push entries forward. */
-  def writeAckedOffsets(path: String, so: ShardOffsets): Unit =
-    withDirLock(path)(mergeAckedOffsets(path, so))
-
-  private def mergeAckedOffsets(path: String, so: ShardOffsets): Unit = {
-    val prev = lastAckedOffsets(path)
-      .getOrElse(ShardOffsets(Long.MinValue, Map.empty))
-    val mergedFloor = math.max(prev.floor, so.floor)
-    val merged = (prev.shards.keySet ++ so.shards.keySet).map { k =>
-      k -> math.max(prev.of(k), so.of(k))
-    }.toMap
-    val next = ShardOffsets(mergedFloor, merged)
-    if (next != prev)
-      replaceSidecar(path, ackOffsetsSidecar(path), "_acked_offsets",
-        next.json())
-  }
-
-  /** The per-shard acked record; falls back to the legacy scalar
-    * sidecar as a floor-only offset ("every shard delivered through
-    * L" — the old semantics, conservative for mixed-version dirs). */
-  def lastAckedOffsets(path: String): Option[ShardOffsets] =
-    readSidecar(ackOffsetsSidecar(path)).map(ShardOffsets.parse)
-      .orElse(lastAckedLsn(path).map(ShardOffsets(_, Map.empty)))
+  /** Per-shard retention floors ([[AckRecord.floors]]) of the log's
+    * shard files, from one read of the record: ONE derivation shared
+    * by the enforcement half ([[truncateFrameLog]]) and the observation
+    * half ([[graft.streaming.StreamOps.slotRetentionReport]]) so the
+    * dashboard can never disagree with what truncation would do. */
+  def retentionFloors(path: String): Map[String, Long] =
+    acks(path).floors(listLogFiles(path).map(new java.io.File(_).getName))
 }
 
 class CdcReplayProvider extends TableProvider {
@@ -756,8 +648,8 @@ class CdcReplayScanBuilder(options: CaseInsensitiveStringMap)
   override def build(): Scan = new Scan {
     override def readSchema(): StructType = CdcReplaySource.schema
     override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-      // `startingOffsets` (a full ShardOffsets JSON, e.g. the
-      // _acked_offsets sidecar) floors each shard at its OWN confirmed
+      // `startingOffsets` (a full ShardOffsets JSON, e.g. the ack
+      // record's offsets) floors each shard at its OWN confirmed
       // LSN — the no-checkpoint resume path; `startingLsn` is the
       // scalar special case (floor-only). A checkpoint, when present,
       // supersedes both (Spark only calls initialOffset without one).
@@ -860,6 +752,119 @@ object ShardOffsets {
   def from(o: Offset): ShardOffsets = o match {
     case s: ShardOffsets => s
     case other => parse(other.json())
+  }
+}
+
+/** A log dir's whole ack state — the standby-status analogue (A9/A10)
+  * of every consumer that acks into the dir, kept in ONE record
+  * ([[CdcReplaySource.ackFile]]) so each ack is one locked
+  * read-merge-replace ([[CdcReplaySource.updateAcks]]). Every field
+  * has its own merge rule and no merge reads another field (a
+  * pre-record dir's scalar seeds the offsets once, when it is read),
+  * so the order in which one update applies them does not matter:
+  *
+  *  - `lsn`: the global delivered-through position (the stream's
+  *    minimum over delivered shards, a manual or timer ack, a socket
+  *    ack) — monotone max;
+  *  - `offsets`: PER-SHARD acked positions, the cross-session record
+  *    the scalar cannot carry (after shard A acks 500, a lagging shard
+  *    B's unseen frames at LSN ≤ 500 must still replay on a resume
+  *    without a checkpoint) — floor and entries merged by max;
+  *  - `slots`: each socket slot's confirmed position, PostgreSQL's
+  *    per-slot `confirmed_flush_lsn` (a slot spans shard FILES, one per
+  *    reconnect session, so the slot name is the stable key) —
+  *    monotone max;
+  *  - `lag`: each slot's live ack-lag census
+  *    ([[graft.cdc.AckLagCensus]], read by
+  *    [[graft.streaming.StreamOps.ackLagReport]]) with its shard — a
+  *    metrics snapshot, so the latest wins. */
+final case class AckRecord(
+    lsn: Option[Long] = None,
+    offsets: Option[ShardOffsets] = None,
+    slots: Map[String, Long] = Map.empty,
+    lag: Map[String, (String, graft.cdc.AckLagCensus.Stats)] = Map.empty) {
+
+  /** The slot's confirmed position. A record with NO slot positions
+    * is single-slot state, where the scalar applies; once any slot
+    * has one, an absent slot is fresh and replays from 0 rather than
+    * borrow another slot's position. */
+  def slot(name: String): Option[Long] =
+    slots.get(name).orElse(if (slots.isEmpty) lsn else None)
+
+  /** Per-shard retention floor — the MIN over EVERY consumer's
+    * confirmed position: the shard's offsets entry, every slot and
+    * the scalar. PostgreSQL recycles WAL at exactly this minimum (a
+    * frame is droppable only once every slot has passed it); a slot
+    * lagging at 100 pins frames 100..500 even after a checkpointed
+    * query acked 500. Long.MinValue: nothing acked, keep everything. */
+  def floors(shards: Seq[String]): Map[String, Long] = {
+    val so = offsets.getOrElse(ShardOffsets(Long.MinValue, Map.empty))
+    val consumers = slots.values.toSeq ++ lsn
+    shards.map(nm => nm -> (so.of(nm) +: consumers).min).toMap
+  }
+
+  def ack(l: Long): AckRecord = copy(lsn = Some(lsn.fold(l)(math.max(_, l))))
+
+  def ackShards(so: ShardOffsets): AckRecord = {
+    val prev = offsets.getOrElse(ShardOffsets(Long.MinValue, Map.empty))
+    copy(offsets = Some(ShardOffsets(math.max(prev.floor, so.floor),
+      (prev.shards.keySet ++ so.shards.keySet)
+        .map(k => k -> math.max(prev.of(k), so.of(k))).toMap)))
+  }
+
+  def ackSlot(name: String, l: Long): AckRecord =
+    copy(slots = slots.updated(name, slots.get(name).fold(l)(math.max(_, l))))
+
+  def withLag(name: String, shard: String,
+      st: graft.cdc.AckLagCensus.Stats): AckRecord =
+    copy(lag = lag.updated(name, (shard, st)))
+}
+
+object AckRecord {
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private type Node = com.fasterxml.jackson.databind.JsonNode
+
+  private def fields(n: Node): Map[String, Node] =
+    n.properties().asScala.map(e => e.getKey -> e.getValue).toMap
+
+  /** One slot's census with its shard: q293's columns. */
+  private[streaming] def lagOf(text: String): (String, graft.cdc.AckLagCensus.Stats) =
+    lagOf(mapper.readTree(text))
+
+  private def lagOf(j: Node) = (j.path("shard").asText(),
+    graft.cdc.AckLagCensus.Stats(j.path("n_frames").asLong(),
+      j.path("p50_lag_sec").asLong(), j.path("p99_lag_sec").asLong(),
+      j.path("max_lag_sec").asLong(), j.path("slo_milli").asLong()))
+
+  def parse(text: String): AckRecord = {
+    val j = mapper.readTree(text)
+    require(j.path("version").asInt() == 1,
+      s"unsupported ack record version: ${j.path("version")}")
+    AckRecord(
+      Option(j.get("lsn")).map(_.asLong()),
+      Option(j.get("offsets")).map(o => ShardOffsets(o.path("floor").asLong(),
+        fields(o.path("shards")).map { case (k, v) => k -> v.asLong() })),
+      fields(j.path("slots")).map { case (k, v) => k -> v.asLong() },
+      fields(j.path("lag")).map { case (k, v) => k -> lagOf(v) })
+  }
+
+  def json(r: AckRecord): String = {
+    val o = mapper.createObjectNode().put("version", 1)
+    r.lsn.foreach(o.put("lsn", _))
+    r.offsets.foreach { so =>
+      val n = o.putObject("offsets").put("floor", so.floor)
+      val sh = n.putObject("shards")
+      so.shards.toSeq.sorted.foreach { case (k, v) => sh.put(k, v) }
+    }
+    val slots = o.putObject("slots")
+    r.slots.toSeq.sorted.foreach { case (k, v) => slots.put(k, v) }
+    val lag = o.putObject("lag")
+    r.lag.toSeq.sortBy(_._1).foreach { case (k, (shard, st)) =>
+      lag.putObject(k).put("shard", shard).put("n_frames", st.nFrames)
+        .put("p50_lag_sec", st.p50LagSec).put("p99_lag_sec", st.p99LagSec)
+        .put("max_lag_sec", st.maxLagSec).put("slo_milli", st.sloMilli)
+    }
+    mapper.writeValueAsString(o)
   }
 }
 
@@ -1036,15 +1041,8 @@ class CdcReplayStream(path: String, initial: ShardOffsets,
     val e = ShardOffsets.from(end)
     val acked =
       if (e.shards.isEmpty) e.floor else math.max(e.floor, e.shards.values.min)
-    // Per-shard record FIRST: writeAckedOffsets seeds its initial
-    // state from the legacy scalar when no per-shard record exists
-    // yet, so on a fresh dir the scalar must not land before it (the
-    // seed would lift unseen shards' floor to this batch's min). The
-    // per-shard record is what a sidecar-based resume needs to floor
-    // each shard at its OWN confirmed LSN; the scalar stays the
-    // legacy global position (min across delivered shards).
-    CdcReplaySource.writeAckedOffsets(path, e)
-    CdcReplaySource.writeAckedLsn(path, acked)
+    CdcReplaySource.updateAcks(path)(_.ackShards(e).ack(acked))
+    ()
   }
 
   /** Per-trigger source metrics (`progress.sources(i).metrics`): the

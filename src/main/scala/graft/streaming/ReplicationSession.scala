@@ -18,13 +18,13 @@ import graft.cdc.{AckScheduler, CdcFormat, Lsn}
   *    [[startReplicationSql]] — in a live deployment that string is
   *    what the connector issues; in replay it documents the session.
   *  - `acknowledge(lsn)` (`:250-262`) → persists the standby-status
-  *    LSN to the source's `_acked_lsn` sidecar, monotonically (the
+  *    LSN to the log dir's [[AckRecord]], monotonically (the
   *    reference also only advances `lastLsn`). The source's own
   *    commit hook auto-acks delivered batches exactly like
   *    `acknowledge.auto = true` (`:54-57`).
   *  - periodic re-ack (`acknowledge.timeoutSeconds`, default 10,
   *    `:20,238-247`) → an [[graft.cdc.AckScheduler]] wired to the
-  *    same sidecar.
+  *    same record.
   *  - `stop()` (`:264-280`) → stops every query this session started.
   *  - `'heartbeat'` events (`:165-171`) → [[CdcProgressListener]]
   *    heartbeats, attached per session.
@@ -70,7 +70,7 @@ final class ReplicationSession(
     * replay log was produced by that command). `uptoLsn` mirrors the
     * resume-position argument (`:66`): replay starts strictly AFTER
     * it, `0/00000000` replays everything (`acknowledge.spec.ts:
-    * 70-75`); absent → resume from the acked sidecar, the reference's
+    * 70-75`); absent → resume from the ack record, the reference's
     * default of continuing from the server-confirmed position. */
   def subscribe(format: CdcFormat, slotName: String,
       uptoLsn: Option[String] = None,
@@ -82,14 +82,13 @@ final class ReplicationSession(
       "session destroyed: create a new ReplicationSession " +
         "(reference: subscribe after destroy() rejects, the client is gone)")
     // Explicit uptoLsn → scalar start. Default resume → the PER-SHARD
-    // acked sidecar: each shard floors at its OWN confirmed LSN, so a
+    // acked offsets: each shard floors at its OWN confirmed LSN, so a
     // shard that lagged behind another's acked tail in the previous
     // session is replayed, not skipped (the cross-session analogue of
-    // the in-stream per-shard offsets; falls back to the legacy scalar
-    // sidecar as a floor for pre-upgrade log dirs).
+    // the in-stream per-shard offsets).
     val resumed = uptoLsn match {
       case Some(l) => ShardOffsets(Lsn.parse(l), Map.empty)
-      case None => CdcReplaySource.lastAckedOffsets(logDir)
+      case None => CdcReplaySource.acks(logDir).offsets
         .getOrElse(ShardOffsets(0L, Map.empty))
     }
     val start = resumed.floor
@@ -117,13 +116,14 @@ final class ReplicationSession(
     * Accepts `X/XXXXXXXX` text or decimal. */
   def acknowledge(lsn: String): Boolean = synchronized {
     val v = Lsn.parse(lsn)
-    val advanced = CdcReplaySource.lastAckedLsn(logDir).forall(_ < v)
-    if (advanced) { writeAck(v); ackScheduler.delivered(v) }
+    val advanced = CdcReplaySource.updateAcks(logDir)(r =>
+      if (r.lsn.forall(_ < v)) acked(r, v) else r)
+    if (advanced) ackScheduler.delivered(v)
     advanced
   }
 
   /** The confirmed position (reference `lastLsn`). */
-  def lastAckedLsn(): Option[Long] = CdcReplaySource.lastAckedLsn(logDir)
+  def lastAckedLsn(): Option[Long] = CdcReplaySource.acks(logDir).lsn
 
   @volatile private var stopped = false
   @volatile private var destroyed = false
@@ -150,17 +150,17 @@ final class ReplicationSession(
     if (!destroyed) { stop(); destroyed = true }
   }
 
-  /** Every path into the sidecar (manual acknowledge, the periodic
-    * re-ack timer) funnels through [[CdcReplaySource.writeAckedLsn]] —
-    * atomic and monotonic, so a stale scheduler tick can never regress
-    * past a newer auto-ack from the source's commit hook (which itself
-    * only moves forward). */
+  /** A manual or timer ack is a GLOBAL statement ("delivered through
+    * lsn"): it advances the scalar and lifts the offsets' floor, so
+    * every shard resumes at ≥ lsn; per-shard entries above it are
+    * untouched. Both merges are monotonic, so a stale scheduler tick
+    * can never regress past a newer auto-ack from the source's commit
+    * hook (which itself only moves forward). */
+  private def acked(r: AckRecord, lsn: Long): AckRecord =
+    r.ackShards(ShardOffsets(lsn, Map.empty)).ack(lsn)
+
   private def writeAck(lsn: Long): Unit = {
-    // a manual/timer ack is a GLOBAL statement ("delivered through
-    // lsn") — it lifts the per-shard record's floor, so every shard
-    // resumes at ≥ lsn; per-shard entries above it are untouched
-    CdcReplaySource.writeAckedOffsets(logDir,
-      ShardOffsets(lsn, Map.empty))
-    CdcReplaySource.writeAckedLsn(logDir, lsn)
+    CdcReplaySource.updateAcks(logDir)(acked(_, lsn))
+    ()
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.cdc.CdcFunctions
 
@@ -328,7 +328,10 @@ object StreamOps {
     * (flatMapGroupsWithState): emits the current row for a key on
     * every update; deletes tombstone the key. LSN ordering per key is
     * enforced by ignoring stale updates (at-least-once replays arrive
-    * with lsn <= state.lsn and are dropped — idempotent by design). */
+    * with lsn <= state.lsn and are dropped — idempotent by design).
+    * For state that outgrows executor heap, run it on
+    * `RocksDBStateStoreProvider` (`spark.sql.streaming.stateStore.
+    * providerClass`): same operator, state off-heap per partition. */
   def statefulSnapshot(changes: Dataset[KeyedChange]): Dataset[SnapshotRow] = {
     import changes.sparkSession.implicits._
     changes
@@ -395,54 +398,6 @@ object StreamOps {
           cur.foreach(state.update)
           out.iterator
       }
-  }
-
-  /** [[statefulSnapshot]] re-expressed on the state-v2
-    * `transformWithState` API (Spark 4's successor to
-    * flatMapGroupsWithState): per-key `ValueState[SnapshotRow]` backed
-    * by the RocksDB state store — the deployment shape for snapshot
-    * state that outgrows executor heap (state lives off-heap/on-disk
-    * per partition, changelog-checkpointed, instead of in an HDFS-
-    * backed in-memory map). Semantics are identical to
-    * [[statefulSnapshot]]: newest LSN wins, stale at-least-once
-    * replays drop idempotently.
-    * Requires `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider (transformWithState rejects the
-    * default HDFS-backed provider). */
-  def statefulSnapshotTws(changes: Dataset[KeyedChange])
-      : Dataset[SnapshotRow] = {
-    import changes.sparkSession.implicits._
-    changes
-      .groupByKey(c => (c.table, c.key))
-      .transformWithState(new SnapshotProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
-
-  /** Keyed processor for [[statefulSnapshotTws]]: one ValueState cell
-    * per (table, key) holding the current snapshot row. */
-  final class SnapshotProcessor
-      extends StatefulProcessor[(String, String), KeyedChange, SnapshotRow] {
-    @transient private var snap: ValueState[SnapshotRow] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      snap = getHandle.getValueState[SnapshotRow]("snap",
-        org.apache.spark.sql.Encoders.product[SnapshotRow], TTLConfig.NONE)
-
-    override def handleInputRows(key: (String, String),
-        rows: Iterator[KeyedChange],
-        timerValues: TimerValues): Iterator[SnapshotRow] = {
-      val newest = rows.foldLeft(Option.empty[KeyedChange]) { (acc, c) =>
-        if (acc.forall(_.lsn < c.lsn)) Some(c) else acc
-      }
-      val prev = if (snap.exists()) Some(snap.get()) else None
-      newest match {
-        case Some(c) if prev.forall(_.lsn < c.lsn) =>
-          val row = SnapshotRow(key._1, key._2, c.lsn, c.op, c.tuple)
-          snap.update(row)
-          Iterator.single(row)
-        case _ => Iterator.empty // stale replay — idempotent drop
-      }
-    }
   }
 
   /** `xid` is the toplevel (stream-block) transaction id — the group
@@ -514,7 +469,10 @@ object StreamOps {
   /** Idempotent foreachBatch merge: latest-by-(table,key,lsn) upsert
     * into a parquet snapshot dir — the replay-safe sink (a real
     * deployment would MERGE into a transactional table; parquet
-    * rewrite keeps the demo dependency-free).
+    * rewrite keeps the demo dependency-free). The rewrite is published
+    * with [[publishCompacted]], so a crash between its steps never
+    * loses the stored rows, and a store that fails to read for any
+    * reason but absence fails the batch.
     *
     * Delete tombstones are KEPT in the stored state: replayed stale
     * updates arriving in a later batch than the delete (at-least-once
@@ -523,31 +481,18 @@ object StreamOps {
     * live view with [[readSnapshot]]. */
   def upsertBatch(snapshotDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
+    // heal a publish a crash cut between its demote and promote
+    recoverCompaction(snapshotDir)
     val incoming = batch.select("table", "key", "lsn", "op", "tuple")
-    val existing =
-      try spark.read.parquet(snapshotDir)
-      catch { case _: Exception => spark.emptyDataFrame }
-    val all =
-      if (existing.columns.isEmpty) incoming
-      else existing.unionByName(incoming)
+    val all = readParquetOpt(spark, snapshotDir)
+      .fold(incoming)(_.unionByName(incoming))
     val merged = all
       .groupBy(col("table"), col("key"))
       .agg(max_by(struct(col("lsn"), col("op"), col("tuple")), col("lsn"))
         .as("last"))
       .select(col("table"), col("key"), col("last.lsn").as("lsn"),
         col("last.op").as("op"), col("last.tuple").as("tuple"))
-    val tmp = snapshotDir + "_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    val fs = new java.io.File(snapshotDir)
-    if (fs.exists) {
-      def del(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(del); f.delete()
-      }
-      del(fs)
-    }
-    if (!new java.io.File(tmp).renameTo(fs))
-      throw new java.io.IOException(
-        s"failed to publish snapshot: rename $tmp -> $snapshotDir")
+    publishCompacted(snapshotDir, merged)
   }
 
   /** Live rows of the stored snapshot (tombstones filtered). */
@@ -2401,13 +2346,13 @@ object StreamOps {
   /** Slot/WAL retention report over a replay frame-log directory —
     * q280's census computed from the store's OWN ack state instead of
     * a simulated lag: per shard file (≈ slot/publication), the acked
-    * floor from the `_acked_offsets` / `_acked_lsn` sidecars
-    * ([[CdcReplaySource.lastAckedOffsets]], the A9/A10 bookkeeping),
+    * floor from the log dir's [[AckRecord]]
+    * ([[CdcReplaySource.retentionFloors]], the A9/A10 bookkeeping),
     * the head LSN, the transactions/bytes retained past the floor
     * (wire size: 25-byte XLogData header + payload per frame), and
     * the retained fraction of `capBytes` in milli — the
     * pg_replication_slots dashboard against the engine's own log.
-    * A dir with no sidecars reports everything retained (floor =
+    * A dir with no ack record reports everything retained (floor =
     * Long.MinValue): the honest state of a slot nobody has acked.
     * Scale shape: one pass over the log (per-file parallelism, the
     * source's own partitioning) + a broadcast of the k-row floor
@@ -2457,9 +2402,9 @@ object StreamOps {
     val ss = spark
     import ss.implicits._
     // the SAME floor derivation enforcement uses (min over the shard
-    // offset, every per-slot sidecar, and the legacy scalar) — the
-    // pane shows exactly what truncateFrameLog would keep, including
-    // frames pinned by a LAGGING slot's sidecar (r13 advisor finding)
+    // offset, every slot, and the scalar) — the pane shows exactly
+    // what truncateFrameLog would keep, including frames pinned by a
+    // LAGGING slot (r13 advisor finding)
     val floors = CdcReplaySource.retentionFloors(logDir).toSeq
       .toDF("shard", "floor_lsn")
     def bytesOf(df: DataFrame): DataFrame =
@@ -2490,27 +2435,19 @@ object StreamOps {
     * clients' own send/receive timestamps instead of the frame log
     * (r14 verdict ask 7): each `WalSocketClient` maintains an
     * [[graft.cdc.AckLagCensus]] inside its ack scheduler and
-    * publishes the census to a per-slot `_ack_lag@<slot>` sidecar;
-    * this reads every sidecar in the dir back as one DataFrame with
+    * publishes the census into the log dir's [[AckRecord]] under its
+    * slot; this reads every slot's census back as one DataFrame with
     * EXACTLY q293's output columns, keyed by shard — so the
     * retention dashboard ([[slotRetentionReport]]) and the lag pane
-    * read off the same directory and the live numbers can be
-    * compared 1:1 against the batch census's. Driver-side parse: the
-    * sidecars are one JSON line each, O(slots) of them. */
+    * read off the same record and the live numbers can be compared
+    * 1:1 against the batch census's. Driver-side: one read of the
+    * record, O(slots) rows. */
   def ackLagReport(spark: SparkSession, logDir: String): DataFrame = {
     val ss = spark
     import ss.implicits._
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-    val rows = Option(new java.io.File(logDir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(_.getName.startsWith("_ack_lag@")).toSeq
-      .map { f =>
-        val j = node.readTree(
-          java.nio.file.Files.readString(f.toPath))
-        (j.path("shard").asText(), j.path("n_frames").asLong(),
-          j.path("p50_lag_sec").asLong(), j.path("p99_lag_sec").asLong(),
-          j.path("max_lag_sec").asLong(), j.path("slo_milli").asLong())
-      }
+    val rows = CdcReplaySource.acks(logDir).lag.values.toSeq
+      .map { case (shard, st) => (shard, st.nFrames, st.p50LagSec,
+        st.p99LagSec, st.maxLagSec, st.sloMilli) }
     rows.toDF("shard", "n_frames", "p50_lag_sec", "p99_lag_sec",
       "max_lag_sec", "slo_milli").orderBy(col("shard"))
   }

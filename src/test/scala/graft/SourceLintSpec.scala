@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * session, no environment knobs beyond the four keys the mains
   * document (cores, dataset, bench output dir, bench passes), no
   * one-off mains in the library packages, no unbuffered frame-log
-  * reads in the streaming package — and the one session's
-  * settings pinned, so a drift from the benchmark's copy fails here
-  * instead of silently timing a different plan. */
+  * reads in the streaming package, one ack-state file per log dir —
+  * and the one session's settings pinned, so a drift from the
+  * benchmark's copy fails here instead of silently timing a different
+  * plan. */
 class SourceLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -66,6 +67,28 @@ class SourceLintSpec extends AnyFunSuite {
       }
     assert(sites.sorted == Seq("graft/streaming/CdcReplaySource.scala:openLines",
       "graft/streaming/CdcReplaySource.scala:readPrefix"), sites.mkString("\n"))
+  }
+
+  test("ack-state file names appear only in the ack-record code") {
+    // one ack record per log dir: a new "_ack…" file elsewhere would be
+    // a second ack state; the names of the sidecars that preceded the
+    // record belong to its one migration read
+    val member = """\n  (?:private(?:\[\w+\])? )?def\s+(\w+)""".r
+    val sites = sources.flatMap { case (f, text) =>
+      "\"_ack[^\"]*\"".r.findAllMatchIn(text).map { m =>
+        val encl = member.findAllMatchIn(text.substring(0, m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse("<none>")
+        (f, encl, m.matched)
+      }
+    }
+    val legacy = Seq("\"_acked_lsn", "\"_acked_offsets", "\"_ack_lag")
+    val bad = sites.filterNot { case (f, encl, lit) =>
+      f == "graft/streaming/CdcReplaySource.scala" && (encl == "legacyAcks" ||
+        Set("ackFile", "withDirLock", "updateAcks")(encl) &&
+          !legacy.exists(lit.startsWith))
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+    assert(sites.count(_._2 == "legacyAcks") == 4, sites.mkString("\n"))
   }
 
   private val tuned = Map(

@@ -63,7 +63,7 @@ class WalSocketChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       // tx 100 finished (tx 200's first frame evidenced it); the
       // 2-frame prefix of tx 200 must be invisible everywhere
       assert(r1.txs.map(_._1) == Seq(100L))
-      assert(CdcReplaySource.lastAckedLsn(dir).contains(100L))
+      assert(CdcReplaySource.acks(dir).lsn.contains(100L))
       assert(readLsns(dir) == Seq(100L))
 
       // reconnect: tx 200 arrives WHOLE (4 frames), never spliced
@@ -86,17 +86,15 @@ class WalSocketChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(readLsns(dir) == Seq(100L, 200L, 300L))
 
       // simulate a crash mid-append: tear the final line mid-hex and
-      // regress the sidecar to the position its ack actually covered
+      // regress the ack record to the position its ack actually covered
       val f = new java.io.File(dir, "part-0.jsonl")
       val lines = scala.io.Source.fromFile(f).getLines().toVector
       val torn = lines.init :+ lines.last.take(lines.last.length / 2)
       val w = new java.io.PrintWriter(f)
       torn.init.foreach(w.println)
       w.print(torn.last); w.close()
-      CdcReplaySource.ackSidecar(dir).delete()
-      CdcReplaySource.slotAckSidecar(dir, "slot_torn").delete()
-      CdcReplaySource.writeAckedLsn(dir, 200L)
-      CdcReplaySource.writeSlotAckedLsn(dir, "slot_torn", 200L)
+      CdcReplaySource.updateAcks(dir)(r => r.copy(lsn = Some(200L),
+        slots = r.slots.updated("slot_torn", 200L)))
 
       // the reader must see exactly the two complete transactions
       assert(readLsns(dir) == Seq(100L, 200L))
@@ -195,13 +193,13 @@ class WalSocketChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("walchaos-flap")
     try {
       var sessions = 0
-      while (!CdcReplaySource.lastAckedLsn(dir).contains(n * 100L)
+      while (!CdcReplaySource.acks(dir).lsn.contains(n * 100L)
           && sessions < 3 * n) {
         new WalSocketClient("127.0.0.1", server.port,
           new PgoutputFormat(), "slot_chaos2", dir, shard = sessions).run()
         sessions += 1
       }
-      assert(CdcReplaySource.lastAckedLsn(dir).contains(n * 100L),
+      assert(CdcReplaySource.acks(dir).lsn.contains(n * 100L),
         s"did not drain after $sessions sessions")
       // exactly once: every lsn present, none duplicated, across all
       // the per-session shard files

@@ -11,7 +11,7 @@ import graft.streaming.CdcReplaySource
 
 /** Group commit in the socket client: completed transactions collect
   * while more input is already buffered, and one log write, one
-  * sidecar publication and one standby status cover the group when
+  * ack-record update and one standby status cover the group when
   * the receive buffer drains or the group fills. Every check here
   * counts; none times anything.
   */
@@ -34,17 +34,17 @@ class WalSocketGroupCommitSpec extends AnyFunSuite {
 
   /** A status hook asserting durable-before-ack: when the server
     * receives flushed = L + 1, the log already holds the complete line
-    * of every transaction at or below L, and the slot's sidecar is
-    * already at L or past it. Faults are collected, not thrown (the
-    * hook runs on the server's ack-reader thread). */
+    * of every transaction at or below L, and the slot's entry in the
+    * ack record is already at L or past it. Faults are collected, not
+    * thrown (the hook runs on the server's ack-reader thread). */
   private def durableBeforeAck(dir: String, slot: String, lsns: Seq[Long],
       faults: ConcurrentLinkedQueue[String])(st: Transport.StandbyStatus): Unit = {
     val l = st.flushed - 1
     val missing = lsns.filter(_ <= l).toSet -- loggedLsns(dir)
     if (missing.nonEmpty)
       faults.add(s"ack of $l arrived before lines ${missing.toSeq.sorted.take(5)}")
-    if (!CdcReplaySource.lastSlotAckedLsn(dir, slot).exists(_ >= l))
-      faults.add(s"ack of $l arrived before the slot sidecar reached it")
+    if (!CdcReplaySource.acks(dir).slot(slot).exists(_ >= l))
+      faults.add(s"ack of $l arrived before the slot's record entry reached it")
   }
 
   test("a 2000-transaction backlog in one write: one ack per full group, " +
@@ -66,7 +66,7 @@ class WalSocketGroupCommitSpec extends AnyFunSuite {
       info(s"$statuses standby statuses, ${r.groupCommits} publications")
       assert(statuses <= bound, s"$statuses standby statuses for $n txs")
       assert(r.groupCommits <= bound,
-        s"${r.groupCommits} sidecar publications for $n txs")
+        s"${r.groupCommits} ack-record updates for $n txs")
       assert(faults.isEmpty, faults.asScala.mkString("\n"))
     } finally server.close()
   }

@@ -67,7 +67,7 @@ class WalSocketSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(sts.nonEmpty)
       assert(sts.forall(s => s.written == s.flushed && s.flushed == s.applied))
       assert(server.confirmedFlush == 501L)
-      assert(CdcReplaySource.lastAckedLsn(dir).contains(500L))
+      assert(CdcReplaySource.acks(dir).lsn.contains(500L))
 
       // the delivered log IS a cdc-replay log: subscribe from zero and
       // count the decoded frame rows (4 frames per tx)
@@ -145,7 +145,7 @@ class WalSocketSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(r.txs.forall { case (lsn, frames) =>
         frames.map(_.toSeq) == log.find(_._1 == lsn).get._2.map(_.toSeq) })
       assert(server.confirmedFlush == 301L)
-      assert(CdcReplaySource.lastAckedLsn(dir).contains(300L))
+      assert(CdcReplaySource.acks(dir).lsn.contains(300L))
       assert(server.tlsSessions == 1, "the wire must have been upgraded")
       // r11 verdict ask 2: over TLS the client must PREFER the
       // channel-bound mechanism — this pins that a real socket
@@ -176,7 +176,7 @@ class WalSocketSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(server.startCommands(1).contains(Lsn.format(200L)),
         "second handshake must resume after the confirmed position")
       assert(server.tlsSessions == 2, "both sessions upgraded")
-      assert(CdcReplaySource.lastAckedLsn(dir).contains(400L))
+      assert(CdcReplaySource.acks(dir).lsn.contains(400L))
     } finally server.close()
   }
 
@@ -252,7 +252,7 @@ class WalSocketSpec extends AnyFunSuite with BeforeAndAfterAll {
       // checked, not skipped) and nothing was replicated or acked
       assert(server.negotiatedSaslMechanisms == Seq(Scram.MechanismPlus))
       assert(server.confirmedFlush == 0L, "no ack may survive a MITM")
-      assert(CdcReplaySource.lastAckedLsn(dir).isEmpty)
+      assert(CdcReplaySource.acks(dir).lsn.isEmpty)
     } finally { server.close(); ps.close() }
   }
 
@@ -267,7 +267,7 @@ class WalSocketSpec extends AnyFunSuite with BeforeAndAfterAll {
           tls = true).run()
       }
       assert(ex.getMessage.contains("refused TLS"))
-      assert(CdcReplaySource.lastAckedLsn(dir).isEmpty)
+      assert(CdcReplaySource.acks(dir).lsn.isEmpty)
     } finally server.close()
   }
 
@@ -431,7 +431,7 @@ class WalSocketSpec extends AnyFunSuite with BeforeAndAfterAll {
         ex.getCause.isInstanceOf[javax.net.ssl.SSLException],
         s"expected an SSL validation failure, got $ex")
       // nothing was delivered and nothing acked
-      assert(CdcReplaySource.lastAckedLsn(dir).isEmpty)
+      assert(CdcReplaySource.acks(dir).lsn.isEmpty)
       assert(server.startupParams.isEmpty,
         "startup must not have been sent on a rejected channel")
     } finally server.close()
@@ -460,7 +460,7 @@ class WalSocketSpec extends AnyFunSuite with BeforeAndAfterAll {
         new PgoutputFormat(), "slot_cd", dir, shard = 0).run()
       // clean COPY exit: everything delivered, nothing replays
       assert(r.txs.map(_._1) == log.map(_._1))
-      assert(CdcReplaySource.lastAckedLsn(dir).contains(300L))
+      assert(CdcReplaySource.acks(dir).lsn.contains(300L))
       assert(server.confirmedFlush == 301L)
     } finally server.close()
   }
@@ -480,7 +480,7 @@ class WalSocketSpec extends AnyFunSuite with BeforeAndAfterAll {
       // acked; tx2 was IN FLIGHT when the error arrived — an error is
       // not evidence of tx completeness, so it stays unconfirmed and
       // replays (the same at-least-once rule as a silent cut)
-      assert(CdcReplaySource.lastAckedLsn(dir).contains(100L))
+      assert(CdcReplaySource.acks(dir).lsn.contains(100L))
       val r2 = new WalSocketClient("127.0.0.1", server.port,
         new PgoutputFormat(), "slot_err", dir, shard = 1).run()
       assert(r2.txs.map(_._1) == Seq(200L, 300L, 400L))
@@ -568,24 +568,24 @@ class WalSocketSpec extends AnyFunSuite with BeforeAndAfterAll {
       val rA = new WalSocketClient("127.0.0.1", server.port,
         new PgoutputFormat(), "slot_a", dir, shard = 0).run()
       assert(rA.txs.map(_._1) == Seq(100L, 200L, 300L))
-      assert(CdcReplaySource.lastAckedLsn(dir).contains(300L))
-      assert(CdcReplaySource.lastSlotAckedLsn(dir, "slot_a")
+      assert(CdcReplaySource.acks(dir).lsn.contains(300L))
+      assert(CdcReplaySource.acks(dir).slot("slot_a")
         .contains(300L))
       // fresh slot in a per-slot-aware dir: no borrowed position
-      assert(CdcReplaySource.lastSlotAckedLsn(dir, "slot_b").isEmpty)
+      assert(CdcReplaySource.acks(dir).slot("slot_b").isEmpty)
       val rB = new WalSocketClient("127.0.0.1", server.port,
         new PgoutputFormat(), "slot_b", dir, shard = 1).run()
       assert(rB.txs.map(_._1) == Seq(100L, 200L, 300L),
         "a fresh slot must not resume from another slot's ack")
       assert(server.startCommands(1).contains(Lsn.format(0L)))
-      assert(CdcReplaySource.lastSlotAckedLsn(dir, "slot_b")
+      assert(CdcReplaySource.acks(dir).slot("slot_b")
         .contains(300L))
     } finally server.close()
   }
 
   test("a first ack on a fresh dir records only its own shard " +
       "(the per-shard floor stays open)") {
-    // the socket client's _acked_offsets entry must not floor shards
+    // the socket client's offsets entry must not floor shards
     // it never acked: a lagging slot's shard in the same dir resumes
     // from its own position on a no-checkpoint subscribe
     val log = (1 to 3).map(i => tx(i * 100L, i))
@@ -594,11 +594,11 @@ class WalSocketSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       new WalSocketClient("127.0.0.1", server.port,
         new PgoutputFormat(), "slot_a", dir, shard = 0).run()
-      val so = CdcReplaySource.lastAckedOffsets(dir).get
+      val so = CdcReplaySource.acks(dir).offsets.get
       assert(so.of("part-0.jsonl") == 300L)
       assert(so.floor == Long.MinValue,
         s"the first ack lifted every shard's floor: ${so.json()}")
-      assert(CdcReplaySource.lastAckedLsn(dir).contains(300L))
+      assert(CdcReplaySource.acks(dir).lsn.contains(300L))
     } finally server.close()
   }
 
@@ -693,7 +693,7 @@ class WalSocketSpec extends AnyFunSuite with BeforeAndAfterAll {
       // ever evidences that tx's completeness, so the client must NOT
       // deliver it this session — it replays on reconnect instead
       assert(r1.txs.map(_._1) == Seq(100L, 200L))
-      assert(CdcReplaySource.lastAckedLsn(dir).contains(200L))
+      assert(CdcReplaySource.acks(dir).lsn.contains(200L))
 
       val r2 = new WalSocketClient("127.0.0.1", server.port,
         new PgoutputFormat(), "slot_rc", dir, shard = 1).run()

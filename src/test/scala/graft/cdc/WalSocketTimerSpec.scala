@@ -34,14 +34,14 @@ class WalSocketTimerSpec extends AnyFunSuite {
         s"expected the timer to re-ack during silence, saw $repeats " +
           s"status(es): ${server.receivedStatuses}")
       assert(r.acksSent >= 2)
-      // the live session published its ack-lag census sidecar (r14
-      // verdict ask 7): q293's schema fields, ≥ 1 frame measured,
-      // and the timer's liveness re-acks measured nothing twice
-      val sidecar = graft.streaming.CdcReplaySource
-        .ackLagSidecar(dir, "slot_timer")
-      assert(sidecar.exists, s"missing ack-lag sidecar: $sidecar")
+      // the live session published its ack-lag census into the ack
+      // record (r14 verdict ask 7): q293's schema fields, ≥ 1 frame
+      // measured, and the timer's liveness re-acks measured nothing twice
+      val record = graft.streaming.CdcReplaySource.ackFile(dir)
+      assert(record.exists, s"missing ack record: $record")
       val json = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(java.nio.file.Files.readString(sidecar.toPath))
+        .readTree(java.nio.file.Files.readString(record.toPath))
+        .path("lag").path("slot_timer")
       assert(json.path("shard").asText() == "part-0.jsonl")
       assert(json.path("n_frames").asLong() == 1L,
         "one delivered transaction -> one measured frame, however " +

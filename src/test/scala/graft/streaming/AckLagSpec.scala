@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 
 /** q293's live twin (r14 verdict ask 7): the ack scheduler's own
   * send/receive timestamps feed an exact integer-second lag census
-  * published to the `_ack_lag@<slot>` sidecar and read back by
+  * published into the ack record's slot entry and read back by
   * [[StreamOps.ackLagReport]] with q293's exact column schema. The
   * delayed-ack leg drives [[graft.cdc.AckScheduler]] on an injected
   * clock: deliveries pile up during a quiet window, the timer's
@@ -68,11 +68,11 @@ class AckLagSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("acklag").toString
     val a = graft.cdc.AckLagCensus.Stats(100L, 2L, 30L, 45L, 980L)
     val b = graft.cdc.AckLagCensus.Stats(64L, 1L, 5L, 9L, 1000L)
-    CdcReplaySource.writeAckLag(dir, "slot_a", "part-0.jsonl", a)
-    CdcReplaySource.writeAckLag(dir, "slot_b", "part-1.jsonl", b)
+    CdcReplaySource.updateAcks(dir)(_.withLag("slot_a", "part-0.jsonl", a))
+    CdcReplaySource.updateAcks(dir)(_.withLag("slot_b", "part-1.jsonl", b))
     // latest census wins (metrics snapshot, no monotonicity guard)
-    CdcReplaySource.writeAckLag(dir, "slot_a", "part-0.jsonl",
-      a.copy(nFrames = 101L))
+    CdcReplaySource.updateAcks(dir)(_.withLag("slot_a", "part-0.jsonl",
+      a.copy(nFrames = 101L)))
     val rep = StreamOps.ackLagReport(spark, dir)
     assert(rep.columns.toSeq == Seq("shard", "n_frames", "p50_lag_sec",
       "p99_lag_sec", "max_lag_sec", "slo_milli"),
@@ -82,7 +82,7 @@ class AckLagSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.toSeq == Seq(
       ("part-0.jsonl", 101L, 2L, 30L, 45L, 980L),
       ("part-1.jsonl", 64L, 1L, 5L, 9L, 1000L)))
-    // the sidecars do not leak into the frame-log file listing
+    // the ack record does not leak into the frame-log file listing
     assert(CdcReplaySource.listLogFiles(dir).isEmpty)
   }
 }

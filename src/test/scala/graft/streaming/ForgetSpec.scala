@@ -403,8 +403,8 @@ class ForgetSpec extends AnyFunSuite with BeforeAndAfterAll {
       200L -> Seq(payload("insert doc=42 beta"))))
     CdcReplaySource.writeLogShard(log, 1, Seq(
       50L -> Seq(payload("update doc=42 gamma"))))
-    CdcReplaySource.writeAckedOffsets(log, ShardOffsets(Long.MinValue,
-      Map("part-0.jsonl" -> 100L)))
+    CdcReplaySource.updateAcks(log)(_.ackShards(ShardOffsets(Long.MinValue,
+      Map("part-0.jsonl" -> 100L))))
     // forget docs 41 and 42: 41's only frame is already droppable
     // (acked past), 42 persists in two retained transactions
     StreamOps.forgetBatch(s"$root/frep", frameLogDir = Some(log))(
@@ -414,8 +414,8 @@ class ForgetSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"doc 42 persists at lsn 200 (shard 0) and lsn 50 (shard 1): $rep")
     // enforcement catches up: every slot acks past everything, the
     // log truncates, and a repeat request measures zero exposure
-    CdcReplaySource.writeAckedOffsets(log, ShardOffsets(Long.MinValue,
-      Map("part-0.jsonl" -> 200L, "part-1.jsonl" -> 50L)))
+    CdcReplaySource.updateAcks(log)(_.ackShards(ShardOffsets(Long.MinValue,
+      Map("part-0.jsonl" -> 200L, "part-1.jsonl" -> 50L))))
     CdcReplaySource.truncateFrameLog(log)
     StreamOps.forgetBatch(s"$root/frep", frameLogDir = Some(log))(
       docs(41L -> textX, 42L -> textY), 1L)

@@ -179,11 +179,11 @@ class LiveAnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
       // second slot's stream, flushed late — written at the log
       // level for brevity; since r10 a real second slot's client
       // would behave identically, because socket clients resume from
-      // their PER-SLOT confirmed position (_acked_lsn@<slot>), never
+      // their PER-SLOT confirmed position in the ack record, never
       // from another slot's global ack — WalSocketSpec "two slots
       // resume independently" pins that path on live sockets, and a
       // restarted SUBSCRIPTION gets the same guarantee from the
-      // per-shard _acked_offsets sidecar via startingOffsets)
+      // per-shard offsets of the ack record via startingOffsets)
       CdcReplaySource.writeLogShard(dir, 1, Seq(
         tx(450L, PgoutputWriter.insert(902, Seq("4", "40")))))
       q.processAllAvailable()

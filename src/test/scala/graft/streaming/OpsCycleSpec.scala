@@ -92,8 +92,8 @@ class OpsCycleSpec extends AnyFunSuite with BeforeAndAfterAll {
       100L -> Seq(payload("insert doc=1 a")),
       200L -> Seq(payload("insert doc=2 b")),
       300L -> Seq(payload("insert doc=3 c"))))
-    CdcReplaySource.writeAckedOffsets(log, ShardOffsets(Long.MinValue,
-      Map("part-0.jsonl" -> 100L)))
+    CdcReplaySource.updateAcks(log)(_.ackShards(ShardOffsets(Long.MinValue,
+      Map("part-0.jsonl" -> 100L))))
     val h0 = health()
     assert(!h0("dedup_index")._1,
       s"freshly ingested stores must read healthy: $h0")
@@ -143,8 +143,8 @@ class OpsCycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(StreamOps.compactDfSidecar(spark, df,
       trainGramsDir = Some(tg)) == 2L)
     // WAL: consumers ack to head, truncation recycles at the floors
-    CdcReplaySource.writeAckedOffsets(log, ShardOffsets(Long.MinValue,
-      Map("part-0.jsonl" -> 300L)))
+    CdcReplaySource.updateAcks(log)(_.ackShards(ShardOffsets(Long.MinValue,
+      Map("part-0.jsonl" -> 300L))))
     val dropped = CdcReplaySource.truncateFrameLog(log)
     assert(dropped("part-0.jsonl") == 3L, s"dropped: $dropped")
 

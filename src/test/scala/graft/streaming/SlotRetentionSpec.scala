@@ -6,7 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Slot/WAL retention accounting against the replay store's OWN ack
-  * sidecars (q280's live counterpart): retained work per shard must
+  * record (q280's live counterpart): retained work per shard must
   * track exactly what the A9/A10 bookkeeping says is unconfirmed —
   * shrink as acks advance, and report EVERYTHING retained for a slot
   * nobody has acked (the disk-filling failure mode the census
@@ -38,7 +38,7 @@ class SlotRetentionSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(tx(100L), tx(200L), tx(300L), tx(400L)))
     CdcReplaySource.writeLogShard(root, 1, Seq(tx(150L), tx(250L)))
 
-    // no sidecar yet: everything on both shards is unconfirmed
+    // no ack record yet: everything on both shards is unconfirmed
     val r0 = StreamOps.slotRetentionReport(spark, root)
       .collect().map(r => r.getAs[String]("shard") ->
         (r.getAs[Long]("n_retained"), r.getAs[Long]("retained_bytes")))
@@ -47,8 +47,8 @@ class SlotRetentionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r0("part-1.jsonl") == ((2L, 60L)))
 
     // shard 0 acked through 200, shard 1 through 250
-    CdcReplaySource.writeAckedOffsets(root, ShardOffsets(Long.MinValue,
-      Map("part-0.jsonl" -> 200L, "part-1.jsonl" -> 250L)))
+    CdcReplaySource.updateAcks(root)(_.ackShards(ShardOffsets(Long.MinValue,
+      Map("part-0.jsonl" -> 200L, "part-1.jsonl" -> 250L))))
     val r1 = StreamOps.slotRetentionReport(spark, root)
       .collect().map(r => r.getAs[String]("shard") ->
         (r.getAs[Long]("floor_lsn"), r.getAs[Long]("n_retained"),
@@ -65,10 +65,10 @@ class SlotRetentionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(tight.getAs[Long]("cap_milli") == 1200L,
       s"60 bytes over a 50-byte cap must read 1200 milli: $tight")
 
-    // acks only advance (the sidecar contract): catching shard 0 up
+    // acks only advance (the ack-record contract): catching shard 0 up
     // to head drains its retention to zero
-    CdcReplaySource.writeAckedOffsets(root, ShardOffsets(Long.MinValue,
-      Map("part-0.jsonl" -> 400L)))
+    CdcReplaySource.updateAcks(root)(_.ackShards(ShardOffsets(Long.MinValue,
+      Map("part-0.jsonl" -> 400L))))
     val r2 = StreamOps.slotRetentionReport(spark, root)
       .filter(r => r.getAs[String]("shard") == "part-0.jsonl")
       .head()
@@ -91,8 +91,8 @@ class SlotRetentionSpec extends AnyFunSuite with BeforeAndAfterAll {
     // truncation untouched for the reader's own torn-tail handling
     val f1 = new java.io.FileWriter(s"$root/part-1.jsonl", true)
     try f1.write("{\"lsn\":999,\"frames\":[\"2a") finally f1.close()
-    CdcReplaySource.writeAckedOffsets(root, ShardOffsets(Long.MinValue,
-      Map("part-0.jsonl" -> 200L, "part-1.jsonl" -> 250L)))
+    CdcReplaySource.updateAcks(root)(_.ackShards(ShardOffsets(Long.MinValue,
+      Map("part-0.jsonl" -> 200L, "part-1.jsonl" -> 250L))))
 
     def readLsns(): Set[Long] =
       spark.read.format(CdcReplaySource.FORMAT).option("path", root)
@@ -122,9 +122,9 @@ class SlotRetentionSpec extends AnyFunSuite with BeforeAndAfterAll {
     // part-0 acked to head (400) but slot 'lagging' confirmed only to
     // 350, the min-over-consumers rule keeps 400 and drops just 300 —
     // PostgreSQL's min(confirmed_flush_lsn) WAL-recycling contract
-    CdcReplaySource.writeAckedOffsets(root, ShardOffsets(Long.MinValue,
-      Map("part-0.jsonl" -> 400L)))
-    CdcReplaySource.writeSlotAckedLsn(root, "lagging", 350L)
+    CdcReplaySource.updateAcks(root)(_.ackShards(ShardOffsets(Long.MinValue,
+      Map("part-0.jsonl" -> 400L))))
+    CdcReplaySource.updateAcks(root)(_.ackSlot("lagging", 350L))
     val d2 = CdcReplaySource.truncateFrameLog(root)
     assert(d2("part-0.jsonl") == 1L, s"dropped: $d2")
     assert(readLsns() == Set(400L, 500L),
@@ -142,9 +142,9 @@ class SlotRetentionSpec extends AnyFunSuite with BeforeAndAfterAll {
       .createTempDirectory("graft-slot-lag").toString
     CdcReplaySource.writeLogShard(root, 0,
       Seq(tx(100L), tx(200L), tx(300L)))
-    CdcReplaySource.writeAckedOffsets(root, ShardOffsets(Long.MinValue,
-      Map("part-0.jsonl" -> 300L)))
-    CdcReplaySource.writeSlotAckedLsn(root, "lagging-slot", 100L)
+    CdcReplaySource.updateAcks(root)(_.ackShards(ShardOffsets(Long.MinValue,
+      Map("part-0.jsonl" -> 300L))))
+    CdcReplaySource.updateAcks(root)(_.ackSlot("lagging-slot", 100L))
     val rep = StreamOps.slotRetentionReport(spark, root).head()
     assert(rep.getAs[Long]("floor_lsn") == 100L,
       s"floor must be the min over ALL consumers: $rep")

@@ -177,7 +177,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(progress.forall(_.numInputRows <= 7))
   }
 
-  test("transformWithState snapshot (RocksDB state-v2) equals logical replay") {
+  test("statefulSnapshot on RocksDB state store equals logical replay") {
     val sp = spark; import sp.implicits._
     val prevProvider =
       spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
@@ -191,7 +191,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         .select(col("table"), col("tuple")("id").as("key"), col("lsn"),
           col("op"), col("tuple"))
         .as[StreamOps.KeyedChange]
-      val snap = StreamOps.statefulSnapshotTws(changes)
+      val snap = StreamOps.statefulSnapshot(changes)
       val q = snap.writeStream
         .format("memory").queryName("snap_tws")
         .outputMode("update")
@@ -224,11 +224,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("commit persists the acked LSN (standby-status analogue)") {
     // Spark commits batch N's offset when batch N+1 starts, so the
-    // sidecar holds the second-to-last boundary after AvailableNow
+    // ack record holds the second-to-last boundary after AvailableNow
     // completes — same deferred-ack shape as the reference's
     // auto-ack-after-delivery (A10). 40 tx / 7 per trigger ⇒ last
     // committed boundary is >= 350.
-    val acked = CdcReplaySource.lastAckedLsn(logDir)
+    val acked = CdcReplaySource.acks(logDir).lsn
     assert(acked.exists(_ >= 350L), s"acked=$acked")
   }
 
@@ -284,6 +284,21 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         (r.getAs[Long]("lsn"), r.getAs[Map[String, String]]("tuple")("name")))
       .toMap
     assert(snap == expectedSnapshot())
+  }
+
+  test("upsert keeps every row across a crash inside its publish") {
+    val sp = spark; import sp.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("upcrash").toString + "/snap"
+    def batch(i: Int) = Seq(StreamOps.KeyedChange("users", i.toString,
+      i * 10L, "insert", Map("name" -> s"n$i"))).toDF()
+    StreamOps.upsertBatch(dir)(batch(1), 0L)
+    StreamOps.upsertBatch(dir)(batch(2), 1L)
+    // the publish's crash window: the live snapshot is demoted and its
+    // replacement not yet promoted
+    assert(new java.io.File(dir).renameTo(new java.io.File(dir + "_compact_old")))
+    StreamOps.upsertBatch(dir)(batch(3), 2L)
+    assert(StreamOps.readSnapshot(spark, dir).select("key").as[String]
+      .collect().toSet == Set("1", "2", "3"))
   }
 
   test("stale replayed update cannot resurrect a deleted key (tombstones)") {
