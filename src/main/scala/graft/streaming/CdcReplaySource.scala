@@ -313,10 +313,11 @@ object CdcReplaySource {
   }
 
   /** THE ack write: under the dir lock, read the record, apply `f`,
-    * and publish the result with one temp file + ATOMIC_MOVE when it
-    * changed. The first update of a pre-record dir writes the migrated
-    * record and deletes the old sidecars. Returns whether `f` changed
-    * the record. */
+    * and publish the result with [[Durable.replaceFile]] when it
+    * changed (which also deletes a scratch `_acks*.tmp` a crashed
+    * writer left). The first update of a pre-record dir writes the
+    * migrated record and deletes the old sidecars. Returns whether `f`
+    * changed the record. */
   def updateAcks(path: String)(f: AckRecord => AckRecord): Boolean = {
     // before the lock: withDirLock opens <path>/_acked.lock with
     // CREATE, which throws if the DIRECTORY itself is missing
@@ -326,16 +327,13 @@ object CdcReplaySource {
       val prev = stored.getOrElse(legacyAcks(path))
       val next = f(prev)
       val migrated = stored.isEmpty && prev != AckRecord()
-      if (migrated || next != prev) {
-        val tmp = java.nio.file.Files.createTempFile(
-          java.nio.file.Paths.get(path), "_acks", ".tmp")
-        java.nio.file.Files.write(tmp, AckRecord.json(next)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        java.nio.file.Files.move(tmp, ackFile(path).toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-      // the old sidecars and any temp file a crashed writer left
+      if (migrated || next != prev)
+        Durable.replaceFile(ackFile(path).toPath, "_acks", ".tmp") { tmp =>
+          java.nio.file.Files.write(tmp, AckRecord.json(next)
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          true
+        }
+      // the old sidecars
       if (migrated) new java.io.File(path).listFiles()
         .filter(g => g.getName.startsWith("_ack") &&
           g.getName != "_acked.lock" && g.getName != ackFile(path).getName)
@@ -344,17 +342,41 @@ object CdcReplaySource {
     }
   }
 
+  /** The one rewrite of a frame log's shards, run under the dir lock:
+    * each shard is streamed through `rewrite(name, lines, out)` into a
+    * scratch file `<shard><random><suffix>`, which replaces the shard
+    * when `rewrite` counts a change ([[Durable.replaceFile]]). A crash
+    * leaves each shard whole, old or rewritten (shards are
+    * independent, so there is no multi-file invariant), and a rerun is
+    * idempotent. Returns the per-shard counts. */
+  private def rewriteShards(path: String, suffix: String)(
+      rewrite: (String, Iterator[String], java.io.Writer) => Long)
+      : Map[String, Long] =
+    listLogFiles(path).map { p =>
+      val f = new java.io.File(p)
+      var n = 0L
+      Durable.replaceFile(f.toPath, f.getName, suffix) { tmp =>
+        val src = scala.io.Source.fromFile(f)
+        val out = java.nio.file.Files.newBufferedWriter(tmp,
+          java.nio.charset.StandardCharsets.UTF_8)
+        try n = rewrite(f.getName, src.getLines(), out)
+        finally { out.close(); src.close() }
+        n > 0
+      }
+      f.getName -> n
+    }.toMap
+
   /** WAL recycling for the replay log — the ENFORCEMENT half of the
     * retention story [[graft.streaming.StreamOps.slotRetentionReport]]
     * observes: drop every transaction at or below its shard's
     * [[retentionFloors]] entry, the MINIMUM over every consumer in the
     * ack record — exactly what PostgreSQL does to WAL segments once
     * EVERY slot's `confirmed_flush_lsn` passes them.
-    * Per-file tmp-write + ATOMIC_MOVE: a crash leaves each shard file
-    * either whole or fully truncated (no multi-file invariant — shards
-    * are independent), and a rerun is idempotent. A torn final line
-    * (crash artifact, never acked by the durable-then-ack contract)
-    * is preserved as-is for the reader's own torn-tail handling.
+    * One [[rewriteShards]] pass (scratch suffix `.trunc`), streaming:
+    * never a whole shard in memory (the logs this exists for are the
+    * ones too big to keep). A torn final line (crash artifact, never
+    * acked by the durable-then-ack contract) is preserved for the
+    * reader's own torn-tail handling.
     * Floors are LSNs, so resume positions are untouched: a consumer
     * resuming from its acked floor sees the identical frame sequence
     * before and after truncation. Runs under the directory lock —
@@ -362,49 +384,16 @@ object CdcReplaySource {
     * Returns per-file dropped-transaction counts. */
   def truncateFrameLog(path: String): Map[String, Long] =
     withDirLock(path) {
-      // leaked scratch from a crashed predecessor (write done, move/
-      // delete never reached): invisible to listLogFiles but never
-      // reclaimed otherwise — sweep under the same lock before
-      // creating new ones (r13 advisor finding)
-      Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".trunc"))
-        .foreach(f => { f.delete(); () })
       val floors = retentionFloors(path)
-      listLogFiles(path).map { p =>
-        val f = new java.io.File(p)
-        val nm = f.getName
+      rewriteShards(path, ".trunc") { (nm, lines, out) =>
         val floor = floors(nm)
-        if (floor == Long.MinValue) nm -> 0L
-        else {
-          // single streaming pass: filter into the tmp file while
-          // counting — never the whole shard in memory (the logs this
-          // exists for are the ones too big to keep)
-          val tmp = java.nio.file.Files.createTempFile(
-            f.getParentFile.toPath, nm, ".trunc")
-          try {
-            var dropped = 0L
-            val src = scala.io.Source.fromFile(f)
-            val out = java.nio.file.Files.newBufferedWriter(tmp,
-              java.nio.charset.StandardCharsets.UTF_8)
-            try src.getLines().foreach { l =>
-              if (isComplete(l) && parseLsn(l) <= floor) dropped += 1
-              else { out.write(l); out.write("\n") }
-            } finally { out.close(); src.close() }
-            if (dropped > 0)
-              java.nio.file.Files.move(tmp, f.toPath,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            else java.nio.file.Files.delete(tmp)
-            nm -> dropped
-          } catch {
-            // the filter write failed mid-stream: reclaim the scratch
-            // (the live file is untouched) and rethrow
-            case e: Throwable =>
-              java.nio.file.Files.deleteIfExists(tmp)
-              throw e
-          }
+        var dropped = 0L
+        if (floor != Long.MinValue) lines.foreach { l =>
+          if (isComplete(l) && parseLsn(l) <= floor) dropped += 1
+          else { out.write(l); out.write("\n") }
         }
-      }.toMap
+        dropped
+      }
     }
 
   /** The prefix every redaction frame starts with: logical-message
@@ -473,100 +462,76 @@ object CdcReplaySource {
     * preserves the shard's line count, LSN sequence, and byte
     * offsets' ORDER, so a consumer resuming from its acked floor
     * sees the same transaction boundaries — the scrub changes
-    * payloads, never positions. Per-file tmp + ATOMIC_MOVE under the
-    * directory lock (same crash contract as truncation: each file is
-    * whole-or-scrubbed, reruns idempotent); files without hits are
-    * NOT rewritten (byte-identical — the file-pruned-erasure
-    * contract); a torn final line is preserved as-is. Already-
-    * redacted frames never match again (the redaction frame carries
-    * no subject bytes), so a rerun reports 0. Needles are raw
+    * payloads, never positions. One [[rewriteShards]] pass (scratch
+    * suffix `.scrub`) under the directory lock (same crash contract as
+    * truncation: each file is whole-or-scrubbed, reruns idempotent);
+    * files without hits are NOT replaced (byte-identical — the
+    * file-pruned-erasure contract); a torn final line is preserved
+    * as-is. Already-redacted frames never match again (the redaction
+    * frame carries no subject bytes), so a rerun reports 0. Needles are raw
     * subject bytes as they appear on the wire (pgoutput text datums:
     * the key's UTF-8 rendering); callers own needle specificity —
     * a needle short enough to collide with wire framing would
     * over-scrub, so use full key renderings, not fragments.
     * Returns per-file scrubbed-frame counts. */
   def scrubFrameLog(path: String,
-      needles: Seq[Array[Byte]]): Map[String, Long] =
+      needles: Seq[Array[Byte]]): Map[String, Long] = {
+    val live = needles.filter(_.nonEmpty)
     withDirLock(path) {
-      Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".scrub"))
-        .foreach(f => { f.delete(); () })
-      val live = needles.filter(_.nonEmpty)
-      listLogFiles(path).map { p =>
-        val f = new java.io.File(p)
-        val nm = f.getName
-        if (live.isEmpty) nm -> 0L
-        else {
-          val tmp = java.nio.file.Files.createTempFile(
-            f.getParentFile.toPath, nm, ".scrub")
-          try {
-            var scrubbed = 0L
-            val src = scala.io.Source.fromFile(f)
-            val out = java.nio.file.Files.newBufferedWriter(tmp,
-              java.nio.charset.StandardCharsets.UTF_8)
-            // One-line lookahead so the torn-line branch applies ONLY
-            // to the file's LAST line (the crash-artifact position):
-            // an incomplete line FOLLOWED by more lines is corruption
-            // the replay reader (completeLines) refuses to read past,
-            // and the scrub must mirror that — silently rewriting or
-            // dropping a mid-file tear would destroy evidence of the
-            // corruption it sits in (r14 advisor finding).
-            val it = src.getLines()
-            try it.foreach { l =>
-              val isLast = !it.hasNext
-              if (!isComplete(l)) {
-                if (!isLast) throw new IllegalStateException(
-                  s"$nm has a corrupt frame-log line before end of " +
-                    "file; only a torn final line (crash artifact) is " +
-                    "tolerated — scrub refused")
-                // A torn final line is a crash artifact — by the
-                // durable-then-ack contract it was never acked, so
-                // DROPPING it is always safe (truncateFrameLog's
-                // documented torn-tail reasoning). Preserving it is
-                // the default courtesy to the reader; preserving it
-                // when its partial hex still DECODES to subject
-                // bytes would be a silent compliance hole the scrub
-                // exists to close — so a subject-bearing torn tail
-                // is dropped, counted as one scrub. A preserved tail
-                // is written WITHOUT a trailing newline (a tear
-                // happens mid-write, so the original has none) —
-                // appending one would alter bytes the scrub promised
-                // to keep identical.
-                val partial = decodeHexRuns(l)
-                if (live.exists(containsSlice(partial, _))) scrubbed += 1
-                else out.write(l)
+      rewriteShards(path, ".scrub") { (nm, it, out) =>
+        var scrubbed = 0L
+        // One-line lookahead so the torn-line branch applies ONLY
+        // to the file's LAST line (the crash-artifact position):
+        // an incomplete line FOLLOWED by more lines is corruption
+        // the replay reader (completeLines) refuses to read past,
+        // and the scrub must mirror that — silently rewriting or
+        // dropping a mid-file tear would destroy evidence of the
+        // corruption it sits in (r14 advisor finding).
+        if (live.nonEmpty) it.foreach { l =>
+          val isLast = !it.hasNext
+          if (!isComplete(l)) {
+            if (!isLast) throw new IllegalStateException(
+              s"$nm has a corrupt frame-log line before end of " +
+                "file; only a torn final line (crash artifact) is " +
+                "tolerated — scrub refused")
+            // A torn final line is a crash artifact — by the
+            // durable-then-ack contract it was never acked, so
+            // DROPPING it is always safe (truncateFrameLog's
+            // documented torn-tail reasoning). Preserving it is
+            // the default courtesy to the reader; preserving it
+            // when its partial hex still DECODES to subject
+            // bytes would be a silent compliance hole the scrub
+            // exists to close — so a subject-bearing torn tail
+            // is dropped, counted as one scrub. A preserved tail
+            // is written WITHOUT a trailing newline (a tear
+            // happens mid-write, so the original has none) —
+            // appending one would alter bytes the scrub promised
+            // to keep identical.
+            val partial = decodeHexRuns(l)
+            if (live.exists(containsSlice(partial, _))) scrubbed += 1
+            else out.write(l)
+          }
+          else {
+            val frames = parseFrames(l)
+            if (!frames.exists(fr => live.exists(containsSlice(fr, _))))
+              { out.write(l); out.write("\n") } // byte-identical
+            else {
+              val lsn = parseLsn(l)
+              val red = redactionFrame(lsn)
+              val kept = frames.map { fr =>
+                if (live.exists(containsSlice(fr, _))) {
+                  scrubbed += 1; red
+                } else fr
               }
-              else {
-                val frames = parseFrames(l)
-                if (!frames.exists(fr => live.exists(containsSlice(fr, _))))
-                  { out.write(l); out.write("\n") } // byte-identical
-                else {
-                  val lsn = parseLsn(l)
-                  val red = redactionFrame(lsn)
-                  val kept = frames.map { fr =>
-                    if (live.exists(containsSlice(fr, _))) {
-                      scrubbed += 1; red
-                    } else fr
-                  }
-                  out.write(formatLine(lsn, kept))
-                  out.write("\n")
-                }
-              }
-            } finally { out.close(); src.close() }
-            if (scrubbed > 0)
-              java.nio.file.Files.move(tmp, f.toPath,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            else java.nio.file.Files.delete(tmp)
-            nm -> scrubbed
-          } catch {
-            case e: Throwable =>
-              java.nio.file.Files.deleteIfExists(tmp)
-              throw e
+              out.write(formatLine(lsn, kept))
+              out.write("\n")
+            }
           }
         }
-      }.toMap
+        scrubbed
+      }
     }
+  }
 
   /** Per-shard retention floors ([[AckRecord.floors]]) of the log's
     * shard files, from one read of the record: ONE derivation shared
@@ -690,63 +655,56 @@ class CdcReplayScanBuilder(options: CaseInsensitiveStringMap)
 case class ShardOffsets(floor: Long, shards: Map[String, Long])
     extends Offset {
   def of(name: String): Long = math.max(floor, shards.getOrElse(name, floor))
-  override def json(): String = {
-    // shard names are file names, but nothing stops a producer from
-    // creating one with a quote or backslash — escape, or the offset
-    // JSON (and the checkpoint it lands in) is corrupt
-    val items = shards.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + ShardOffsets.escape(k) + "\":" + v }
-      .mkString(",")
-    s"""{"floor":$floor,"shards":{$items}}"""
-  }
+  /** `{"floor":F,"shards":{...}}`, names sorted: Spark compares offsets
+    * by this string, so its bytes must stay as checkpoints hold them. */
+  override def json(): String = ShardOffsets.mapper.writeValueAsString(
+    ShardOffsets.write(this, ShardOffsets.mapper.createObjectNode()))
 }
 
 object ShardOffsets {
-  // value = escaped JSON string: backslash-escapes stay paired
-  private val Entry = "\"((?:[^\"\\\\]|\\\\.)*)\":(-?\\d+)".r
+  /** The one JSON codec of the offsets and the [[AckRecord]] holding
+    * them. */
+  private[streaming] val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private[streaming] def escape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c => c.toString
-    }
+  /** Writes `so`'s fields into `n`, names sorted; returns `n`. */
+  private[streaming] def write(so: ShardOffsets,
+      n: com.fasterxml.jackson.databind.node.ObjectNode)
+      : com.fasterxml.jackson.databind.node.ObjectNode = {
+    val sh = n.put("floor", so.floor).putObject("shards")
+    so.shards.toSeq.sorted.foreach { case (k, v) => sh.put(k, v) }
+    n
+  }
 
-  private def unescape(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) { b += s.charAt(i + 1); i += 2 }
-      else { b += c; i += 1 }
+  /** The offsets in a JSON object; a missing `shards` is floor-only. */
+  private[streaming] def read(j: com.fasterxml.jackson.databind.JsonNode)
+      : ShardOffsets = {
+    def lsn(v: com.fasterxml.jackson.databind.JsonNode): Long = {
+      require(v != null && v.isIntegralNumber && v.canConvertToLong,
+        s"not an LSN: $v")
+      v.asLong()
     }
-    b.result()
+    require(j != null && j.isObject, s"not an offsets object: $j")
+    val sh = Option(j.get("shards")).getOrElse(mapper.createObjectNode())
+    require(sh.isObject, s"not a shards object: $sh")
+    ShardOffsets(lsn(j.get("floor")),
+      sh.properties().asScala.map(e => e.getKey -> lsn(e.getValue)).toMap)
   }
 
   /** Throws IllegalArgumentException on anything that is not a
     * cdc-replay offset (progress listeners key off that exact type to
     * skip other sources' offsets — a malformed string must not escape
-    * as StringIndexOutOfBounds/NumberFormat from inside a callback). */
-  def parse(json: String): ShardOffsets = try {
+    * as another exception from inside a callback). */
+  def parse(json: String): ShardOffsets = {
     val t = json.trim
-    if (t.nonEmpty && t.forall(c => c.isDigit || c == '-'))
-      return ShardOffsets(t.toLong, Map.empty) // legacy single watermark
-    val floor = "\"floor\":(-?\\d+)".r.findFirstMatchIn(t)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalArgumentException(
-        s"not a cdc-replay offset: $json"))
-    // a floor with no shards map is a valid (floor-only) offset
-    val shards = t.indexOf("\"shards\"") match {
-      case -1 => Map.empty[String, Long]
-      case i => Entry.findAllMatchIn(t.substring(i))
-        .filter(_.group(1) != "shards")
-        .map(m => unescape(m.group(1)) -> m.group(2).toLong).toMap
+    try {
+      if (t.nonEmpty && t.forall(c => c.isDigit || c == '-'))
+        ShardOffsets(t.toLong, Map.empty) // legacy single watermark
+      else read(mapper.readTree(t))
+    } catch {
+      case e @ (_: IllegalArgumentException |
+          _: com.fasterxml.jackson.core.JsonProcessingException) =>
+        throw new IllegalArgumentException(s"not a cdc-replay offset: $json", e)
     }
-    ShardOffsets(floor, shards)
-  } catch {
-    case e: IllegalArgumentException => throw e
-    case e: Exception => throw new IllegalArgumentException(
-      s"not a cdc-replay offset: $json", e)
   }
 
   def from(o: Offset): ShardOffsets = o match {
@@ -821,7 +779,7 @@ final case class AckRecord(
 }
 
 object AckRecord {
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  import ShardOffsets.mapper
   private type Node = com.fasterxml.jackson.databind.JsonNode
 
   private def fields(n: Node): Map[String, Node] =
@@ -842,8 +800,7 @@ object AckRecord {
       s"unsupported ack record version: ${j.path("version")}")
     AckRecord(
       Option(j.get("lsn")).map(_.asLong()),
-      Option(j.get("offsets")).map(o => ShardOffsets(o.path("floor").asLong(),
-        fields(o.path("shards")).map { case (k, v) => k -> v.asLong() })),
+      Option(j.get("offsets")).map(ShardOffsets.read),
       fields(j.path("slots")).map { case (k, v) => k -> v.asLong() },
       fields(j.path("lag")).map { case (k, v) => k -> lagOf(v) })
   }
@@ -851,11 +808,7 @@ object AckRecord {
   def json(r: AckRecord): String = {
     val o = mapper.createObjectNode().put("version", 1)
     r.lsn.foreach(o.put("lsn", _))
-    r.offsets.foreach { so =>
-      val n = o.putObject("offsets").put("floor", so.floor)
-      val sh = n.putObject("shards")
-      so.shards.toSeq.sorted.foreach { case (k, v) => sh.put(k, v) }
-    }
+    r.offsets.foreach(ShardOffsets.write(_, o.putObject("offsets")))
     val slots = o.putObject("slots")
     r.slots.toSeq.sorted.foreach { case (k, v) => slots.put(k, v) }
     val lag = o.putObject("lag")

@@ -21,40 +21,15 @@ import graft.cdc.CdcFunctions
   * max_by-LSN merge sink (post-agg).
   */
 object StreamOps {
-  /** Commit-marker idempotency check shared by every foreachBatch
-    * probe: true iff `markerDir` already holds a row for `batchId`.
-    * Only the two DEFINITIVE no-marker states map to "not done":
-    * PATH_NOT_FOUND (dir doesn't exist yet) and UNABLE_TO_INFER_SCHEMA
-    * (dir pre-created but holds no parquet — e.g. by a sink's own
-    * setup). Any OTHER read failure rethrows so the engine retries
-    * the batch: swallowing a transient error as "not done" would
-    * replay a COMMITTED batch and append a duplicate report row for
-    * its batch_id — the data writes stay idempotent, but
-    * head()-per-batch_id report readers would see two rows (r12
-    * advisor finding). */
-  /** Optional parquet read shared by every store consumer: None for
-    * the two DEFINITIVE empty states (missing dir, dir without
-    * parquet); any other failure rethrows so callers retry instead of
-    * mistaking a transient error for an empty store. */
-  private[streaming] def readParquetOpt(spark: SparkSession,
-      dir: String): Option[DataFrame] =
-    try Some(spark.read.parquet(dir))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
-    }
+  import Durable.readParquetOpt
 
-  private def batchCommitted(spark: SparkSession, markerDir: String,
-      batchId: Long): Boolean =
-    try spark.read.parquet(markerDir)
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            e.getCondition == "UNABLE_TO_INFER_SCHEMA" => false
-    }
-
+  /** Whether `df` holds a row whose `column` is `v`: the commit-marker
+    * and generation-guard test of the foreachBatch sinks, applied as
+    * `readParquetOpt(...).exists(hasRow(...))`, so only a missing or
+    * empty store reads as "not done" and any other read failure fails
+    * the batch for the engine to retry. */
+  private def hasRow(column: String, v: Long)(df: DataFrame): Boolean =
+    df.filter(col(column) === v).limit(1).count() > 0
 
   /** One decoded DML change per output element; errors either rethrow
     * (fail-fast) or become a dead-letter element. */
@@ -511,83 +486,50 @@ object StreamOps {
   def shingleArrivals(arrivals: DataFrame): DataFrame =
     graft.ops.Text.shinglesOf(arrivals)
 
-  private def delTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(delTree)
-    f.delete(); ()
-  }
-
-  /** Recovery half of the crash-safe compaction publish: promotes a
-    * complete `_compact_tmp` (crash landed between demoting the live
-    * dir and promoting the compacted one — tmp is always fully
-    * written before the demote), or restores `_compact_old` (tmp
-    * already consumed), then clears leftovers. Idempotent; a no-op
-    * when the live dir is healthy. */
-  def recoverCompaction(indexDir: String): Unit = {
-    val dst = new java.io.File(indexDir)
-    val oldF = new java.io.File(indexDir + "_compact_old")
-    val tmp = new java.io.File(indexDir + "_compact_tmp")
-    if (!dst.exists && tmp.exists) {
-      if (!tmp.renameTo(dst))
-        throw new java.io.IOException(
-          s"compaction recovery failed: $tmp -> $indexDir")
-    } else if (!dst.exists && oldF.exists) {
-      if (!oldF.renameTo(dst))
-        throw new java.io.IOException(
-          s"compaction recovery failed: $oldF -> $indexDir")
-    }
-    // stale partials from a crash before the demote (or after the
-    // promote): the live dir is authoritative, drop them
-    if (dst.exists && oldF.exists) delTree(oldF)
-    if (dst.exists && tmp.exists) delTree(tmp)
-  }
-
-  /** Sweep a stranded per-file-rewrite scratch dir (`<dir>_rw_tmp`,
-    * crash between a single-file tmp write and its ATOMIC_MOVE): the
-    * live store was untouched — before the move the original file
-    * still serves, after it the replacement does — so the scratch is
-    * pure garbage, never a recovery source. */
-  private def sweepRwTmp(dir: String): Unit = {
-    val t = new java.io.File(dir + "_rw_tmp")
-    if (t.exists) delTree(t)
-  }
+  /** Heals a store before its owner reads it
+    * ([[Durable.recoverCompaction]]): a publish a crash cut between its
+    * demote and promote, and a per-file rewrite's scratch. */
+  def recoverCompaction(dir: String): Unit = Durable.recoverCompaction(dir)
 
   /** Replace ONE parquet part file of a live store with a transformed
     * version of its own rows: single-file read → transform → one-file
-    * scratch write → ATOMIC_MOVE onto the original path (same volume,
-    * so the swap is atomic; REPLACE_EXISTING lets a replay overwrite
-    * its own half-applied predecessor). A transform that keeps zero
-    * rows still replaces the file with a schema-preserving 0-row
-    * husk (Spark writes one empty part file) — the store stays
+    * Spark write into `<dir>_rw_tmp` → [[Durable.replaceFile]] onto the
+    * original path (same volume, so the swap is atomic; a replay
+    * overwrites its own half-applied predecessor). A transform that
+    * keeps zero rows still replaces the file with a schema-preserving
+    * 0-row husk (Spark writes one empty part file) — the store stays
     * READABLE after a full erasure, file counts are exactly stable
     * under an erasure trickle, and the owner's compaction reclaims
     * husks on its own policy. A crash anywhere strands only scratch
-    * ([[sweepRwTmp]] reclaims it at the next batch); the live dir
-    * holds every file either original or fully rewritten, never
-    * torn. */
+    * ([[recoverCompaction]] reclaims `_rw_tmp` at the next batch, the
+    * next replace of the file its hidden scratch); the live dir holds
+    * every file either original or fully rewritten, never torn. */
   private def replaceStoreFile(spark: SparkSession, dir: String,
       fileUri: String)(transform: DataFrame => DataFrame): Unit = {
     val live = java.nio.file.Paths.get(new java.net.URI(fileUri))
     val tmpDir = new java.io.File(dir + "_rw_tmp")
-    if (tmpDir.exists) delTree(tmpDir)
     transform(spark.read.parquet(live.toString)).coalesce(1)
       .write.mode("overwrite").parquet(tmpDir.getPath)
     val part = Option(tmpDir.listFiles).toSeq.flatten
       .find(_.getName.endsWith(".parquet"))
       .getOrElse(throw new java.io.IOException(
         s"single-file rewrite produced no part file for $fileUri"))
-    // The original writer's checksum sidecar (.<name>.crc, Hadoop
-    // ChecksumFileSystem) describes the OLD bytes — left in place it
-    // fails every read of the replacement; absent, verification is
-    // skipped. Delete it BEFORE the swap: a crash in between leaves
-    // the original bytes unverified (readable), whereas deleting
-    // after would leave new-bytes + stale-crc, which poisons the
-    // replay's own store read and can never self-heal.
-    java.nio.file.Files.deleteIfExists(
-      live.resolveSibling("." + live.getFileName.toString + ".crc"))
-    java.nio.file.Files.move(part.toPath, live,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    delTree(tmpDir)
+    // the scratch is hidden from Spark's listing by its leading dot
+    Durable.replaceFile(live, "." + live.getFileName, ".tmp") { scratch =>
+      java.nio.file.Files.move(part.toPath, scratch,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      // The original writer's checksum sidecar (.<name>.crc, Hadoop
+      // ChecksumFileSystem) describes the OLD bytes — left in place it
+      // fails every read of the replacement; absent, verification is
+      // skipped. Delete it BEFORE the swap: a crash in between leaves
+      // the original bytes unverified (readable), whereas deleting
+      // after would leave new-bytes + stale-crc, which poisons the
+      // replay's own store read and can never self-heal.
+      java.nio.file.Files.deleteIfExists(
+        live.resolveSibling("." + live.getFileName.toString + ".crc"))
+      true
+    }
+    Durable.delTree(tmpDir)
   }
 
   /** foreachBatch dedup-on-ingest with WRITE-BACK: each micro-batch of
@@ -635,8 +577,8 @@ object StreamOps {
     // between the two writes re-runs it harmlessly. Writing the
     // verdicts first would instead make a crash between the writes
     // skip the index append forever on replay.
-    val alreadyDone = batchCommitted(spark, verdictsDir, batchId)
-    if (alreadyDone) return
+    if (readParquetOpt(spark, verdictsDir)
+        .exists(hasRow("batch_id", batchId))) return
     // at-least-once delivery can replay a doc WITHIN one batch too:
     // shingle once per distinct doc_id or shared-counts double and
     // the index append duplicates rows
@@ -644,16 +586,11 @@ object StreamOps {
     val sh = shingleArrivals(uniq)
       .cache() // probe + write-back, one pass
     try {
+      // only a missing or empty index means "first batch" — any other
+      // read failure (transient IO, corruption) must fail the batch so
+      // streaming retries it, not silently disable dup detection
       val existingRaw =
-        try spark.read.parquet(indexDir)
-        catch {
-          // ONLY a missing path means "first batch" — any other read
-          // failure (transient IO, corruption) must fail the batch so
-          // streaming retries it, not silently disable dup detection
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getCondition == "PATH_NOT_FOUND" =>
-            spark.emptyDataFrame
-        }
+        readParquetOpt(spark, indexDir).getOrElse(spark.emptyDataFrame)
       val hasIndex = existingRaw.columns.nonEmpty
       // Generation-tagged rows: `gen` = the batchId that wrote them;
       // a doc's LIVE shingles are its latest generation's (tombstone
@@ -827,8 +764,8 @@ object StreamOps {
   def driftProbeBatch(refHistDir: String, reportDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val alreadyDone = batchCommitted(spark, reportDir, batchId)
-    if (alreadyDone) return
+    if (readParquetOpt(spark, reportDir)
+        .exists(hasRow("batch_id", batchId))) return
     val ref = spark.read.parquet(refHistDir)
     val meta = ref.select(col("event_type"), col("v0"), col("v1"))
       .distinct()
@@ -873,8 +810,8 @@ object StreamOps {
   def ksProbeBatch(refHistDir: String, reportDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val alreadyDone = batchCommitted(spark, reportDir, batchId)
-    if (alreadyDone) return
+    if (readParquetOpt(spark, reportDir)
+        .exists(hasRow("batch_id", batchId))) return
     val ref = spark.read.parquet(refHistDir)
       .select(col("len"), col("c_ref"))
     val cb = batch.select(col("source"), col("len"))
@@ -965,15 +902,10 @@ object StreamOps {
     // heal a crashed ivfReassignFromStore publish (same tmp/old
     // protocol as the dedup index's compaction) before reading
     recoverCompaction(indexDir)
-    val alreadyDone = batchCommitted(spark, reportDir, batchId)
-    if (alreadyDone) return
+    if (readParquetOpt(spark, reportDir)
+        .exists(hasRow("batch_id", batchId))) return
     val uniq = batch.dropDuplicates("vec_id")
-    val standing =
-      try Some(spark.read.parquet(indexDir))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" => None
-      }
+    val standing = readParquetOpt(spark, indexDir)
     val fresh = (standing match {
       case Some(idx) => uniq.join(idx.select(col("vec_id")).distinct(),
         Seq("vec_id"), "left_anti")
@@ -999,13 +931,7 @@ object StreamOps {
       // batch's store rows on replay — self-keyed anti-join gives
       // both properties independent of the index state.
       vecsDir.foreach { vd =>
-        val stored =
-          try Some(spark.read.parquet(vd))
-          catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getCondition == "PATH_NOT_FOUND" => None
-          }
-        val newVecs = stored match {
+        val newVecs = readParquetOpt(spark, vd) match {
           case Some(sv) => uniq.join(sv.select(col("vec_id")).distinct(),
             Seq("vec_id"), "left_anti")
           case None => uniq
@@ -1078,24 +1004,6 @@ object StreamOps {
         .withColumn("gen", lit(gen)))
   }
 
-  /** foreachBatch contamination probe — q234's live form: each
-    * micro-batch of `(doc_id, text)` eval arrivals probes the
-    * standing train-gram index (one equi-join keyed on the 32-bit
-    * gram hash — work scales with the batch and the index's distinct
-    * grams, never doc×doc) and appends per-doc verdicts
-    * `(batch_id, doc_id, n_grams, n_hit, is_contaminated)` to
-    * `verdictsDir`. Gram extraction is `Text.gram8Of` — THE builder
-    * q231/q234 use, so stream and batch can never hash-drift apart.
-    *
-    * Same commit-marker idempotency as [[dedupIngestBatch]]: a
-    * replayed batchId is a no-op (the verdict append IS the commit
-    * marker — nothing else is written, so the check suffices alone).
-    * A doc with < 8 tokens has no grams and lands as an n_grams=0
-    * clean verdict — every arrival gets a verdict row.
-    *
-    * The index is read-only here (eval docs must never leak INTO
-    * train); [[trainGramIngestBatch]] is the maintaining half —
-    * accepted train batches append their new grams there. */
   /** The write-back half of streaming decontamination: each
     * micro-batch of ACCEPTED `(doc_id, text)` TRAIN docs appends its
     * genuinely-new distinct 8-gram hashes to the standing train-gram
@@ -1133,20 +1041,12 @@ object StreamOps {
     // a missing live dir would otherwise read as "first batch" and
     // re-admit every gram under a fresh gen
     recoverCompaction(trainGramsDir)
-    if (batchCommitted(spark, reportDir, batchId)) return
+    if (readParquetOpt(spark, reportDir)
+        .exists(hasRow("batch_id", batchId))) return
     val uniq = batch.dropDuplicates("doc_id")
     val grams = graft.ops.Text.gram8Of(uniq)
       .select(col("g")).distinct()
-    // both definitive empty-index states count as "first batch":
-    // missing dir AND pre-created-but-empty dir (a harness or an
-    // object-store "folder" can exist before any parquet lands)
-    val standing =
-      try Some(spark.read.parquet(trainGramsDir))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" ||
-              e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
-      }
+    val standing = readParquetOpt(spark, trainGramsDir)
     val fresh = (standing match {
       case Some(idx) => grams.join(idx.select(col("g")).distinct(),
         Seq("g"), "left_anti")
@@ -1182,6 +1082,24 @@ object StreamOps {
     }
   }
 
+  /** foreachBatch contamination probe — q234's live form: each
+    * micro-batch of `(doc_id, text)` eval arrivals probes the
+    * standing train-gram index (one equi-join keyed on the 32-bit
+    * gram hash — work scales with the batch and the index's distinct
+    * grams, never doc×doc) and appends per-doc verdicts
+    * `(batch_id, doc_id, n_grams, n_hit, is_contaminated)` to
+    * `verdictsDir`. Gram extraction is `Text.gram8Of` — THE builder
+    * q231/q234 use, so stream and batch can never hash-drift apart.
+    *
+    * Same commit-marker idempotency as [[dedupIngestBatch]]: a
+    * replayed batchId is a no-op (the verdict append IS the commit
+    * marker — nothing else is written, so the check suffices alone).
+    * A doc with < 8 tokens has no grams and lands as an n_grams=0
+    * clean verdict — every arrival gets a verdict row.
+    *
+    * The index is read-only here (eval docs must never leak INTO
+    * train); [[trainGramIngestBatch]] is the maintaining half —
+    * accepted train batches append their new grams there. */
   def contaminationProbeBatch(trainGramsDir: String, verdictsDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
@@ -1190,8 +1108,8 @@ object StreamOps {
     // heal a torn publish rather than failing the read (idempotent,
     // no-op when the live dir is healthy)
     recoverCompaction(trainGramsDir)
-    val alreadyDone = batchCommitted(spark, verdictsDir, batchId)
-    if (alreadyDone) return
+    if (readParquetOpt(spark, verdictsDir)
+        .exists(hasRow("batch_id", batchId))) return
     val uniq = batch.dropDuplicates("doc_id")
     val ev = graft.ops.Text.gram8Of(uniq)
     val tr = spark.read.parquet(trainGramsDir).select(col("g")).distinct()
@@ -1232,7 +1150,8 @@ object StreamOps {
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     graft.cdc.GraftFunctions.register(spark)
-    if (batchCommitted(spark, reportDir, batchId)) return
+    if (readParquetOpt(spark, reportDir)
+        .exists(hasRow("batch_id", batchId))) return
     val uniq = batch.dropDuplicates("doc_id")
     val sh = shingleArrivals(uniq).cache() // full sig + subset sigs
     try {
@@ -1322,7 +1241,8 @@ object StreamOps {
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     graft.cdc.GraftFunctions.register(spark)
-    if (batchCommitted(spark, reportDir, batchId)) return
+    if (readParquetOpt(spark, reportDir)
+        .exists(hasRow("batch_id", batchId))) return
     val occ = batch.dropDuplicates("doc_id")
       .select(explode(graft.ops.Text.toksCol).as("tok"))
     val wp = graft.ops.Curation.bpeEncodePieces(
@@ -1397,24 +1317,16 @@ object StreamOps {
     // recoverCompaction later DELETES the stranded pre-crash copy —
     // permanently losing the erasure guard (r13 advisor finding)
     recoverCompaction(dfDir + "_docs")
-    sweepRwTmp(dfDir + "_docs")
-    if (batchCommitted(spark, reportDir, batchId)) return
+    if (readParquetOpt(spark, reportDir)
+        .exists(hasRow("batch_id", batchId))) return
     // half-committed crash window (df rows landed, report didn't):
     // unlike the gram index there is no anti-join to absorb a replay
     // — a blind re-append would double every df for this gen. The
     // sidecar's own gen rows are the durable truth: skip the append
     // when they already exist, then report from them (the
     // ivfIngestBatch n_arrived contract).
-    val genDone =
-      try !spark.read.parquet(dfDir)
-        .filter(col("gen") === batchId).isEmpty
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" ||
-              e.getCondition == "UNABLE_TO_INFER_SCHEMA" => false
-      }
     val uniq = batch.dropDuplicates("doc_id")
-    if (!genDone) {
+    if (!readParquetOpt(spark, dfDir).exists(hasRow("gen", batchId))) {
       graft.ops.Text.gram8Of(uniq)
         .groupBy(col("g")).agg(count(lit(1)).as("df"))
         .withColumn("gen", lit(batchId))
@@ -1426,15 +1338,8 @@ object StreamOps {
     // ingested grams (a rejected duplicate) would subtract evidence
     // a SURVIVING doc contributed. Same gen-guard idempotency as the
     // df rows themselves.
-    val rosterDone =
-      try !spark.read.parquet(dfDir + "_docs")
-        .filter(col("gen") === batchId).isEmpty
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" ||
-              e.getCondition == "UNABLE_TO_INFER_SCHEMA" => false
-      }
-    if (!rosterDone) {
+    if (!readParquetOpt(spark, dfDir + "_docs")
+        .exists(hasRow("gen", batchId))) {
       uniq.select(col("doc_id")).withColumn("gen", lit(batchId))
         .write.mode("append").parquet(dfDir + "_docs")
     }
@@ -1522,31 +1427,13 @@ object StreamOps {
     }
   }
 
-  /** The crash-safe whole-store publish shared by every compaction:
-    * tmp fully written → live demoted to `_compact_old` → tmp
-    * promoted → old deleted. A crash at any point leaves either the
-    * live dir, or a complete tmp/old that [[recoverCompaction]] (run
-    * at every consumer's entry) promotes/restores — never a moment
-    * where the store is gone without a complete replacement on disk.
-    * ONE implementation so a future protocol change (fsync, object
-    * store, rename retry) cannot miss a site. */
+  /** Publishes `replacement` as the whole store at `dir` under
+    * [[Durable.replaceDir]]'s demote-promote, healed by
+    * [[recoverCompaction]] at every consumer's entry: the one
+    * whole-store rewrite every compaction and the upsert sink use. */
   private[streaming] def publishCompacted(dir: String,
-      replacement: DataFrame): Unit = {
-    val tmp = dir + "_compact_tmp"
-    replacement.write.mode("overwrite").parquet(tmp)
-    val dst = new java.io.File(dir)
-    val oldF = new java.io.File(dir + "_compact_old")
-    if (oldF.exists) delTree(oldF)
-    // a missing live dir is legal for a FIRST publish (backfill into
-    // an empty store): skip the demote, promote straight in
-    if (dst.exists && !dst.renameTo(oldF))
-      throw new java.io.IOException(
-        s"failed to demote live store: $dir -> $oldF")
-    if (!new java.io.File(tmp).renameTo(dst))
-      throw new java.io.IOException(
-        s"failed to publish compacted store: $tmp -> $dir")
-    if (oldF.exists) delTree(oldF)
-  }
+      replacement: DataFrame): Unit =
+    Durable.replaceDir(dir)(replacement.write.mode("overwrite").parquet(_))
 
   /** q273's live half: eval arrivals probe the DF sidecar and get
     * BOTH verdicts per doc — raw (any train hit, q231's rule) and
@@ -1561,7 +1448,8 @@ object StreamOps {
     // the sidecar is compaction-maintained (compactDfSidecar) — heal
     // a torn publish rather than failing the probe read
     recoverCompaction(dfDir)
-    if (batchCommitted(spark, verdictsDir, batchId)) return
+    if (readParquetOpt(spark, verdictsDir)
+        .exists(hasRow("batch_id", batchId))) return
     val uniq = batch.dropDuplicates("doc_id")
     val ev = graft.ops.Text.gram8Of(uniq)
     // df > 0: a gram fully erased by forgetBatch leaves zero-total
@@ -1708,17 +1596,14 @@ object StreamOps {
     // pre-upgrade stranded dirs (and the other stores' compactions)
     // still need the heal.
     (dedupIndexDir ++ ivfIndexDir ++ vecStoreDir ++ trainGramsDir ++
-      dfDir ++ dfDir.map(_ + "_docs") ++ labelsDir ++ calDir).foreach { dir =>
-      recoverCompaction(dir)
-      sweepRwTmp(dir)
-    }
-    if (batchCommitted(spark, reportDir, batchId)) return
+      dfDir ++ dfDir.map(_ + "_docs") ++ labelsDir ++ calDir)
+      .foreach(recoverCompaction)
+    if (readParquetOpt(spark, reportDir)
+        .exists(hasRow("batch_id", batchId))) return
     val uniq = batch.dropDuplicates("doc_id").cache()
     try {
       val ids = uniq.select(col("doc_id"))
       val nDocs = uniq.count()
-      def readOpt(dir: String): Option[DataFrame] =
-        readParquetOpt(spark, dir)
       // Per-file hit census shared by every rewrite below: ONE
       // key-column scan maps the forget keys to the part FILES that
       // hold them. Driver state is O(hit files), never O(rows) —
@@ -1735,7 +1620,7 @@ object StreamOps {
       }
       // File-pruned anti-join rewrite (r13 verdict ask 3): rewrite
       // ONLY the part files containing forget hits, each via a
-      // single-file scratch write + ATOMIC_MOVE onto its original
+      // single-file scratch write moved atomically onto its original
       // path ([[replaceStoreFile]]). An RTBF trickle now touches
       // O(hit files), not O(store) — the MERGE-touching-files shape
       // the 100 TB posture promised — and untouched files stay
@@ -1747,7 +1632,7 @@ object StreamOps {
       // attempt (0 on a replay that already removed).
       // `keys` must carry exactly the column `key`.
       def rewriteMinus(dir: String, key: String, keys: DataFrame): Long =
-        readOpt(dir).map { df0 =>
+        readParquetOpt(spark, dir).map { df0 =>
           val hf = hitFileCounts(
             df0.withColumn("_file", input_file_name())
               .join(keys, Seq(key), "left_semi"))
@@ -1766,7 +1651,7 @@ object StreamOps {
       // the live view's n >= 0 filter resolves the tie in favor of
       // the new content — revival wins, which is the correct
       // semantics for a fresh submission after erasure.
-      val nDedup = dedupIndexDir.flatMap(readOpt).map { idx0 =>
+      val nDedup = dedupIndexDir.flatMap(readParquetOpt(spark, _)).map { idx0 =>
         val idx = if (idx0.columns.contains("gen")) idx0
           else idx0.withColumn("gen", lit(-1L))
         val liveForgot = idx
@@ -1796,7 +1681,7 @@ object StreamOps {
       val nGrams = trainGramsDir.flatMap { tgDir =>
         dfDir.map { dd =>
           val negGen = -batchId - 1
-          val sidecar0 = readOpt(dd)
+          val sidecar0 = readParquetOpt(spark, dd)
           // Only docs on the ingest ROSTER (dfDir + "_docs", written
           // by trainGramDfIngestBatch) may decrement: a forgotten doc
           // whose content merely MATCHES ingested grams — a rejected
@@ -1805,11 +1690,10 @@ object StreamOps {
           // cross-batch double-forget guard: the first erasure batch
           // removes the doc from it, so a SECOND request under a new
           // batchId finds no eligible doc and decrements nothing.
-          val eligible = readOpt(dd + "_docs").map(r =>
+          val eligible = readParquetOpt(spark, dd + "_docs").map(r =>
             uniq.join(r.select(col("doc_id")).distinct(),
               Seq("doc_id"), "left_semi"))
-          val genDone = sidecar0.exists(
-            !_.filter(col("gen") === negGen).isEmpty)
+          val genDone = sidecar0.exists(hasRow("gen", negGen))
           if (!genDone && sidecar0.nonEmpty && eligible.nonEmpty) {
             // the gram join guards content drift: if the erasure
             // request's text gained grams after ingest, only grams
@@ -1829,7 +1713,7 @@ object StreamOps {
           // the SAME zero set and the rewrite is idempotent; a
           // missing sidecar means nothing was ever ingested, so
           // nothing can zero
-          readOpt(dd).map { sc =>
+          readParquetOpt(spark, dd).map { sc =>
             val zeroed = sc.groupBy(col("g"))
               .agg(sum(col("df")).as("df"))
               .filter(col("df") <= 0).select(col("g"))
@@ -1848,7 +1732,7 @@ object StreamOps {
       // Same file pruning as rewriteMinus, but erase-IN-PLACE: the
       // transform keeps every row (commit markers and redelivery
       // guards survive), nulling only the forgotten docs' labels.
-      val nLabels = labelsDir.flatMap(readOpt).map { lb =>
+      val nLabels = labelsDir.flatMap(readParquetOpt(spark, _)).map { lb =>
         val hf = hitFileCounts(
           lb.withColumn("_file", input_file_name())
             .join(ids, Seq("doc_id"), "left_semi")
@@ -1877,27 +1761,24 @@ object StreamOps {
       // ---- frame-log exposure: observation, never mutation ---------
       // (r13 verdict ask 4) One pass over the retained slice of the
       // log + a broadcast of the forget batch's own ids; the match is
-      // a substring probe on the hex payload, conservative toward
+      // a substring probe on the wire bytes, conservative toward
       // reporting exposure.
       val nFrames = frameLogDir.map { ld =>
         // a configured-but-not-yet-created (or torn-down) log dir
         // measures ZERO frames, it must not crash the cascade after
         // the store rewrites have executed: listLogFiles returns the
         // bare path for a non-directory, which would bypass the
-        // empty-floors guard and throw inside textFile (review
-        // finding)
+        // empty-floors guard and fail the read (review finding)
         if (!new java.io.File(ld).isDirectory) 0L
         else {
-          // byte-accurate needle: decode the hex payload back to its
-          // wire bytes and search the doc_id's own bytes — substring
-          // on the HEX text would also match at odd (nibble-
-          // misaligned) offsets, inflating the count beyond even the
-          // intended conservatism
+          // the doc_id's own bytes searched in the transaction's wire
+          // bytes (its frames concatenated; a binary-to-string cast
+          // keeps the bytes as they are)
           val needles = uniq
             .select(col("doc_id").cast("string").as("needle"))
           retainedTx(spark, ld)
-            .select(unhex(concat_ws("", col("frames"))).cast("string")
-              .as("payload"))
+            .select(concat_ws("", transform(col("frames"),
+              _.cast("string"))).as("payload"))
             .join(broadcast(needles),
               expr("contains(payload, needle)"), "left_semi")
             .count()
@@ -1961,8 +1842,6 @@ object StreamOps {
       bpeEnvelopeMilli: (Long, Long) = (1000L, 2500L)): DataFrame = {
     val ss = spark
     import ss.implicits._
-    def readOpt(dir: String): Option[DataFrame] =
-      readParquetOpt(spark, dir)
     def nFiles(dir: String): Long =
       Option(new java.io.File(dir).listFiles())
         .map(_.count(_.getName.endsWith(".parquet")).toLong).getOrElse(0L)
@@ -1986,7 +1865,7 @@ object StreamOps {
     }
     val rows = Seq.newBuilder[(String, Long, Long, Long, Long, Long, Boolean)]
     dedupIndexDir.foreach { dir =>
-      val (total, live) = readOpt(dir).map { idx0 =>
+      val (total, live) = readParquetOpt(spark, dir).map { idx0 =>
         val idx = if (idx0.columns.contains("gen")) idx0
           else idx0.withColumn("gen", lit(-1L))
         val liveN = idx
@@ -1998,7 +1877,7 @@ object StreamOps {
       rows += row("dedup_index", dir, total, live, ByStale)
     }
     dfDir.foreach { dir =>
-      val (total, live) = readOpt(dir).map { sc =>
+      val (total, live) = readParquetOpt(spark, dir).map { sc =>
         val liveN = sc.groupBy(col("g")).agg(sum(col("df")).as("df"))
           .filter(col("df") > 0).count()
         (sc.select(col("g")).distinct().count(), liveN)
@@ -2009,12 +1888,12 @@ object StreamOps {
       "vector_store" -> vecStoreDir, "labels" -> labelsDir)
       .foreach { case (nm, od) =>
         od.foreach { dir =>
-          val total = readOpt(dir).map(_.count()).getOrElse(0L)
+          val total = readParquetOpt(spark, dir).map(_.count()).getOrElse(0L)
           rows += row(nm, dir, total, total, ByFiles)
         }
       }
     lshReportDir.foreach { dir =>
-      readOpt(dir).foreach { _ =>
+      readParquetOpt(spark, dir).foreach { _ =>
         // verdict counts aggregate IN Spark and ONE summary row comes
         // to the driver (r15 verdict ask 4): the per-verdict collect
         // was the lone driver-side materialization in src/main without
@@ -2033,7 +1912,7 @@ object StreamOps {
       }
     }
     bpeReportDir.foreach { dir =>
-      readOpt(dir).foreach { rep =>
+      readParquetOpt(spark, dir).foreach { rep =>
         val (lo, hi) = bpeEnvelopeMilli
         // per-batch breach census + the consecutive-breach verdict,
         // both aggregated in Spark; two 1-row collects (same
@@ -2060,90 +1939,68 @@ object StreamOps {
     * half the vacuum pane ([[storeHealthReport]]) and the erasure
     * cascade ([[forgetBatch]]) assume exists: before a risky
     * maintenance window, copy the store somewhere immutable. The
-    * source is HEALED first ([[recoverCompaction]] + scratch sweep),
+    * source is HEALED first ([[recoverCompaction]]),
     * so a snapshot can never capture a torn publish. Snapshots are
     * immutable and uniquely named by the caller (refusing to
     * overwrite an existing one keeps "restore from snapshot X"
     * unambiguous); a store that does not exist yet snapshots as an
     * explicit `_absent` marker — restoring it recreates absence
-    * rather than silently keeping stale rows. The copy lands under
-    * `<snapDir>_tmp` and is renamed into place, so a crashed
-    * snapshot leaves only scratch (swept by the next attempt), never
-    * a half-readable snapshot. Returns the number of files captured.
-    * At 100 TB this is metadata + a parallel object-store copy; the
-    * discipline (heal, copy, atomic publish) is what matters. */
+    * rather than silently keeping stale rows. The copy is published
+    * with [[Durable.replaceDir]] (scratch `<snapDir>_compact_tmp`), so
+    * a crashed snapshot leaves only scratch (swept by the next
+    * attempt), never a half-readable snapshot. Returns the number of
+    * files captured. At 100 TB this is metadata + a parallel
+    * object-store copy; the discipline (heal, copy, atomic publish) is
+    * what matters. */
   def snapshotStore(dir: String, snapDir: String): Long = {
     require(!new java.io.File(snapDir).exists,
       s"snapshot target already exists: $snapDir (snapshots are " +
         "immutable — pick a fresh name)")
     recoverCompaction(dir)
-    sweepRwTmp(dir)
-    val tmp = new java.io.File(snapDir + "_tmp")
-    if (tmp.exists) delTree(tmp)
-    if (!tmp.mkdirs()) throw new java.io.IOException(s"mkdir $tmp")
     val src = new java.io.File(dir)
+    val files = Option(src.listFiles()).toSeq.flatten
     // stores are flat by construction (parquet parts + sidecar
     // files); a subdirectory here is either a stranded Spark
     // _temporary (commit-protocol crash) or a layout this copier
     // does not understand — silently skipping it would publish a
     // truncated DR copy that REPORTS success, so fail loudly instead
-    if (src.isDirectory) {
-      val subdirs = Option(src.listFiles()).toSeq.flatten
-        .filter(_.isDirectory)
-      require(subdirs.isEmpty,
-        s"snapshotStore: unexpected subdirectories in $dir " +
-          s"(${subdirs.map(_.getName).mkString(", ")}) — heal or " +
-          "remove them; a silent partial snapshot is worse than none")
+    val subdirs = files.filter(_.isDirectory)
+    require(subdirs.isEmpty,
+      s"snapshotStore: unexpected subdirectories in $dir " +
+        s"(${subdirs.map(_.getName).mkString(", ")}) — heal or " +
+        "remove them; a silent partial snapshot is worse than none")
+    Durable.replaceDir(snapDir) { tmp =>
+      copyFiles(files, tmp)
+      if (!src.isDirectory) java.nio.file.Files.write(
+        java.nio.file.Paths.get(tmp, "_absent"), Array.emptyByteArray)
     }
-    val files = if (src.isDirectory)
-      Option(src.listFiles()).toSeq.flatten.filter(_.isFile) else Seq.empty
-    val n = if (!src.isDirectory) {
-      java.nio.file.Files.write(
-        new java.io.File(tmp, "_absent").toPath, Array.emptyByteArray)
-      0L
-    } else {
-      files.foreach { f =>
-        java.nio.file.Files.copy(f.toPath,
-          new java.io.File(tmp, f.getName).toPath)
-      }
-      files.length.toLong
-    }
-    if (!tmp.renameTo(new java.io.File(snapDir)))
-      throw new java.io.IOException(s"snapshot publish failed: $snapDir")
-    n
+    files.length.toLong
+  }
+
+  /** Copies `files` into a new directory `to`. */
+  private def copyFiles(files: Seq[java.io.File], to: String): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(to))
+    files.foreach(f => java.nio.file.Files.copy(f.toPath,
+      java.nio.file.Paths.get(to, f.getName)))
   }
 
   /** Restore one store directory from a [[snapshotStore]] snapshot.
-    * Rides the SAME demote-promote publish discipline as compaction
-    * (`_compact_tmp` / `_compact_old`), so a restore torn by a crash
-    * at ANY point is healed by the [[recoverCompaction]] call every
-    * store owner already runs at entry — no second recovery protocol
-    * to get wrong. An `_absent` snapshot restores to a deleted dir
-    * (the store did not exist at snapshot time). Idempotent: re-running
-    * a completed or torn restore converges on the snapshot state. */
+    * Rides the SAME demote-promote publish as compaction
+    * ([[Durable.replaceDir]]), so a restore torn by a crash at ANY
+    * point is healed by the [[recoverCompaction]] call every store
+    * owner already runs at entry — no second recovery protocol to get
+    * wrong. An `_absent` snapshot publishes absence through the same
+    * demote (the store did not exist at snapshot time). Idempotent:
+    * re-running a completed or torn restore converges on the
+    * snapshot state. */
   def restoreStore(dir: String, snapDir: String): Unit = {
     val snap = new java.io.File(snapDir)
     require(snap.isDirectory, s"no such snapshot: $snapDir")
     recoverCompaction(dir)
-    sweepRwTmp(dir)
-    val live = new java.io.File(dir)
-    if (new java.io.File(snap, "_absent").exists) {
-      if (live.exists) delTree(live)
-      return
+    Durable.replaceDir(dir) { tmp =>
+      if (!new java.io.File(snap, "_absent").exists)
+        copyFiles(snap.listFiles().toSeq.filter(_.isFile), tmp)
     }
-    val tmp = new java.io.File(dir + "_compact_tmp")
-    if (tmp.exists) delTree(tmp)
-    if (!tmp.mkdirs()) throw new java.io.IOException(s"mkdir $tmp")
-    Option(snap.listFiles()).toSeq.flatten.filter(_.isFile).foreach { f =>
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    }
-    val old = new java.io.File(dir + "_compact_old")
-    if (live.exists && !live.renameTo(old))
-      throw new java.io.IOException(s"restore demote failed: $dir")
-    if (!tmp.renameTo(live))
-      throw new java.io.IOException(s"restore promote failed: $dir")
-    if (old.exists) delTree(old)
   }
 
   /** foreachBatch conformal quality gate — q291's live twin: each
@@ -2179,8 +2036,8 @@ object StreamOps {
     val spark = batch.sparkSession
     graft.cdc.GraftFunctions.register(spark)
     recoverCompaction(calDir)
-    sweepRwTmp(calDir)
-    if (batchCommitted(spark, verdictsDir, batchId)) return
+    if (readParquetOpt(spark, verdictsDir)
+        .exists(hasRow("batch_id", batchId))) return
     val uniq = batch.dropDuplicates("doc_id").cache()
     try {
       val scored = uniq
@@ -2270,7 +2127,8 @@ object StreamOps {
     // standing read, or a crash window would read as "first batch"
     // and the eventual recover would destroy the pre-crash store
     recoverCompaction(labelsDir)
-    if (batchCommitted(spark, labelsDir, batchId)) return
+    if (readParquetOpt(spark, labelsDir)
+        .exists(hasRow("batch_id", batchId))) return
     val uniq0 = batch.dropDuplicates("doc_id")
     val standing = readParquetOpt(spark, labelsDir)
     val uniq = (standing match {
@@ -2343,38 +2201,24 @@ object StreamOps {
     } finally { uniq.unpersist(); () }
   }
 
-  /** Slot/WAL retention report over a replay frame-log directory —
-    * q280's census computed from the store's OWN ack state instead of
-    * a simulated lag: per shard file (≈ slot/publication), the acked
-    * floor from the log dir's [[AckRecord]]
-    * ([[CdcReplaySource.retentionFloors]], the A9/A10 bookkeeping),
-    * the head LSN, the transactions/bytes retained past the floor
-    * (wire size: 25-byte XLogData header + payload per frame), and
-    * the retained fraction of `capBytes` in milli — the
-    * pg_replication_slots dashboard against the engine's own log.
-    * A dir with no ack record reports everything retained (floor =
-    * Long.MinValue): the honest state of a slot nobody has acked.
-    * Scale shape: one pass over the log (per-file parallelism, the
-    * source's own partitioning) + a broadcast of the k-row floor
-    * relation. */
   /** One complete transaction per row over a frame-log dir —
-    * `(shard, lsn, frames)`. THE parse shared by the retention pane
+    * `(shard, lsn, frames)`, each shard read through the cdc-replay
+    * batch source. THE parse shared by the retention pane
     * ([[slotRetentionReport]]) and the erasure compliance census
-    * ([[forgetBatch]]'s `n_frames_retained`), so line schema,
-    * torn-line handling, and shard-name extraction can never drift
-    * between observation and compliance (the r13 floor-divergence
-    * lesson, one layer up). Torn final lines (crash artifacts) parse
-    * to a null lsn and are dropped — exactly the rows the replay
-    * reader delivers (`completeLines` excludes them too). */
+    * ([[forgetBatch]]'s `n_frames_retained`), and the replay reader's
+    * own: torn final lines (crash artifacts) are dropped, and a corrupt
+    * line before the end of a shard or an LSN out of order fails the
+    * read, naming the file. */
   private[streaming] def frameLogTx(spark: SparkSession,
-      logDir: String): DataFrame =
-    spark.read.textFile(CdcReplaySource.listLogFiles(logDir): _*)
-      .select(element_at(split(input_file_name(), "/"), -1).as("shard"),
-        from_json(col("value"), org.apache.spark.sql.types.StructType
-          .fromDDL("lsn BIGINT, frames ARRAY<STRING>")).as("j"))
-      .filter(col("j.lsn").isNotNull)
-      .select(col("shard"), col("j.lsn").as("lsn"), col("j.frames")
-        .as("frames"))
+      logDir: String): DataFrame = {
+    def shard(path: String, name: String) =
+      spark.read.format(CdcReplaySource.FORMAT).option("path", path).load()
+        .select(lit(name).as("shard"), col("lsn"), col("frames"))
+    CdcReplaySource.listLogFiles(logDir)
+      .map(f => shard(f, new java.io.File(f).getName))
+      .reduceOption(_.unionByName(_))
+      .getOrElse(shard(logDir, "")) // no shards: the source reads nothing
+  }
 
   /** The RETAINED (above-floor) slice of [[frameLogTx]], floors per
     * [[CdcReplaySource.retentionFloors]] — what every consumer has
@@ -2397,6 +2241,20 @@ object StreamOps {
       .join(broadcast(floorsDf), Seq("shard"))
       .filter(col("lsn") > col("floor_lsn"))
 
+  /** Slot/WAL retention report over a replay frame-log directory —
+    * q280's census computed from the store's OWN ack state instead of
+    * a simulated lag: per shard file (≈ slot/publication), the acked
+    * floor from the log dir's [[AckRecord]]
+    * ([[CdcReplaySource.retentionFloors]], the A9/A10 bookkeeping),
+    * the head LSN, the transactions/bytes retained past the floor
+    * (wire size: 25-byte XLogData header + payload per frame), and
+    * the retained fraction of `capBytes` in milli — the
+    * pg_replication_slots dashboard against the engine's own log.
+    * A dir with no ack record reports everything retained (floor =
+    * Long.MinValue): the honest state of a slot nobody has acked.
+    * Scale shape: one pass over the log (per-file parallelism, the
+    * source's own partitioning) + a broadcast of the k-row floor
+    * relation. */
   def slotRetentionReport(spark: SparkSession, logDir: String,
       capBytes: Long = 1L << 20): DataFrame = {
     val ss = spark
@@ -2409,8 +2267,8 @@ object StreamOps {
       .toDF("shard", "floor_lsn")
     def bytesOf(df: DataFrame): DataFrame =
       df.select(col("shard"), col("lsn"),
-        expr("aggregate(frames, 0L," +
-          " (acc, x) -> acc + 25 + length(x) DIV 2)").as("bytes"))
+        expr("aggregate(frames, 0L, (acc, x) -> acc + 25 + length(x))")
+          .as("bytes"))
     // floors drives the join so a shard whose file holds no complete
     // transaction still renders (0 retained), not vanish from the pane
     val perShard = bytesOf(frameLogTx(spark, logDir))
@@ -2480,24 +2338,17 @@ object StreamOps {
       chunk: Long = 512L)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     import org.apache.spark.sql.expressions.Window
-    val committed =
-      try spark.read.parquet(totalsDir)
-        .filter(col("batch_id") === batchId).limit(1).count() > 0
-      catch { case _: Exception => false }
-    if (committed) return
-    val manifestWritten =
-      try spark.read.parquet(manifestDir)
-        .filter(col("batch_id") === batchId).limit(1).count() > 0
-      catch { case _: Exception => false }
-    if (!manifestWritten) {
-      val base =
-        try spark.read.parquet(totalsDir)
-          .filter(col("batch_id") < batchId)
-          .groupBy(col("source")).agg(sum(col("toks")).as("base"))
-        catch { case _: Exception =>
-          spark.emptyDataFrame
-            .select(lit("").as("source"), lit(0L).as("base"))
-            .limit(0) }
+    // only a missing or empty store reads as "nothing committed": an
+    // unreadable totals store must fail the batch, not restart every
+    // source's offsets at 0
+    val totals = readParquetOpt(spark, totalsDir)
+    if (totals.exists(hasRow("batch_id", batchId))) return
+    if (!readParquetOpt(spark, manifestDir)
+        .exists(hasRow("batch_id", batchId))) {
+      val base = totals.fold(spark.emptyDataFrame
+          .select(lit("").as("source"), lit(0L).as("base")).limit(0))(
+        _.filter(col("batch_id") < batchId)
+          .groupBy(col("source")).agg(sum(col("toks")).as("base")))
       val wSrc = Window.partitionBy(col("source")).orderBy(col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       batch.select(col("doc_id"), col("source"),

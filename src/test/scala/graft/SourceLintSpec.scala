@@ -10,10 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * session, no environment knobs beyond the four keys the mains
   * document (cores, dataset, bench output dir, bench passes), no
   * one-off mains in the library packages, no unbuffered frame-log
-  * reads in the streaming package, one ack-state file per log dir —
-  * and the one session's settings pinned, so a drift from the
-  * benchmark's copy fails here instead of silently timing a different
-  * plan. */
+  * reads in the streaming package, one ack-state file per log dir, one
+  * crash protocol and one "empty store" reading in the streaming
+  * package — and the one session's settings pinned, so a drift from
+  * the benchmark's copy fails here instead of silently timing a
+  * different plan. */
 class SourceLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -22,6 +23,20 @@ class SourceLintSpec extends AnyFunSuite {
     Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
       .map((p: Path) => root.relativize(p).toString -> Files.readString(p))
+
+  /** A top-level member of an object or class; the last one before a
+    * match encloses it. */
+  private val member = """\n  (?:private(?:\[\w+\])? )?def\s+(\w+)""".r
+
+  /** (file, enclosing member) of every match of `re` in graft/streaming. */
+  private def streamingSites(re: scala.util.matching.Regex)
+      : Seq[(String, String)] =
+    sources.filter(_._1.startsWith("graft/streaming/")).flatMap {
+      case (f, text) => re.findAllMatchIn(text).map { m =>
+        f -> member.findAllMatchIn(text.substring(0, m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse("<none>")
+      }
+    }
 
   private val contractKeys = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
     "SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_BENCH_PASSES")
@@ -73,7 +88,6 @@ class SourceLintSpec extends AnyFunSuite {
     // one ack record per log dir: a new "_ack…" file elsewhere would be
     // a second ack state; the names of the sidecars that preceded the
     // record belong to its one migration read
-    val member = """\n  (?:private(?:\[\w+\])? )?def\s+(\w+)""".r
     val sites = sources.flatMap { case (f, text) =>
       "\"_ack[^\"]*\"".r.findAllMatchIn(text).map { m =>
         val encl = member.findAllMatchIn(text.substring(0, m.start))
@@ -89,6 +103,29 @@ class SourceLintSpec extends AnyFunSuite {
     }
     assert(bad.isEmpty, bad.mkString("\n"))
     assert(sites.count(_._2 == "legacyAcks") == 4, sites.mkString("\n"))
+  }
+
+  test("streaming renames and makes scratch files only in Durable") {
+    // every publish goes through Durable's replaceFile / replaceDir, so
+    // a durability change (an fsync, a rename retry) is one edit
+    val bad = streamingSites("""ATOMIC_MOVE|renameTo\(|createTempFile\(""".r)
+      .filterNot(_._1 == "graft/streaming/Durable.scala")
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("streaming reads a failed store read as empty only in " +
+      "readParquetOpt") {
+    val sites = streamingSites("\"(PATH_NOT_FOUND|UNABLE_TO_INFER_SCHEMA)\"".r)
+    assert(sites == Seq.fill(2)(
+      "graft/streaming/Durable.scala" -> "readParquetOpt"), sites.mkString("\n"))
+  }
+
+  test("streaming swallows any exception only in lastEntryIntact") {
+    // there `false` is the safe answer: it forces a full re-parse
+    val sites = streamingSites("""case\s+_\s*:\s*(Exception|Throwable)\b""".r)
+    assert(sites == Seq(
+      "graft/streaming/CdcReplaySource.scala" -> "lastEntryIntact"),
+      sites.mkString("\n"))
   }
 
   private val tuned = Map(

@@ -145,4 +145,15 @@ class AckRecordSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(AckRecord.parse(AckRecord.json(AckRecord())) == AckRecord())
     intercept[IllegalArgumentException](AckRecord.parse("""{"version":2}"""))
   }
+
+  test("an update deletes the scratch file a crashed ack write left") {
+    val dir = tmpDir("acks-stale")
+    CdcReplaySource.updateAcks(dir)(_.ack(100L))
+    // a writer that died between its scratch write and the move
+    val stale = Files.createTempFile(Paths.get(dir), "_acks", ".tmp")
+    assert(names(dir).contains(stale.getFileName.toString))
+    CdcReplaySource.updateAcks(dir)(_.ack(200L))
+    assert(names(dir) == Seq("_acked.lock", "_acks.json"))
+    assert(CdcReplaySource.acks(dir).lsn.contains(200L))
+  }
 }

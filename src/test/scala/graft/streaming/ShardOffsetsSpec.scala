@@ -45,6 +45,26 @@ class ShardOffsetsSpec extends AnyFunSuite {
       intercept[IllegalArgumentException] { ShardOffsets.parse(bad) }
   }
 
+  test("json bytes stay as checkpoints hold them: plain, quote and " +
+      "backslash names") {
+    // Spark compares offsets by their json string
+    assert(ShardOffsets(7L, Map("part-1.jsonl" -> 200L,
+      "part-0.jsonl" -> 100L)).json() ==
+      """{"floor":7,"shards":{"part-0.jsonl":100,"part-1.jsonl":200}}""")
+    assert(ShardOffsets(-1L, Map("a\"b" -> 1L)).json() ==
+      """{"floor":-1,"shards":{"a\"b":1}}""")
+    assert(ShardOffsets(0L, Map("a\\b" -> 2L)).json() ==
+      """{"floor":0,"shards":{"a\\b":2}}""")
+    assert(ShardOffsets(Long.MinValue, Map.empty).json() ==
+      """{"floor":-9223372036854775808,"shards":{}}""")
+  }
+
+  test("an LSN that is not an integer is not an offset") {
+    for (bad <- Seq("""{"floor":1.5}""", """{"floor":1,"shards":[]}""",
+        """{"floor":1,"shards":{"a":"2"}}""", "[1]", "-"))
+      intercept[IllegalArgumentException] { ShardOffsets.parse(bad) }
+  }
+
   test("of(): shards floor at the global floor, never below") {
     val so = ShardOffsets(100L, Map("a" -> 50L, "b" -> 200L))
     assert(so.of("a") == 100L) // a stale per-shard entry can't regress

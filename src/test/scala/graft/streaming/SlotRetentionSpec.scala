@@ -160,4 +160,23 @@ class SlotRetentionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after.getAs[Long]("n_retained") == 2L &&
       after.getAs[Long]("head_lsn") == 300L)
   }
+
+  test("a corrupt line before the end of a shard fails the report and " +
+      "names the file, as the replay reader does") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-slot-corrupt").toString
+    CdcReplaySource.writeLogShard(root, 0, Seq(tx(100L), tx(200L), tx(300L)))
+    val p = java.nio.file.Paths.get(root, "part-0.jsonl")
+    val lines = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      .linesIterator.toList
+    java.nio.file.Files.write(p, (lines.head + "\n" + lines(1).take(20) +
+      "\n" + lines(2) + "\n").getBytes("UTF-8"))
+    val e = intercept[Exception] {
+      StreamOps.slotRetentionReport(spark, root).collect()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toList
+    assert(messages.exists(m => m.contains("part-0.jsonl") &&
+      m.contains("corrupt")), messages.mkString("\n"))
+  }
 }

@@ -110,4 +110,28 @@ class StreamPackingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("doc_id") === 4L).collect()(0)
     assert(r4.getAs[Long]("start_off") == 350L)
   }
+
+  test("an unreadable totals store fails the batch instead of reading " +
+      "as nothing committed") {
+    val ss = spark
+    import ss.implicits._
+    val manifest = tmpDir("bad-manifest")
+    val totals = tmpDir("bad-totals")
+    StreamOps.packingIngestBatch(manifest, totals)(
+      Seq((1L, "A", 300L)).toDF("doc_id", "source", "n_toks"), 0L)
+    // every totals file unreadable (its checksum sidecar gone too, so
+    // the read fails on the bytes, whichever file schema inference picks)
+    new java.io.File(totals).listFiles().foreach { f =>
+      if (f.getName.endsWith(".crc")) f.delete()
+      else if (f.getName.endsWith(".parquet")) java.nio.file.Files.write(
+        f.toPath, "not parquet".getBytes("UTF-8"))
+    }
+    // read as "no totals", batch 1 would restart source A at offset 0
+    intercept[Exception] {
+      StreamOps.packingIngestBatch(manifest, totals)(
+        Seq((2L, "A", 100L)).toDF("doc_id", "source", "n_toks"), 1L)
+    }
+    assert(spark.read.parquet(manifest)
+      .filter(col("batch_id") === 1L).isEmpty)
+  }
 }
