@@ -14,12 +14,6 @@ import org.apache.spark.sql.types._
   */
 object CdcFunctions {
 
-  // ---- LSN + PG-epoch scalar functions (A7, binary-reader.ts:75-91)
-  // all native Catalyst expressions (codegen) — see LsnExpressions.scala
-
-  def parse_lsn(c: Column): Column = GraftFunctions.parse_lsn(c)
-  def format_lsn(c: Column): Column = GraftFunctions.format_lsn(c)
-
   // ---- pgoutput (A15-A28) ----
 
   /** Decode an ordered sequence of pgoutput frames sharing one
@@ -96,25 +90,11 @@ object CdcFunctions {
     out.result()
   }
 
-  /** UDF: array<binary> of pgoutput frames → decoded insert/update/
-    * delete tuples as name→text maps (begin/commit/relation frames
-    * update state / framing but carry no tuple). */
-  val pgoutputTuplesUdf = udf { frames: Seq[Array[Byte]] =>
-    decodeFrameSequence(frames)
-      .filter(e => e.tag == "insert" || e.tag == "update" || e.tag == "delete")
-      .map(e => Map(
-        "_tag" -> e.tag, "_schema" -> e.schema, "_table" -> e.table) ++
-        (if (e.after != null) e.after else if (e.before != null) e.before
-         else Map.empty[String, String]))
-  }
-
   // ---- test_decoding (A29) ----
 
   val testDecodingTupleUdf = udf { line: String =>
     val e = TestDecodingParser.parse(line)
-    Map("_tag" -> e.tag, "_schema" -> e.schema, "_table" -> e.table) ++
-      (if (e.after != null) e.after
-       else if (e.before != null) e.before else Map.empty[String, String])
+    Map("_tag" -> e.tag, "_schema" -> e.schema, "_table" -> e.table) ++ e.tuple
   }
 
   // ---- decoderbufs (A31) ----
@@ -122,9 +102,7 @@ object CdcFunctions {
   val decoderbufsTupleUdf = udf { payload: Array[Byte] =>
     val e = Decoderbufs.toChangeEvent(Decoderbufs.decode(payload))
     Map("_tag" -> e.tag, "_schema" -> e.schema, "_table" -> e.table,
-      "_xid" -> e.xid.toString) ++
-      (if (e.after != null) e.after
-       else if (e.before != null) e.before else Map.empty[String, String])
+      "_xid" -> e.xid.toString) ++ e.tuple
   }
 
   // ---- wal2json (A30): pure Spark, no UDF ----

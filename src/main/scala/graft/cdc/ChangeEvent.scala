@@ -63,7 +63,17 @@ final case class ChangeEvent(
     truncateRelationOids: Seq[Long],
     streamFirstSegment: Boolean,                   // stream_start only (proto v2)
     subXid: Long,                                  // stream_abort only (proto v2)
-    gid: String)                                   // two-phase tags only (proto v3 / two_phase)
+    gid: String) {                                 // two-phase tags only (proto v3 / two_phase)
+
+  /** The row image a change carries: the new tuple, else the old one,
+    * else the replica key (a delete under the default identity), else
+    * empty. */
+  def tuple: Map[String, String] =
+    if (after != null) after
+    else if (before != null) before
+    else if (key != null) key
+    else Map.empty
+}
 
 object ChangeEvent {
   val empty: ChangeEvent = ChangeEvent(

@@ -1,9 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** postgres-array text-format tokenizer — the grammar pg-types'
@@ -127,65 +124,4 @@ object PgTextRecord {
     flush()
     new GenericArrayData(out.toArray)
   }
-}
-
-/** Native `pg_record_tokens(text)` → array<string>: one token per
-  * composite field (null for NULL fields, nested composites
-  * verbatim); codegen via a static call like [[PgArrayTokensExpr]]. */
-case class PgRecordTokensExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(
-        s"pg_record_tokens needs a string, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullable: Boolean = true
-  override def prettyName: String = "pg_record_tokens"
-
-  override def nullSafeEval(v: Any): Any =
-    PgTextRecord.tokens(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.cdc.PgTextRecord.tokens($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native `pg_array_tokens(text)` → array<string> (null elements for
-  * SQL NULL, nested `{...}` elements verbatim for another
-  * application, null result for malformed input). Splitting
-  * stays in generated code via a static call (the Md5H32 pattern);
-  * element casts compose on top with builtin `transform` + `cast`,
-  * which ARE codegen'd — so refining a `bigint[]` column never leaves
-  * whole-stage codegen except for this tokenizer call itself. */
-case class PgArrayTokensExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"pg_array_tokens needs a string, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullable: Boolean = true
-  override def prettyName: String = "pg_array_tokens"
-
-  override def nullSafeEval(v: Any): Any =
-    PgTextArray.tokens(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val code = nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.cdc.PgTextArray.tokens($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-    code
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -6,6 +6,8 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.cdc.WalWire.nowMicros
+
 /** PostgreSQL wire framing for the replication CopyBoth subprotocol:
   * every message is `[tag:1][length:4 BE, includes itself][body]`. The
   * reference receives these pre-deframed by the `pg` driver (its
@@ -15,6 +17,9 @@ import scala.collection.mutable.ArrayBuffer
   * explicit framing so a socket really is the transport.
   */
 object WalWire {
+  /** Wall clock in Unix µs, the unit of the wire's timestamp fields. */
+  private[cdc] def nowMicros: Long = System.currentTimeMillis() * 1000L
+
   final case class Msg(tag: Byte, body: Array[Byte])
 
   /** Does NOT flush — callers control batching (flush after the
@@ -123,6 +128,20 @@ object PgStartup {
       .writeUint8('C').writeString(sqlState)
       .writeUint8('M').writeString(message)
       .writeUint8(0).result()
+
+  /** The `M` (message) field of an ErrorResponse body, or
+    * "server error" when the server sent none. */
+  def errorMessage(body: Array[Byte]): String = {
+    val r = new BinaryReader(body)
+    var msg = "server error"
+    var c = r.readUint8()
+    while (c != 0) {
+      val s = r.readString()
+      if (c == 'M') msg = s
+      c = r.readUint8()
+    }
+    msg
+  }
 }
 
 /** A walsender analogue: serves a recorded frame log over a local TCP
@@ -235,8 +254,6 @@ final class LoopbackWalServer(
   acceptThread.start()
 
   def close(): Unit = { running = false; server.close() }
-
-  private def nowMicros: Long = System.currentTimeMillis() * 1000L
 
   /** TLS sessions completed (handshake + startup over the encrypted
     * channel) — lets specs assert the wire really was upgraded. */
@@ -591,8 +608,6 @@ final class WalSocketClient(
   /** BackendKeyData (pid, secret) from the last startup. */
   def backendKeyData: (Int, Int) = backend
 
-  private def nowMicros: Long = System.currentTimeMillis() * 1000L
-
   /** Connect and consume until the server closes; returns what was
     * delivered this session. Resume position: the slot's entry in the
     * log dir's ack record (the reference's default of continuing from
@@ -919,17 +934,7 @@ final class WalSocketClient(
             val r = new BinaryReader(m.body)
             backend = (r.readInt32(), r.readInt32())
           case 'Z' => ready = true
-          case 'E' =>
-            // fields: (code byte + cstring)*; surface the M message
-            val r = new BinaryReader(m.body)
-            var msgTxt = "server error"
-            var c = r.readUint8()
-            while (c != 0) {
-              val s = r.readString()
-              if (c == 'M') msgTxt = s
-              c = r.readUint8()
-            }
-            throw new IOException(msgTxt)
+          case 'E' => throw new IOException(PgStartup.errorMessage(m.body))
           case _ => () // NoticeResponse etc. — ignorable in startup
         }
       }
@@ -991,15 +996,7 @@ final class WalSocketClient(
               // tears the service down; here it terminates the run —
               // completed txs stay logged + acked, the in-flight one
               // replays next session (at-least-once, same as a cut).
-              val r = new BinaryReader(body)
-              var msgTxt = "server error"
-              var c = r.readUint8()
-              while (c != 0) {
-                val s = r.readString()
-                if (c == 'M') msgTxt = s
-                c = r.readUint8()
-              }
-              serverError = Some(msgTxt)
+              serverError = Some(PgStartup.errorMessage(body))
               msg = None
             case _ => () // CommandComplete etc.: ignore
           }

@@ -19,6 +19,7 @@ import graft.cdc._
 object CdcQueries {
   import Tables._
   import CdcFunctions._
+  import GraftFunctions.{format_lsn, parse_lsn}
 
   /** typed rows for the mapPartitions roundtrips (q49/q54) — flat
     * case classes keep the hot path free of Map→MapData conversion. */
@@ -83,12 +84,7 @@ object CdcQueries {
       val decoded = CdcFunctions.decodeFrameSequence(frames)
       val e = decoded.find(x =>
         x.tag == "insert" || x.tag == "update" || x.tag == "delete").get
-      val tuple =
-        if (e.after != null) e.after
-        else if (e.before != null) e.before
-        else if (e.key != null) e.key
-        else Map.empty[String, String]
-      Map("_tag" -> e.tag, "_table" -> e.table) ++ tuple
+      Map("_tag" -> e.tag, "_table" -> e.table) ++ e.tuple
   }
 
   val defs: Seq[QueryDef] = Seq(

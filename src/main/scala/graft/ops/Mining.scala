@@ -414,7 +414,7 @@ object Mining {
       val bf = urgent.stat.bloomFilter("o_orderkey", nUrgent,
         bloomBits(nUrgent))
       // Probe via Spark's native BloomFilterMightContain expression
-      // (binary-literal filter + doGenCode), not a Scala UDF: the
+      // (binary-literal filter, generated code), not a Scala UDF: the
       // probe sits on the fact-table scan, and a UDF there would
       // split the whole-stage-codegen span the filter exists to keep
       // cheap. The serialized bitmap (~18 KB at 1% fpp here) rides

@@ -38,13 +38,7 @@ object StreamOps {
     try {
       CdcFunctions.decodeFrameSequence(frames)
         .filter(e => e.tag == "insert" || e.tag == "update" || e.tag == "delete")
-        .map { e =>
-          val tuple =
-            if (e.after != null) e.after
-            else if (e.before != null) e.before
-            else if (e.key != null) e.key else Map.empty[String, String]
-          (e.tag, e.schema, e.table, tuple, null: String)
-        }
+        .map(e => (e.tag, e.schema, e.table, e.tuple, null: String))
     } catch {
       case ex: Exception if !failFast =>
         Seq((null, null, null, Map.empty[String, String],
@@ -104,11 +98,6 @@ object StreamOps {
   final case class BufferedChange(subXid: Long, lsn: Long, op: String,
       schema: String, table: String, tuple: Map[String, String])
 
-  private def tupleOf(e: graft.cdc.ChangeEvent): Map[String, String] =
-    if (e.after != null) e.after
-    else if (e.before != null) e.before
-    else if (e.key != null) e.key else Map.empty[String, String]
-
   /** (lsn, frames) → classified [[StreamBlock]]s. Each log line is
     * self-contained for decode (relation messages ride inside the
     * segment, as the walsender interleaves them). */
@@ -121,7 +110,7 @@ object StreamOps {
       .map { case (lsn, frames) =>
         val events = graft.cdc.CdcFunctions.decodeFrameSequence(frames)
         val changes = events.filter(e => isData(e.tag)).map(e =>
-          BufferedChange(e.xid, lsn, e.tag, e.schema, e.table, tupleOf(e)))
+          BufferedChange(e.xid, lsn, e.tag, e.schema, e.table, e.tuple))
         // Two-phase envelopes reassemble through the SAME keyed state
         // as proto-v2 streams: a begin_prepare..prepare segment
         // buffers under its xid until COMMIT PREPARED (emit) or

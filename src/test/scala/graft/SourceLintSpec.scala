@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * one-off mains in the library packages, no unbuffered frame-log
   * reads in the streaming package, one ack-state file per log dir, one
   * crash protocol and one "empty store" reading in the streaming
-  * package — and the one session's settings pinned, so a drift from
+  * package, one table of native SQL functions — and the one session's settings pinned, so a drift from
   * the benchmark's copy fails here instead of silently timing a
   * different plan. */
 class SourceLintSpec extends AnyFunSuite {
@@ -126,6 +126,19 @@ class SourceLintSpec extends AnyFunSuite {
     assert(sites == Seq(
       "graft/streaming/CdcReplaySource.scala" -> "lastEntryIntact"),
       sites.mkString("\n"))
+  }
+
+  test("Catalyst expressions and function registration live only in " +
+      "NativeFunctions") {
+    // one table of native SQL functions: an expression class or a
+    // registration list elsewhere would be a second, unchecked registry
+    val re = ("""doGenCode|(extends|with)\s+([\w.]+\.)?""" +
+      """(Unary|Binary)?Expression\b|injectFunction|""" +
+      """createOrReplaceTempFunction""").r
+    val sites = sources.collect {
+      case (f, text) if re.findFirstIn(text).isDefined => f
+    }
+    assert(sites == Seq("graft/cdc/NativeFunctions.scala"), sites.mkString("\n"))
   }
 
   private val tuned = Map(

@@ -82,4 +82,18 @@ class PgStartupSpec extends AnyFunSuite {
     assert(fields('C') == "28P01")
     assert(fields('M') == "bad password")
   }
+
+  test("errorMessage reads back the message of errorBody") {
+    for (m <- Seq("bad password", "", "slot \"s\" is active for PID 42", "slöt_☃"))
+      assert(PgStartup.errorMessage(PgStartup.errorBody("55006", m)) == m)
+  }
+
+  test("an error body with no M field reads as \"server error\"") {
+    val body = new BinaryWriter()
+      .writeUint8('S').writeString("FATAL")
+      .writeUint8('C').writeString("57P01")
+      .writeUint8(0).result()
+    assert(PgStartup.errorMessage(body) == "server error")
+    assert(PgStartup.errorMessage(Array[Byte](0)) == "server error")
+  }
 }
