@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.io.{File, IOException}
 import java.nio.file.{Files, Path, StandardCopyOption}
+import java.util.UUID
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
@@ -14,6 +15,9 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
   *
   *  - [[readParquetOpt]] is the one reading of "no store yet";
   *  - [[replaceFile]] replaces one file (scratch + `ATOMIC_MOVE`);
+  *  - [[scratchFor]] + [[publish]] are the same protocol for a writer
+  *    that holds no lock (a checkpoint file): a unique scratch, then a
+  *    replace or a create-if-absent;
   *  - [[replaceDir]] replaces one directory (`_compact_tmp` /
   *    `_compact_old` demote-promote);
   *  - [[recoverCompaction]] heals what a crash cut in [[replaceDir]] and
@@ -60,6 +64,26 @@ private[streaming] object Durable {
         throw e
     }
   }
+
+  /** A unique scratch path beside `target`, `.<name>.<uuid>.tmp`: the form
+    * Spark's own checkpoint writers use. Unlike [[replaceFile]], nothing
+    * sweeps older scratch here: two writers may race on one target, and
+    * neither may delete the other's file. */
+  def scratchFor(target: Path): Path =
+    target.resolveSibling(s".${target.getFileName}.${UUID.randomUUID()}.tmp")
+
+  /** Publishes the complete `scratch` as `target` and leaves no scratch.
+    * With `overwrite`, one `ATOMIC_MOVE` replaces any old target. Without
+    * it, a hard link publishes the target only if it is absent: the link
+    * fails atomically with `java.nio.file.FileAlreadyExistsException` when
+    * another writer got there first, so of two racing writers exactly one
+    * wins, and the loser's bytes never replace the winner's. */
+  def publish(scratch: Path, target: Path, overwrite: Boolean): Unit =
+    try {
+      if (overwrite) Files.move(scratch, target,
+        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+      else Files.createLink(target, scratch)
+    } finally Files.deleteIfExists(scratch)
 
   /** Replaces the directory `dir` whole. `write` fills the scratch dir
     * `<dir>_compact_tmp` (its path is the argument); then the live dir is

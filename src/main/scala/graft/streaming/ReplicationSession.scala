@@ -27,7 +27,16 @@ import graft.cdc.{AckScheduler, CdcFormat, Lsn}
   *    same record.
   *  - `stop()` (`:264-280`) → stops every query this session started.
   *  - `'heartbeat'` events (`:165-171`) → [[CdcProgressListener]]
-  *    heartbeats, attached per session.
+  *    heartbeats, attached per session: detached by `stop()`, attached
+  *    again by the next `subscribe`.
+  *  - the durable delivery position behind the acks is Structured
+  *    Streaming's checkpoint (offset log, commit log, state store). The
+  *    constructor makes [[LocalCheckpointFileManager]] the session's
+  *    checkpoint file manager, unless
+  *    `spark.sql.streaming.checkpointFileManagerClass` is already set
+  *    (that key stays the override). On local disk it forks no process
+  *    per checkpoint file; without the native Hadoop library, Spark's
+  *    default forks ~100 per stateful micro-batch.
   *
   * Threading differences are the point: the reference delivers on one
   * Node event loop; here delivery is a Spark query, so "the handler"
@@ -44,6 +53,12 @@ final class ReplicationSession(
   /** The heartbeat surface ('heartbeat'/keepalive analogue). */
   val listener = new CdcProgressListener()
   spark.streams.addListener(listener)
+
+  locally {
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    if (spark.conf.getOption(key).isEmpty)
+      spark.conf.set(key, classOf[LocalCheckpointFileManager].getName)
+  }
 
   /** Standby-status re-ack timer (`timeoutSeconds`, 1 s resolution in
     * the reference; drive [[AckScheduler.tick]] from any scheduler). */
@@ -101,6 +116,7 @@ final class ReplicationSession(
       r.option("maxFramesPerTrigger", n.toString)).load()
     // only once the subscription actually exists — a throw above must
     // not flip a stopped session back to live
+    if (stopped) spark.streams.addListener(listener)
     stopped = false
     df
   }

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * one-off mains in the library packages, no unbuffered frame-log
   * reads in the streaming package, one ack-state file per log dir, one
   * crash protocol and one "empty store" reading in the streaming
-  * package, one table of native SQL functions — and the one session's settings pinned, so a drift from
+  * package, one place that installs the checkpoint file manager, one
+  * table of native SQL functions — and the one session's settings
+  * pinned, so a drift from
   * the benchmark's copy fails here instead of silently timing a
   * different plan. */
 class SourceLintSpec extends AnyFunSuite {
@@ -106,11 +108,22 @@ class SourceLintSpec extends AnyFunSuite {
   }
 
   test("streaming renames and makes scratch files only in Durable") {
-    // every publish goes through Durable's replaceFile / replaceDir, so
-    // a durability change (an fsync, a rename retry) is one edit
-    val bad = streamingSites("""ATOMIC_MOVE|renameTo\(|createTempFile\(""".r)
+    // every publish goes through Durable's replaceFile / replaceDir /
+    // publish, so a durability change (an fsync, a rename retry) is one edit
+    val bad = streamingSites(
+      """ATOMIC_MOVE|renameTo\(|createTempFile\(|createLink\(""".r)
       .filterNot(_._1 == "graft/streaming/Durable.scala")
     assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("only ReplicationSession names the checkpoint file manager key") {
+    // one place installs the checkpoint file manager; Spark's key stays
+    // the user's override, and no second default may creep in elsewhere
+    val sites = sources.collect {
+      case (f, text) if text.contains("checkpointFileManagerClass") => f
+    }
+    assert(sites == Seq("graft/streaming/ReplicationSession.scala"),
+      sites.mkString("\n"))
   }
 
   test("streaming reads a failed store read as empty only in " +

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -113,6 +113,42 @@ class ReplicationSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
     session.destroy() // idempotent
     intercept[IllegalStateException] {
       session.subscribe(new PgoutputFormat(), "slot1")
+    }
+  }
+
+  test("heartbeats resume after stop and resubscribe, one per progress") {
+    val session = new ReplicationSession(spark, logDir)
+    // two stop/subscribe cycles: the listener comes back, and only once
+    (1 to 2).foreach { _ =>
+      session.subscribe(new PgoutputFormat(), "slot1",
+        uptoLsn = Some("0/00000000"))
+      session.stop()
+    }
+    val df = session.subscribe(new PgoutputFormat(), "slot1",
+      uptoLsn = Some("0/00000000"), maxFramesPerTrigger = Some(5L))
+    // progress events reach listeners in order, before the termination
+    val terminated = new java.util.concurrent.CountDownLatch(1)
+    val done = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.countDown()
+    }
+    spark.streams.addListener(done)
+    try {
+      val q = df.writeStream.format("memory").queryName("rs_heartbeat")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("ckpt-rs").toString)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(60000)
+      assert(terminated.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      val beats = session.listener.heartbeats.filter(_.queryName == "rs_heartbeat")
+      assert(beats.nonEmpty, "no heartbeat after a restart")
+      assert(beats.size == q.recentProgress.length)
+      assert(beats.map(_.lsn).max == 200L)
+    } finally {
+      spark.streams.removeListener(done)
+      session.stop()
     }
   }
 }
