@@ -30,7 +30,11 @@ object MicroBatchLatency {
     * pays one-time class-load/codegen/state-machinery costs (~4 s
     * measured locally) that the reference's figure — visibility on a
     * RUNNING subscription — never includes, so callers measure twice
-    * and report the second, warm number. */
+    * and report the second, warm number. The codegen part is one-time
+    * because [[ReplicationSession]] turns artifact isolation off: every
+    * query run is a clone of the session with its own session UUID, and
+    * with isolation on each run got a new executor class loader and
+    * compiled its generated classes again. */
   def measureWarm(spark: SparkSession): (Double, Long) = {
     measure(spark)
     measure(spark)

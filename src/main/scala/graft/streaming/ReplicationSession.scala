@@ -30,13 +30,29 @@ import graft.cdc.{AckScheduler, CdcFormat, Lsn}
   *    heartbeats, attached per session: detached by `stop()`, attached
   *    again by the next `subscribe`.
   *  - the durable delivery position behind the acks is Structured
-  *    Streaming's checkpoint (offset log, commit log, state store). The
-  *    constructor makes [[LocalCheckpointFileManager]] the session's
-  *    checkpoint file manager, unless
-  *    `spark.sql.streaming.checkpointFileManagerClass` is already set
-  *    (that key stays the override). On local disk it forks no process
+  *    Streaming's checkpoint (offset log, commit log, state store).
+  *
+  * The constructor installs two Spark settings on the user's session,
+  * each only when the user has not set it (Spark's key stays the
+  * override; see [[ReplicationSession.sessionDefaults]]):
+  *
+  *  - `spark.sql.streaming.checkpointFileManagerClass` →
+  *    [[LocalCheckpointFileManager]]. On local disk it forks no process
   *    per checkpoint file; without the native Hadoop library, Spark's
   *    default forks ~100 per stateful micro-batch.
+  *  - `spark.sql.artifact.isolation.enabled` → `false`. Every query run
+  *    (a subscribe, a restart from a checkpoint, a catch-up replay)
+  *    runs on a clone of the session with a new session UUID, and with
+  *    isolation on the executor gives each UUID its own class loader.
+  *    Spark's codegen cache is keyed by (class loader, code), so each
+  *    query run compiled its generated classes again with Janino and ran
+  *    them cold (17 compiles per warm `statefulSnapshot` start, 2 with
+  *    isolation off). Off, all query runs share one executor class
+  *    loader, and a generated class is compiled and JIT-warmed once per
+  *    JVM. The trade-off: artifacts added with `addArtifact` (the Spark
+  *    Connect style) become visible to the other non-isolated sessions
+  *    of the application. A user who needs that isolation sets the key
+  *    to `true` before constructing the session.
   *
   * Threading differences are the point: the reference delivers on one
   * Node event loop; here delivery is a Spark query, so "the handler"
@@ -55,9 +71,12 @@ final class ReplicationSession(
   spark.streams.addListener(listener)
 
   locally {
-    val key = "spark.sql.streaming.checkpointFileManagerClass"
-    if (spark.conf.getOption(key).isEmpty)
-      spark.conf.set(key, classOf[LocalCheckpointFileManager].getName)
+    // getAll holds only the keys someone set: a key with a default
+    // (isolation's `true`) reads as set through getOption
+    val set = spark.conf.getAll
+    ReplicationSession.sessionDefaults.foreach { case (key, value) =>
+      if (!set.contains(key)) spark.conf.set(key, value)
+    }
   }
 
   /** Standby-status re-ack timer (`timeoutSeconds`, 1 s resolution in
@@ -179,4 +198,14 @@ final class ReplicationSession(
     CdcReplaySource.updateAcks(logDir)(acked(_, lsn))
     ()
   }
+}
+
+object ReplicationSession {
+
+  /** The Spark settings a [[ReplicationSession]] installs on its
+    * session, each only where the user has not set the key. */
+  private[graft] val sessionDefaults: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[LocalCheckpointFileManager].getName,
+    "spark.sql.artifact.isolation.enabled" -> "false")
 }

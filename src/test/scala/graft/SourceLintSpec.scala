@@ -12,11 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * one-off mains in the library packages, no unbuffered frame-log
   * reads in the streaming package, one ack-state file per log dir, one
   * crash protocol and one "empty store" reading in the streaming
-  * package, one place that installs the checkpoint file manager, one
-  * table of native SQL functions — and the one session's settings
-  * pinned, so a drift from
-  * the benchmark's copy fails here instead of silently timing a
-  * different plan. */
+  * package, one place that installs Spark settings on a user's
+  * session, one table of native SQL functions — and the one session's
+  * settings pinned, so a drift from the benchmark's copy fails here
+  * instead of silently timing a different plan. */
 class SourceLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -116,14 +115,34 @@ class SourceLintSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 
-  test("only ReplicationSession names the checkpoint file manager key") {
-    // one place installs the checkpoint file manager; Spark's key stays
-    // the user's override, and no second default may creep in elsewhere
-    val sites = sources.collect {
-      case (f, text) if text.contains("checkpointFileManagerClass") => f
+  /** Each Spark key ReplicationSession installs on a user's session,
+    * with the fragment no other source may name. */
+  private val installedKeys = Map(
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "checkpointFileManagerClass",
+    "spark.sql.artifact.isolation.enabled" -> "artifact.isolation")
+
+  test("only ReplicationSession names the Spark keys it installs") {
+    // one place installs the library's defaults on a user's session;
+    // Spark's keys stay the user's override, and no second default may
+    // creep in elsewhere
+    assert(streaming.ReplicationSession.sessionDefaults.map(_._1).toSet ==
+      installedKeys.keySet)
+    installedKeys.values.foreach { fragment =>
+      val sites = sources.collect {
+        case (f, text) if text.contains(fragment) => f
+      }
+      assert(sites == Seq("graft/streaming/ReplicationSession.scala"),
+        s"$fragment: ${sites.mkString("\n")}")
     }
-    assert(sites == Seq("graft/streaming/ReplicationSession.scala"),
-      sites.mkString("\n"))
+    // and no other library code writes a setting on the session it is
+    // handed (the mains configure their own session through GraftSession)
+    val writers = sources.collect {
+      case (f, text) if Seq("graft/ops/", "graft/cdc/", "graft/streaming/")
+          .exists(f.startsWith) && text.contains("conf.set(") => f
+    }
+    assert(writers == Seq("graft/streaming/ReplicationSession.scala"),
+      writers.mkString("\n"))
   }
 
   test("streaming reads a failed store read as empty only in " +
