@@ -1,10 +1,11 @@
 package graft.streaming
 
 import java.io.{File, IOException}
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The crash protocol of every store and log-dir write in this package,
   * the reference's durable-then-ack contract
@@ -21,7 +22,12 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
   *  - [[replaceDir]] replaces one directory (`_compact_tmp` /
   *    `_compact_old` demote-promote);
   *  - [[recoverCompaction]] heals what a crash cut in [[replaceDir]] and
-  *    sweeps a per-file rewrite's `_rw_tmp`.
+  *    sweeps a per-file rewrite's `_rw_tmp` and an append's
+  *    `_append_tmp`;
+  *  - [[commitBatch]] commits a foreachBatch batch: heal, check the
+  *    `_batch-<id>` file, sweep a crashed attempt's tagged parts,
+  *    append, mark last;
+  *  - [[parquetFiles]] lists the part files Spark reads in a store.
   *
   * Nothing here fsyncs; adding that is an edit to this object alone. */
 private[streaming] object Durable {
@@ -29,9 +35,8 @@ private[streaming] object Durable {
   /** A parquet store, or None for the two states that mean "no store
     * yet": a missing dir, and a dir that holds no parquet (pre-created by
     * a harness, or left by a write that failed before its commit). Any
-    * other failure rethrows. A commit-marker check must tell "no marker"
-    * apart from "could not read": read as empty, an unreadable marker
-    * store would run a committed batch again. */
+    * other failure rethrows: read as empty, an unreadable store would
+    * restart its owner's state (a replay guard, an offset) from zero. */
   def readParquetOpt(spark: SparkSession, dir: String): Option[DataFrame] =
     try Some(spark.read.parquet(dir))
     catch {
@@ -127,6 +132,81 @@ private[streaming] object Durable {
     }
     if (live.exists) { delTree(old); delTree(tmp) }
     delTree(new File(dir + "_rw_tmp"))
+    delTree(new File(dir + "_append_tmp"))
+  }
+
+  /** The part files of store `dir` that a Spark read lists: `.parquet`
+    * names not hidden by a leading `_` or `.` (no marker, checksum or
+    * scratch file). Empty for a missing dir. */
+  def parquetFiles(dir: String): Seq[File] =
+    Option(new File(dir).listFiles()).toSeq.flatten.filter { f =>
+      val n = f.getName
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  /** A part name a [[BatchAppend]] tagged: `b<batchId>-<marker store>.` */
+  private val Tagged = """b\d+-[0-9a-f]{8}\..*""".r
+
+  /** Runs batch `batchId` of a foreachBatch operator once against its
+    * stores: the sink half of exactly-once, beside a replayable source.
+    * The commit is the zero-byte file `_batch-<batchId>` in `markerDir`
+    * (Spark's listing skips `_` names). In order:
+    *  - heal: [[recoverCompaction]] on `markerDir` and every `stores` dir;
+    *  - check: with the marker file present, return None — no Spark job.
+    *    A marker store an older binary wrote commits by rows: a
+    *    `batch_id` row of this batch in an untagged part counts too;
+    *  - sweep: delete from every declared store the parts an earlier
+    *    attempt appended, by their tag, which names the batch and
+    *    `markerDir` (another stream's same batch id keeps its parts);
+    *  - run `body`, which appends to declared stores only through the
+    *    [[BatchAppend]] it is handed;
+    *  - commit: create the marker. */
+  def commitBatch[T](spark: SparkSession, markerDir: String, batchId: Long,
+      stores: Seq[String])(body: BatchAppend => T): Option[T] = {
+    val declared = (markerDir +: stores).distinct
+    declared.foreach(recoverCompaction)
+    val marker = new File(markerDir, s"_batch-$batchId")
+    if (marker.exists || committedByRows(spark, markerDir, batchId)) None
+    else {
+      val store = new File(markerDir).getAbsoluteFile.toPath.normalize
+      val tag = f"b$batchId-${store.toString.hashCode}%08x."
+      for (d <- declared; f <- Option(new File(d).listFiles()).toSeq.flatten
+          if f.getName.startsWith(tag)) Files.delete(f.toPath)
+      val out = body(new BatchAppend(spark, tag, declared.toSet))
+      Files.createDirectories(Paths.get(markerDir))
+      Files.write(marker.toPath, Array.emptyByteArray)
+      Some(out)
+    }
+  }
+
+  private def committedByRows(spark: SparkSession, markerDir: String,
+      batchId: Long): Boolean = {
+    val legacy = parquetFiles(markerDir).filterNot(f =>
+      Tagged.matches(f.getName))
+    legacy.nonEmpty && spark.read.parquet(legacy.map(_.getPath): _*)
+      .filter(col("batch_id") === batchId).limit(1).count() > 0
+  }
+
+  /** The appends of one [[commitBatch]] batch: `df` is written whole
+    * into `<dir>_append_tmp`, each part moves into `dir` under the
+    * batch's tag (its `.crc` sidecar is dropped with the scratch), and
+    * the plans cached over `dir` are refreshed, as after a Spark append.
+    * With `swept = false` the parts keep Spark's names and a replay
+    * keeps them: for a write that its own content guard makes
+    * replay-safe and that a later in-place rewrite of the batch needs. */
+  final class BatchAppend private[Durable] (spark: SparkSession,
+      tag: String, stores: Set[String]) {
+    def apply(df: DataFrame, dir: String, swept: Boolean = true): Unit = {
+      require(stores(dir), s"$dir is not a declared store of this batch")
+      val tmp = dir + "_append_tmp"
+      df.write.mode("overwrite").parquet(tmp)
+      Files.createDirectories(Paths.get(dir))
+      for (f <- parquetFiles(tmp)) Files.move(f.toPath,
+        Paths.get(dir, (if (swept) tag else "") + f.getName),
+        StandardCopyOption.ATOMIC_MOVE)
+      delTree(new File(tmp))
+      spark.catalog.refreshByPath(dir)
+    }
   }
 
   def delTree(f: File): Unit = {

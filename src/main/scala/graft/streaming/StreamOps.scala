@@ -21,15 +21,7 @@ import graft.cdc.CdcFunctions
   * max_by-LSN merge sink (post-agg).
   */
 object StreamOps {
-  import Durable.readParquetOpt
-
-  /** Whether `df` holds a row whose `column` is `v`: the commit-marker
-    * and generation-guard test of the foreachBatch sinks, applied as
-    * `readParquetOpt(...).exists(hasRow(...))`, so only a missing or
-    * empty store reads as "not done" and any other read failure fails
-    * the batch for the engine to retry. */
-  private def hasRow(column: String, v: Long)(df: DataFrame): Boolean =
-    df.filter(col(column) === v).limit(1).count() > 0
+  import Durable.{commitBatch, readParquetOpt}
 
   /** One decoded DML change per output element; errors either rethrow
     * (fail-fast) or become a dead-letter element. */
@@ -521,6 +513,17 @@ object StreamOps {
     Durable.delTree(tmpDir)
   }
 
+  /** The live rows of a dedup shingle index: each doc's latest
+    * generation (`gen` = the batchId that wrote it; a pre-gen index
+    * reads as one generation -1), less tombstone generations (n = -1:
+    * the doc was superseded or erased and holds no live rows). */
+  private def liveShingles(idx0: DataFrame): DataFrame = {
+    val idx = if (idx0.columns.contains("gen")) idx0
+      else idx0.withColumn("gen", lit(-1L))
+    idx.join(idx.groupBy(col("doc_id")).agg(max(col("gen")).as("gen")),
+      Seq("doc_id", "gen")).filter(col("n") >= 0)
+  }
+
   /** foreachBatch dedup-on-ingest with WRITE-BACK: each micro-batch of
     * `(doc_id, text)` arrivals probes the standing shingle index
     * (new×existing only — work scales with the batch, never corpus²),
@@ -532,8 +535,9 @@ object StreamOps {
     * analogue of the reference's ack-then-advance delivery loop
     * (`/root/reference/src/logical-replication-service.ts:187-192`).
     *
-    * Idempotent on `doc_id`: a re-delivered doc (at-least-once replay)
-    * is anti-joined away against the index's standing doc ids, so its
+    * The verdicts commit the batch ([[Durable.commitBatch]]). Across
+    * batches it is idempotent on `doc_id`: a re-delivered doc is
+    * anti-joined away against the index's standing doc ids, so its
     * shingles are never appended twice. A doc is a duplicate when its
     * best index match shares >= `minShared` shingles; self-matches
     * (same doc_id) don't count. Verdicts land in `verdictsDir` as
@@ -555,186 +559,161 @@ object StreamOps {
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     graft.cdc.GraftFunctions.register(spark)
-    // finish any compaction publish a crash interrupted BEFORE the
-    // index read below — otherwise a missing live dir would read as
-    // "first batch" and silently disable dup detection
-    recoverCompaction(indexDir)
-    // Batch-replay idempotency: foreachBatch re-runs a batch after a
-    // crash with the SAME batchId. The verdict append is the COMMIT
-    // MARKER (written LAST, batchId-checked here); the index append
-    // is doc_id-idempotent, so replaying the half-committed window
-    // between the two writes re-runs it harmlessly. Writing the
-    // verdicts first would instead make a crash between the writes
-    // skip the index append forever on replay.
-    if (readParquetOpt(spark, verdictsDir)
-        .exists(hasRow("batch_id", batchId))) return
-    // at-least-once delivery can replay a doc WITHIN one batch too:
-    // shingle once per distinct doc_id or shared-counts double and
-    // the index append duplicates rows
-    val uniq = batch.dropDuplicates("doc_id")
-    val sh = shingleArrivals(uniq)
-      .cache() // probe + write-back, one pass
-    try {
-      // only a missing or empty index means "first batch" — any other
-      // read failure (transient IO, corruption) must fail the batch so
-      // streaming retries it, not silently disable dup detection
-      val existingRaw =
-        readParquetOpt(spark, indexDir).getOrElse(spark.emptyDataFrame)
-      val hasIndex = existingRaw.columns.nonEmpty
-      // Generation-tagged rows: `gen` = the batchId that wrote them;
-      // a doc's LIVE shingles are its latest generation's (tombstone
-      // generations carry n = -1: the doc was superseded by canonical
-      // election and holds no live rows). A pre-gen index migrates as
-      // one generation -1.
-      val existing =
-        if (!hasIndex) existingRaw
-        else if (existingRaw.columns.contains("gen")) existingRaw
-        else existingRaw.withColumn("gen", lit(-1L))
-      val live =
-        if (!hasIndex) existingRaw
-        else existing
-          .join(existing.groupBy(col("doc_id"))
-            .agg(max(col("gen")).as("gen")), Seq("doc_id", "gen"))
-          .filter(col("n") >= 0)
-          .select(col("doc_id"), col("h"), col("n"))
-          .cache()
-      // EVERY arrival gets a verdict row — derived from the deduped
-      // batch, not the shingle frame: a sub-3-token doc produces no
-      // shingles, and deriving ids from `sh` would leave it without a
-      // verdict (incomplete audit trail) and re-evaluated on every
-      // redelivery despite the doc_id-idempotency contract. Such docs
-      // probe nothing and land as shared=0 novel rows.
-      val arrivalsIds = uniq.select(col("doc_id"))
-      val best =
-        if (!hasIndex)
-          arrivalsIds.select(col("doc_id"), lit(null).cast("long")
-            .as("best_match"), lit(0L).as("shared"))
-        else {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("doc_id"))
-            .orderBy(col("shared").desc, col("corpus_doc"))
-          val m = sh
-            .join(live.select(col("doc_id").as("corpus_doc"), col("h")),
-              "h")
-            .filter(col("doc_id") =!= col("corpus_doc"))
-            .groupBy(col("doc_id"), col("corpus_doc"))
-            .agg(count(lit(1)).as("shared"))
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") === 1)
-            .select(col("doc_id"), col("corpus_doc").as("best_match"),
-              col("shared"))
-          arrivalsIds.select(col("doc_id"))
-            .join(m, Seq("doc_id"), "left")
-            .select(col("doc_id"), col("best_match"),
-              coalesce(col("shared"), lit(0L)).as("shared"))
-        }
-      // cached: the probe join + rank inside `best` feeds BOTH writes;
-      // without it the dominant join would execute twice per batch
-      // Churn classification for arrivals whose doc_id already
-      // stands live: UNCHANGED content (shingle set identical — the
-      // at-least-once redelivery case) appends nothing, the original
-      // idempotency contract; CHANGED content supersedes the doc's
-      // previous generation. A changed doc that now duplicates
-      // ANOTHER standing doc loses the canonical election — it gets
-      // a TOMBSTONE generation (n = -1), so its stale shingles leave
-      // the live view and the canonical copy alone represents the
-      // content. Batch-bounded frame, cached: consumed by replaced,
-      // tombstones, and the compaction gate count below.
-      val changedIds =
-        if (!hasIndex) spark.emptyDataFrame.select()
-        else {
-          val standing = live.select(col("doc_id")).distinct()
-          val shStanding = sh.join(standing, Seq("doc_id"), "left_semi")
-            .select(col("doc_id"), col("h"))
-          val liveOfArrived =
-            live.join(arrivalsIds, Seq("doc_id"), "left_semi")
-              .select(col("doc_id"), col("h"))
-          // symmetric difference per doc: any row on exactly one
-          // side means the shingle set moved
-          shStanding.withColumn("side", lit(1))
-            .join(liveOfArrived.withColumn("side2", lit(1)),
-              Seq("doc_id", "h"), "full_outer")
-            .filter(col("side").isNull || col("side2").isNull)
-            .select(col("doc_id")).distinct()
-            .cache()
-        }
-      // batch-bounded gate for the compaction check below: stale
-      // rows only grow when a standing doc's content moved, so a
-      // batch with zero churn can skip the two index-scale counts
-      // (the invariant from the previous batch's check still holds)
-      val nChanged = if (!hasIndex) 0L else changedIds.count()
-      val verdicts = best
-        .withColumn("is_dup", col("shared") >= minShared)
-        .withColumn("batch_id", lit(batchId))
-        .select(col("batch_id"), col("doc_id"), col("best_match"),
-          col("shared"), col("is_dup"))
-        .cache()
+    // the index is healed before its read: a missing live dir would
+    // read as "first batch" and silently disable dup detection
+    val churned = commitBatch(spark, verdictsDir, batchId, Seq(indexDir)) {
+      append =>
+      // at-least-once delivery can replay a doc WITHIN one batch too:
+      // shingle once per distinct doc_id or shared-counts double and
+      // the index append duplicates rows
+      val uniq = batch.dropDuplicates("doc_id")
+      val sh = shingleArrivals(uniq)
+        .cache() // probe + write-back, one pass
       try {
-        val dupIds = verdicts.filter(col("is_dup")).select(col("doc_id"))
-        val freshNovel = {
-          var a = sh.join(dupIds, Seq("doc_id"), "left_anti")
-          if (hasIndex) // standing docs handled by the churn path
-            a = a.join(live.select(col("doc_id")).distinct(),
-              Seq("doc_id"), "left_anti")
-          a
-        }
-        val replaced =
-          if (!hasIndex) spark.emptyDataFrame
-          else sh.join(changedIds, Seq("doc_id"), "left_semi")
-            .join(dupIds, Seq("doc_id"), "left_anti")
-        val tombstones =
-          if (!hasIndex) spark.emptyDataFrame
+        // only a missing or empty index means "first batch" — any other
+        // read failure (transient IO, corruption) must fail the batch so
+        // streaming retries it, not silently disable dup detection
+        val existing =
+          readParquetOpt(spark, indexDir).getOrElse(spark.emptyDataFrame)
+        val hasIndex = existing.columns.nonEmpty
+        val live =
+          if (!hasIndex) existing
+          else liveShingles(existing)
+            .select(col("doc_id"), col("h"), col("n")).cache()
+        // EVERY arrival gets a verdict row — derived from the deduped
+        // batch, not the shingle frame: a sub-3-token doc produces no
+        // shingles, and deriving ids from `sh` would leave it without a
+        // verdict (incomplete audit trail) and re-evaluated on every
+        // redelivery despite the doc_id-idempotency contract. Such docs
+        // probe nothing and land as shared=0 novel rows.
+        val arrivalsIds = uniq.select(col("doc_id"))
+        val best =
+          if (!hasIndex)
+            arrivalsIds.select(col("doc_id"), lit(null).cast("long")
+              .as("best_match"), lit(0L).as("shared"))
           else {
-            // two ways a changed doc's stale shingles must leave the
-            // live view: (a) its new content duplicates another
-            // standing doc (canonical election loss); (b) its new
-            // content produces NO shingles at all (< 3 tokens) — it
-            // has no replaced rows to supersede the old generation,
-            // so without a tombstone the previous generation would
-            // stay live forever while the doc's actual content is
-            // empty (r11 advisor finding)
-            val shingleless = changedIds
-              .join(sh.select(col("doc_id")).distinct(),
-                Seq("doc_id"), "left_anti")
-            changedIds.join(dupIds, Seq("doc_id"), "left_semi")
-              .unionByName(shingleless).distinct()
-              .select(col("doc_id"), lit(0L).as("h"), lit(-1L).as("n"))
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(col("doc_id"))
+              .orderBy(col("shared").desc, col("corpus_doc"))
+            val m = sh
+              .join(live.select(col("doc_id").as("corpus_doc"), col("h")),
+                "h")
+              .filter(col("doc_id") =!= col("corpus_doc"))
+              .groupBy(col("doc_id"), col("corpus_doc"))
+              .agg(count(lit(1)).as("shared"))
+              .withColumn("rn", row_number().over(w))
+              .filter(col("rn") === 1)
+              .select(col("doc_id"), col("corpus_doc").as("best_match"),
+                col("shared"))
+            arrivalsIds.select(col("doc_id"))
+              .join(m, Seq("doc_id"), "left")
+              .select(col("doc_id"), col("best_match"),
+                coalesce(col("shared"), lit(0L)).as("shared"))
           }
-        var appendRows = freshNovel.select(col("doc_id"), col("h"), col("n"))
-        if (hasIndex)
-          appendRows = appendRows
-            .unionByName(replaced.select(col("doc_id"), col("h"), col("n")))
-            .unionByName(tombstones)
-        // index first (generation-idempotent, replay-safe), verdicts
-        // last (the batch's commit marker)
-        appendRows.withColumn("gen", lit(batchId))
-          .write.mode("append").parquet(indexDir)
-        verdicts.write.mode("append").parquet(verdictsDir)
-      } finally { verdicts.unpersist(); () }
-      // ---- compaction: bound on-disk rows at live/(1-f) ------------
-      // Superseded generations + tombstones accumulate under churn;
-      // once they exceed the threshold fraction, rewrite the index
-      // down to its live rows (at 100 TB: a MERGE/compaction job over
-      // the bucketed index table — same policy, different writer).
-      if (hasIndex && compactStaleFraction < 1.0 && nChanged > 0) {
-        val idx = spark.read.parquet(indexDir)
-        val total = idx.count()
-        val liveNow = idx
-          .join(idx.groupBy(col("doc_id"))
-            .agg(max(col("gen")).as("gen")), Seq("doc_id", "gen"))
-          .filter(col("n") >= 0)
-        val liveCount = liveNow.count()
-        if (total > 0 && (total - liveCount) > compactStaleFraction * total) {
-          // Crash-safe publish (r11 advisor): NEVER a moment where the
-          // live index is gone without a complete replacement on disk
-          // — see [[publishCompacted]] (healed by recoverCompaction at
-          // every batch start).
-          publishCompacted(indexDir,
-            liveNow.select(col("doc_id"), col("h"), col("n"), col("gen")))
-        }
+        // cached: the probe join + rank inside `best` feeds BOTH writes;
+        // without it the dominant join would execute twice per batch
+        // Churn classification for arrivals whose doc_id already
+        // stands live: UNCHANGED content (shingle set identical — the
+        // at-least-once redelivery case) appends nothing, the original
+        // idempotency contract; CHANGED content supersedes the doc's
+        // previous generation. A changed doc that now duplicates
+        // ANOTHER standing doc loses the canonical election — it gets
+        // a TOMBSTONE generation (n = -1), so its stale shingles leave
+        // the live view and the canonical copy alone represents the
+        // content. Batch-bounded frame, cached: consumed by replaced,
+        // tombstones, and the compaction gate count below.
+        val changedIds =
+          if (!hasIndex) spark.emptyDataFrame.select()
+          else {
+            val standing = live.select(col("doc_id")).distinct()
+            val shStanding = sh.join(standing, Seq("doc_id"), "left_semi")
+              .select(col("doc_id"), col("h"))
+            val liveOfArrived =
+              live.join(arrivalsIds, Seq("doc_id"), "left_semi")
+                .select(col("doc_id"), col("h"))
+            // symmetric difference per doc: any row on exactly one
+            // side means the shingle set moved
+            shStanding.withColumn("side", lit(1))
+              .join(liveOfArrived.withColumn("side2", lit(1)),
+                Seq("doc_id", "h"), "full_outer")
+              .filter(col("side").isNull || col("side2").isNull)
+              .select(col("doc_id")).distinct()
+              .cache()
+          }
+        // batch-bounded gate for the compaction check below: stale
+        // rows only grow when a standing doc's content moved, so a
+        // batch with zero churn can skip the two index-scale counts
+        // (the invariant from the previous batch's check still holds)
+        val nChanged = if (!hasIndex) 0L else changedIds.count()
+        val verdicts = best
+          .withColumn("is_dup", col("shared") >= minShared)
+          .withColumn("batch_id", lit(batchId))
+          .select(col("batch_id"), col("doc_id"), col("best_match"),
+            col("shared"), col("is_dup"))
+          .cache()
+        try {
+          val dupIds = verdicts.filter(col("is_dup")).select(col("doc_id"))
+          val freshNovel = {
+            var a = sh.join(dupIds, Seq("doc_id"), "left_anti")
+            if (hasIndex) // standing docs handled by the churn path
+              a = a.join(live.select(col("doc_id")).distinct(),
+                Seq("doc_id"), "left_anti")
+            a
+          }
+          val replaced =
+            if (!hasIndex) spark.emptyDataFrame
+            else sh.join(changedIds, Seq("doc_id"), "left_semi")
+              .join(dupIds, Seq("doc_id"), "left_anti")
+          val tombstones =
+            if (!hasIndex) spark.emptyDataFrame
+            else {
+              // two ways a changed doc's stale shingles must leave the
+              // live view: (a) its new content duplicates another
+              // standing doc (canonical election loss); (b) its new
+              // content produces NO shingles at all (< 3 tokens) — it
+              // has no replaced rows to supersede the old generation,
+              // so without a tombstone the previous generation would
+              // stay live forever while the doc's actual content is
+              // empty (r11 advisor finding)
+              val shingleless = changedIds
+                .join(sh.select(col("doc_id")).distinct(),
+                  Seq("doc_id"), "left_anti")
+              changedIds.join(dupIds, Seq("doc_id"), "left_semi")
+                .unionByName(shingleless).distinct()
+                .select(col("doc_id"), lit(0L).as("h"), lit(-1L).as("n"))
+            }
+          var appendRows = freshNovel.select(col("doc_id"), col("h"), col("n"))
+          if (hasIndex)
+            appendRows = appendRows
+              .unionByName(replaced.select(col("doc_id"), col("h"), col("n")))
+              .unionByName(tombstones)
+          append(appendRows.withColumn("gen", lit(batchId)), indexDir)
+          append(verdicts, verdictsDir)
+        } finally { verdicts.unpersist(); () }
+        if (hasIndex) { changedIds.unpersist(); live.unpersist(); () }
+        hasIndex && nChanged > 0
+      } finally { sh.unpersist(); () }
+    }
+    // ---- compaction: bound on-disk rows at live/(1-f) --------------
+    // Superseded generations + tombstones accumulate under churn; once
+    // they exceed the threshold fraction, rewrite the index down to its
+    // live rows (at 100 TB: a MERGE/compaction job over the bucketed
+    // index table — same policy, different writer). Runs after the
+    // commit, so a crash in here defers it to the next churned batch.
+    if (churned.contains(true) && compactStaleFraction < 1.0) {
+      val idx = spark.read.parquet(indexDir)
+      val total = idx.count()
+      val liveNow = liveShingles(idx)
+      val liveCount = liveNow.count()
+      if (total > 0 && (total - liveCount) > compactStaleFraction * total) {
+        // Crash-safe publish (r11 advisor): NEVER a moment where the
+        // live index is gone without a complete replacement on disk
+        // — see [[publishCompacted]] (healed by recoverCompaction at
+        // every batch start).
+        publishCompacted(indexDir,
+          liveNow.select(col("doc_id"), col("h"), col("n"), col("gen")))
       }
-      if (hasIndex) { changedIds.unpersist(); live.unpersist(); () }
-    } finally { sh.unpersist(); () }
+    }
   }
 
   /** foreachBatch drift probe — q238's live form: each micro-batch
@@ -747,39 +726,39 @@ object StreamOps {
     * as q238. Arrivals outside the reference range clamp into the
     * edge bins (live data CAN leave the training range — that mass
     * lands in bins 0/9 and drives TV up, which is the alarm
-    * working). Same batch-id commit-marker idempotency as the other
-    * probes. The reference histogram is bins×types rows — broadcast
+    * working). The report commits the batch ([[Durable.commitBatch]]).
+    * The reference histogram is bins×types rows — broadcast
     * side; batch-side work is one keyed count. */
   def driftProbeBatch(refHistDir: String, reportDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    if (readParquetOpt(spark, reportDir)
-        .exists(hasRow("batch_id", batchId))) return
-    val ref = spark.read.parquet(refHistDir)
-    val meta = ref.select(col("event_type"), col("v0"), col("v1"))
-      .distinct()
-    val cb = batch.select(col("event_type"), col("value_c"))
-      .join(broadcast(meta), "event_type") // unseen types: no reference
-      .select(col("event_type"),
-        greatest(lit(0L), least(lit(9L),
-          expr("((value_c - v0) * 10) DIV (v1 - v0 + 1)"))).as("bin"))
-      .groupBy(col("event_type"), col("bin"))
-      .agg(count(lit(1)).as("cb"))
-    val j = ref.select(col("event_type"), col("bin"), col("c_ref"))
-      .join(cb, Seq("event_type", "bin"), "full_outer")
-      .select(col("event_type"),
-        coalesce(col("c_ref"), lit(0L)).as("cr"),
-        coalesce(col("cb"), lit(0L)).as("cb"))
-    j.groupBy(col("event_type"))
-      .agg(sum(col("cb")).as("nb"), sum(col("cr")).as("nr"),
-        collect_list(struct(col("cb"), col("cr"))).as("cells"))
-      .filter(col("nb") > 0 && col("nr") > 0)
-      .select(lit(batchId).as("batch_id"), col("event_type"),
-        col("nb").as("n_batch"),
-        expr("""1000 * aggregate(cells, 0L,
-                 (acc, x) -> acc + abs(x.cb * nr - x.cr * nb))
-               DIV (2 * nb * nr)""").as("tv_milli"))
-      .write.mode("append").parquet(reportDir)
+    commitBatch(spark, reportDir, batchId, Nil) { append =>
+      val ref = spark.read.parquet(refHistDir)
+      val meta = ref.select(col("event_type"), col("v0"), col("v1"))
+        .distinct()
+      val cb = batch.select(col("event_type"), col("value_c"))
+        .join(broadcast(meta), "event_type") // unseen types: no reference
+        .select(col("event_type"),
+          greatest(lit(0L), least(lit(9L),
+            expr("((value_c - v0) * 10) DIV (v1 - v0 + 1)"))).as("bin"))
+        .groupBy(col("event_type"), col("bin"))
+        .agg(count(lit(1)).as("cb"))
+      val j = ref.select(col("event_type"), col("bin"), col("c_ref"))
+        .join(cb, Seq("event_type", "bin"), "full_outer")
+        .select(col("event_type"),
+          coalesce(col("c_ref"), lit(0L)).as("cr"),
+          coalesce(col("cb"), lit(0L)).as("cb"))
+      val tv = j.groupBy(col("event_type"))
+        .agg(sum(col("cb")).as("nb"), sum(col("cr")).as("nr"),
+          collect_list(struct(col("cb"), col("cr"))).as("cells"))
+        .filter(col("nb") > 0 && col("nr") > 0)
+        .select(lit(batchId).as("batch_id"), col("event_type"),
+          col("nb").as("n_batch"),
+          expr("""1000 * aggregate(cells, 0L,
+                   (acc, x) -> acc + abs(x.cb * nr - x.cr * nb))
+                 DIV (2 * nb * nr)""").as("tv_milli"))
+      append(tv, reportDir)
+    }
   }
 
   /** foreachBatch KS probe — q255's live form: each micro-batch of
@@ -794,47 +773,47 @@ object StreamOps {
     * |cum_b·N_ref − cum_ref·N_b| ride DECIMAL(38,0). The reference is
     * histogram-sized (length domain), broadcast against the batch's
     * keyed counts — per-batch work scales with batch sources ×
-    * distinct lengths, never corpus volume. Same batch-id
-    * commit-marker idempotency as the other probes. */
+    * distinct lengths, never corpus volume. The report commits the
+    * batch ([[Durable.commitBatch]]). */
   def ksProbeBatch(refHistDir: String, reportDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    if (readParquetOpt(spark, reportDir)
-        .exists(hasRow("batch_id", batchId))) return
-    val ref = spark.read.parquet(refHistDir)
-      .select(col("len"), col("c_ref"))
-    val cb = batch.select(col("source"), col("len"))
-      .groupBy(col("source"), col("len")).agg(count(lit(1)).as("cs"))
-    val srcs = cb.select(col("source")).distinct()
-    val grid = cb.select(col("source"), col("len"))
-      .union(srcs.crossJoin(broadcast(ref.select(col("len")))))
-      .distinct()
-    val g = grid.join(cb, Seq("source", "len"), "left")
-      .join(broadcast(ref), Seq("len"), "left")
-      .select(col("source"), col("len"),
-        coalesce(col("cs"), lit(0L)).as("cs"),
-        coalesce(col("c_ref"), lit(0L)).as("cr"))
-    val wc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("source")).orderBy(col("len"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val cum = g.select(col("source"),
-      sum(col("cs")).over(wc).as("cum_b"),
-      sum(col("cr")).over(wc).as("cum_r"))
-    val tots = cb.groupBy(col("source")).agg(sum(col("cs")).as("nb"))
-    val nrRow = ref.agg(sum(col("c_ref")).as("nr"))
-    cum.join(broadcast(tots), "source").crossJoin(broadcast(nrRow))
-      .filter(col("nb") > 0 && col("nr") > 0)
-      .select(col("source"), col("nb"), col("nr"),
-        abs(expr("CAST(cum_b AS DECIMAL(38,0)) * nr" +
-          " - CAST(cum_r AS DECIMAL(38,0)) * nb")).as("diff"))
-      .groupBy(col("source"), col("nb"), col("nr"))
-      .agg(max(col("diff")).as("mx"))
-      .select(lit(batchId).as("batch_id"), col("source"),
-        col("nb").as("n_batch"),
-        expr("CAST(mx * 1000000 DIV (CAST(nb AS DECIMAL(38,0)) * nr)" +
-          " AS BIGINT)").as("ks_ppm"))
-      .write.mode("append").parquet(reportDir)
+    commitBatch(spark, reportDir, batchId, Nil) { append =>
+      val ref = spark.read.parquet(refHistDir)
+        .select(col("len"), col("c_ref"))
+      val cb = batch.select(col("source"), col("len"))
+        .groupBy(col("source"), col("len")).agg(count(lit(1)).as("cs"))
+      val srcs = cb.select(col("source")).distinct()
+      val grid = cb.select(col("source"), col("len"))
+        .union(srcs.crossJoin(broadcast(ref.select(col("len")))))
+        .distinct()
+      val g = grid.join(cb, Seq("source", "len"), "left")
+        .join(broadcast(ref), Seq("len"), "left")
+        .select(col("source"), col("len"),
+          coalesce(col("cs"), lit(0L)).as("cs"),
+          coalesce(col("c_ref"), lit(0L)).as("cr"))
+      val wc = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("source")).orderBy(col("len"))
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.currentRow)
+      val cum = g.select(col("source"),
+        sum(col("cs")).over(wc).as("cum_b"),
+        sum(col("cr")).over(wc).as("cum_r"))
+      val tots = cb.groupBy(col("source")).agg(sum(col("cs")).as("nb"))
+      val nrRow = ref.agg(sum(col("c_ref")).as("nr"))
+      val ks = cum.join(broadcast(tots), "source").crossJoin(broadcast(nrRow))
+        .filter(col("nb") > 0 && col("nr") > 0)
+        .select(col("source"), col("nb"), col("nr"),
+          abs(expr("CAST(cum_b AS DECIMAL(38,0)) * nr" +
+            " - CAST(cum_r AS DECIMAL(38,0)) * nb")).as("diff"))
+        .groupBy(col("source"), col("nb"), col("nr"))
+        .agg(max(col("diff")).as("mx"))
+        .select(lit(batchId).as("batch_id"), col("source"),
+          col("nb").as("n_batch"),
+          expr("CAST(mx * 1000000 DIV (CAST(nb AS DECIMAL(38,0)) * nr)" +
+            " AS BIGINT)").as("ks_ppm"))
+      append(ks, reportDir)
+    }
   }
 
   /** foreachBatch IVF index maintenance (r11 verdict ask 3): the
@@ -847,11 +826,9 @@ object StreamOps {
     * `(vec_id, j, gen)`, so the index advances with every
     * acknowledged batch and stays queryable throughout.
     *
-    * Idempotency, two layers (same contract as [[dedupIngestBatch]]):
-    * the report row is the batch commit marker (batchId-checked —
-    * crash replay of a committed batch is a no-op), and arrivals
-    * anti-join the standing vec_ids so cross-batch re-delivery never
-    * double-appends.
+    * The report row commits the batch ([[Durable.commitBatch]]), and
+    * arrivals anti-join the standing vec_ids so cross-batch re-delivery
+    * never double-appends.
     *
     * Drift-triggered retrain probe (q238's pattern, watching CELL
     * OCCUPANCY skew): after the append, one keyed count over the
@@ -888,75 +865,67 @@ object StreamOps {
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     graft.cdc.GraftFunctions.register(spark)
-    // heal a crashed ivfReassignFromStore publish (same tmp/old
-    // protocol as the dedup index's compaction) before reading
-    recoverCompaction(indexDir)
-    if (readParquetOpt(spark, reportDir)
-        .exists(hasRow("batch_id", batchId))) return
-    val uniq = batch.dropDuplicates("vec_id")
-    val standing = readParquetOpt(spark, indexDir)
-    val fresh = (standing match {
-      case Some(idx) => uniq.join(idx.select(col("vec_id")).distinct(),
-        Seq("vec_id"), "left_anti")
-      case None => uniq
-    }).cache() // index append + optional vector store + arrival count
-    try {
-      // Materialize the cache BEFORE the index append: the anti-join
-      // reads indexDir lazily, so once the append lands, a
-      // re-execution of `fresh` would see the batch's own ids as
-      // standing and evaluate EMPTY — the vector-store write and the
-      // n_arrived report row would silently drop the batch. Counting
-      // first pins the pre-append snapshot in the cache.
-      val nArrived = fresh.count()
-      val assigned = graft.ops.Vectors.assignArrivals(fresh, centroids)
-        .withColumn("gen", lit(batchId))
-      // index first (vec_id-idempotent), report last (commit marker) —
-      // the half-committed crash window replays harmlessly
-      assigned.write.mode("append").parquet(indexDir)
-      // The vector store dedups against ITSELF, not the index: the
-      // index append above triggers Spark's recache-by-path on any
-      // cached plan reading indexDir (making `fresh` empty), and a
-      // crash between the two writes must not drop or double the
-      // batch's store rows on replay — self-keyed anti-join gives
-      // both properties independent of the index state.
-      vecsDir.foreach { vd =>
-        val newVecs = readParquetOpt(spark, vd) match {
-          case Some(sv) => uniq.join(sv.select(col("vec_id")).distinct(),
-            Seq("vec_id"), "left_anti")
-          case None => uniq
+    // the heal covers a crashed ivfReassignFromStore publish
+    commitBatch(spark, reportDir, batchId, indexDir +: vecsDir.toSeq) {
+      append =>
+      val uniq = batch.dropDuplicates("vec_id")
+      val standing = readParquetOpt(spark, indexDir)
+      val fresh = (standing match {
+        case Some(idx) => uniq.join(idx.select(col("vec_id")).distinct(),
+          Seq("vec_id"), "left_anti")
+        case None => uniq
+      }).cache() // index append + optional vector store + arrival count
+      try {
+        // Materialize the cache BEFORE the index append: the anti-join
+        // reads indexDir lazily, so once the append lands, a
+        // re-execution of `fresh` would see the batch's own ids as
+        // standing and evaluate EMPTY — the vector-store write and the
+        // n_arrived report row would silently drop the batch. Counting
+        // first pins the pre-append snapshot in the cache.
+        val nArrived = fresh.count()
+        val assigned = graft.ops.Vectors.assignArrivals(fresh, centroids)
+          .withColumn("gen", lit(batchId))
+        append(assigned, indexDir)
+        // The vector store dedups against ITSELF, not the index: the
+        // index append above recaches-by-path any cached plan reading
+        // indexDir (making `fresh` empty), and the self-keyed anti-join
+        // keeps the store's rows independent of the index state.
+        vecsDir.foreach { vd =>
+          val newVecs = readParquetOpt(spark, vd) match {
+            case Some(sv) => uniq.join(sv.select(col("vec_id")).distinct(),
+              Seq("vec_id"), "left_anti")
+            case None => uniq
+          }
+          append(newVecs.select(col("vec_id"), col("embedding")), vd)
         }
-        newVecs.select(col("vec_id"), col("embedding"))
-          .write.mode("append").parquet(vd)
-      }
-      // n_arrived from the index's OWN generation rows, not the
-      // in-memory arrivals frame: on a crash replay between the index
-      // append and this report write, the re-run's anti-join sees the
-      // batch's ids standing and the arrivals frame is legitimately
-      // empty — counting gen == batchId keeps the audit trail honest
-      // across attempts (it is whatever this batchId ever ingested)
-      val idxNow = spark.read.parquet(indexDir)
-      val nArrivedDurable = math.max(nArrived,
-        idxNow.filter(col("gen") === batchId).count())
-      // coalesce the empty-index case (a first batch with zero rows,
-      // e.g. a stream starting before data exists): total 0 → skew 0,
-      // no retrain — NOT a null that breaks report readers
-      val occ = idxNow
-        .groupBy(col("j")).agg(count(lit(1)).as("n"))
-        .agg(coalesce(sum(col("n")), lit(0L)).as("total"),
-          coalesce(max(col("n")), lit(0L)).as("max_cell"))
-      val k = math.max(centroids.size, 1)
-      occ.select(
-        lit(batchId).as("batch_id"),
-        lit(nArrivedDurable).as("n_arrived"),
-        col("total").as("n_index"),
-        col("max_cell"),
-        when(col("total") > 0,
-          expr(s"1000 * $k * max_cell DIV total")).otherwise(0L)
-          .as("skew_milli"))
-        .withColumn("retrain_recommended",
-          col("skew_milli") > retrainSkewMilli)
-        .write.mode("append").parquet(reportDir)
-    } finally { fresh.unpersist(); () }
+        // n_arrived from the index's OWN generation rows, not the
+        // in-memory arrivals frame: an index an older binary left
+        // mid-batch already holds the batch's ids, so the re-run's
+        // arrivals frame is empty — counting gen == batchId keeps the
+        // audit trail honest (it is whatever this batchId ever ingested)
+        val idxNow = spark.read.parquet(indexDir)
+        val nArrivedDurable = math.max(nArrived,
+          idxNow.filter(col("gen") === batchId).count())
+        // coalesce the empty-index case (a first batch with zero rows,
+        // e.g. a stream starting before data exists): total 0 → skew 0,
+        // no retrain — NOT a null that breaks report readers
+        val occ = idxNow
+          .groupBy(col("j")).agg(count(lit(1)).as("n"))
+          .agg(coalesce(sum(col("n")), lit(0L)).as("total"),
+            coalesce(max(col("n")), lit(0L)).as("max_cell"))
+        val k = math.max(centroids.size, 1)
+        append(occ.select(
+          lit(batchId).as("batch_id"),
+          lit(nArrivedDurable).as("n_arrived"),
+          col("total").as("n_index"),
+          col("max_cell"),
+          when(col("total") > 0,
+            expr(s"1000 * $k * max_cell DIV total")).otherwise(0L)
+            .as("skew_milli"))
+          .withColumn("retrain_recommended",
+            col("skew_milli") > retrainSkewMilli), reportDir)
+      } finally { fresh.unpersist(); () }
+    }
   }
 
   /** The one-shot backfill that CLOSES the drift loop operationally
@@ -1003,14 +972,12 @@ object StreamOps {
     * gram extraction is `Text.gram8Of` (THE builder — stream and
     * batch can never hash-drift apart), novelty is one anti-join
     * keyed on the 32-bit gram hash (work scales with the batch's
-    * grams × index lookup, never doc×doc), and idempotency is the
-    * usual two layers — a batchId commit marker in `reportDir`
-    * (written LAST) short-circuits exact replays, and the gram
-    * anti-join absorbs cross-batch redelivery under a new batchId.
+    * grams × index lookup, never doc×doc). The report commits the
+    * batch ([[Durable.commitBatch]]), and the gram anti-join absorbs
+    * cross-batch redelivery under a new batchId.
     * The `gen` column stamps each gram's arrival batch for audit.
     * The report row carries n_new_grams counted from the index's own
-    * gen rows (durable across a half-committed crash replay, same
-    * contract as ivfIngestBatch's n_arrived). At 100 TB: the append
+    * gen rows (the ivfIngestBatch n_arrived contract). At 100 TB: the append
     * is a MERGE into the gram-bucketed index table; the batch's cost
     * is its own gram volume. */
   def trainGramIngestBatch(trainGramsDir: String, reportDir: String,
@@ -1026,46 +993,40 @@ object StreamOps {
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     graft.cdc.GraftFunctions.register(spark)
-    // heal any publish a crash interrupted BEFORE the standing read —
-    // a missing live dir would otherwise read as "first batch" and
-    // re-admit every gram under a fresh gen
-    recoverCompaction(trainGramsDir)
-    if (readParquetOpt(spark, reportDir)
-        .exists(hasRow("batch_id", batchId))) return
-    val uniq = batch.dropDuplicates("doc_id")
-    val grams = graft.ops.Text.gram8Of(uniq)
-      .select(col("g")).distinct()
-    val standing = readParquetOpt(spark, trainGramsDir)
-    val fresh = (standing match {
-      case Some(idx) => grams.join(idx.select(col("g")).distinct(),
-        Seq("g"), "left_anti")
-      case None => grams
-    }).cache() // the append below recaches-by-path any plan reading
-               // the index dir — pin the pre-append snapshot first
-    try {
-      val nDocs = uniq.count()
-      fresh.count()
-      fresh.withColumn("gen", lit(batchId))
-        .write.mode("append").parquet(trainGramsDir)
-      val nNewDurable = spark.read.parquet(trainGramsDir)
-        .filter(col("gen") === batchId).count()
-      spark.range(1).select(
-        lit(batchId).as("batch_id"),
-        lit(nDocs).as("n_docs"),
-        lit(nNewDurable).as("n_new_grams"))
-        .write.mode("append").parquet(reportDir)
-    } finally { fresh.unpersist(); () }
+    // the index is healed before the standing read: a missing live dir
+    // would read as "first batch" and re-admit every gram under a new gen
+    val ran = commitBatch(spark, reportDir, batchId, Seq(trainGramsDir)) {
+      append =>
+      val uniq = batch.dropDuplicates("doc_id")
+      val grams = graft.ops.Text.gram8Of(uniq)
+        .select(col("g")).distinct()
+      val standing = readParquetOpt(spark, trainGramsDir)
+      val fresh = (standing match {
+        case Some(idx) => grams.join(idx.select(col("g")).distinct(),
+          Seq("g"), "left_anti")
+        case None => grams
+      }).cache() // the append below recaches-by-path any plan reading
+                 // the index dir — pin the pre-append snapshot first
+      try {
+        val nDocs = uniq.count()
+        fresh.count()
+        append(fresh.withColumn("gen", lit(batchId)), trainGramsDir)
+        val nNewDurable = spark.read.parquet(trainGramsDir)
+          .filter(col("gen") === batchId).count()
+        append(spark.range(1).select(
+          lit(batchId).as("batch_id"),
+          lit(nDocs).as("n_docs"),
+          lit(nNewDurable).as("n_new_grams")), reportDir)
+      } finally { fresh.unpersist(); () }
+    }
     // ---- compaction: bound the index's FILE count ------------------
-    // Runs after the report commit. A crash in here leaves the batch
-    // committed with compaction DEFERRED (a replay's batchId marker
-    // short-circuits before reaching this point) — the next ingest
-    // batch's gate re-trips and compacts then. Rows are preserved
-    // exactly (g, gen both ride the rewrite); the bucketed-by-g
-    // layout is the 100 TB table shape the probe's equi-join wants.
-    val live = new java.io.File(trainGramsDir)
-    val nFiles = Option(live.listFiles).map(
-      _.count(_.getName.endsWith(".parquet"))).getOrElse(0)
-    if (nFiles > compactFileThreshold) {
+    // Runs after the commit. A crash in here leaves the batch committed
+    // with compaction DEFERRED — the next ingest batch's gate re-trips
+    // and compacts then. Rows are preserved exactly (g, gen both ride
+    // the rewrite); the bucketed-by-g layout is the 100 TB table shape
+    // the probe's equi-join wants.
+    if (ran.nonEmpty &&
+        Durable.parquetFiles(trainGramsDir).size > compactFileThreshold) {
       publishCompacted(trainGramsDir,
         spark.read.parquet(trainGramsDir).repartition(8, col("g")))
     }
@@ -1080,11 +1041,9 @@ object StreamOps {
     * `verdictsDir`. Gram extraction is `Text.gram8Of` — THE builder
     * q231/q234 use, so stream and batch can never hash-drift apart.
     *
-    * Same commit-marker idempotency as [[dedupIngestBatch]]: a
-    * replayed batchId is a no-op (the verdict append IS the commit
-    * marker — nothing else is written, so the check suffices alone).
-    * A doc with < 8 tokens has no grams and lands as an n_grams=0
-    * clean verdict — every arrival gets a verdict row.
+    * The verdicts commit the batch ([[Durable.commitBatch]]). A doc
+    * with < 8 tokens has no grams and lands as an n_grams=0 clean
+    * verdict — every arrival gets a verdict row.
     *
     * The index is read-only here (eval docs must never leak INTO
     * train); [[trainGramIngestBatch]] is the maintaining half —
@@ -1094,26 +1053,24 @@ object StreamOps {
     val spark = batch.sparkSession
     graft.cdc.GraftFunctions.register(spark)
     // the probe shares the index with the ingest side's compaction —
-    // heal a torn publish rather than failing the read (idempotent,
-    // no-op when the live dir is healthy)
-    recoverCompaction(trainGramsDir)
-    if (readParquetOpt(spark, verdictsDir)
-        .exists(hasRow("batch_id", batchId))) return
-    val uniq = batch.dropDuplicates("doc_id")
-    val ev = graft.ops.Text.gram8Of(uniq)
-    val tr = spark.read.parquet(trainGramsDir).select(col("g")).distinct()
-    val pd = ev.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
-    val ht = ev.join(tr, "g")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
-    uniq.select(col("doc_id"))
-      .join(pd, Seq("doc_id"), "left")
-      .join(ht, Seq("doc_id"), "left")
-      .select(lit(batchId).as("batch_id"), col("doc_id"),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        (coalesce(col("n_hit"), lit(0L)) * 5 >=
-          coalesce(col("n_grams"), lit(1L))).as("is_contaminated"))
-      .write.mode("append").parquet(verdictsDir)
+    // the heal mends a torn publish rather than failing the read
+    commitBatch(spark, verdictsDir, batchId, Seq(trainGramsDir)) { append =>
+      val uniq = batch.dropDuplicates("doc_id")
+      val ev = graft.ops.Text.gram8Of(uniq)
+      val tr = spark.read.parquet(trainGramsDir).select(col("g")).distinct()
+      val pd = ev.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
+      val ht = ev.join(tr, "g")
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
+      append(uniq.select(col("doc_id"))
+        .join(pd, Seq("doc_id"), "left")
+        .join(ht, Seq("doc_id"), "left")
+        .select(lit(batchId).as("batch_id"), col("doc_id"),
+          coalesce(col("n_grams"), lit(0L)).as("n_grams"),
+          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
+          (coalesce(col("n_hit"), lit(0L)) * 5 >=
+            coalesce(col("n_grams"), lit(1L))).as("is_contaminated")),
+        verdictsDir)
+    }
   }
 
   /** Standing LSH S-curve drift monitor — q300's live twin (r14
@@ -1124,8 +1081,8 @@ object StreamOps {
     * subsets at keep-rates k/8 (subset ⇒ J = |sub|/|full| EXACTLY,
     * minhash theory unchanged), the 8-band × 2-row fire bit is
     * compared against 1 − (1 − s²)^8 in integer milli, and one row
-    * per (batch, J-decile) lands in `reportDir` — batchId-idempotent
-    * like the other probes (the report IS the commit marker). Work
+    * per (batch, J-decile) lands in `reportDir`, which commits the
+    * batch ([[Durable.commitBatch]]). Work
     * scales with the batch (7 keep-rates × its own shingles), never
     * the corpus; nothing here reads the index, so a broken HASH
     * FAMILY (the thing that can drift silently while recall decays)
@@ -1139,45 +1096,45 @@ object StreamOps {
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     graft.cdc.GraftFunctions.register(spark)
-    if (readParquetOpt(spark, reportDir)
-        .exists(hasRow("batch_id", batchId))) return
-    val uniq = batch.dropDuplicates("doc_id")
-    val sh = shingleArrivals(uniq).cache() // full sig + subset sigs
-    try {
-      def mins(g: String => org.apache.spark.sql.Column, pre: String) =
-        (0 until 16).map(j =>
-          min((lit(hashA(j)) * g("h") + lit(hashB(j))) % 2147483647L)
-            .as(s"$pre$j"))
-      val full = sh.groupBy(col("doc_id"))
-        .agg(max(col("n")).as("n"), mins(col, "h"): _*)
-      val ks = {
-        val ss = spark; import ss.implicits._
-        (1L to 7L).toDF("k")
-      }
-      val vsig = sh.crossJoin(broadcast(ks))
-        .filter(pmod(col("h"), lit(8L)) < col("k"))
-        .groupBy(col("doc_id"), col("k"))
-        .agg(count(lit(1)).as("nsub"), mins(col, "v"): _*)
-      val fired = (0 until 8).map(b =>
-        col(s"h${2 * b}") === col(s"v${2 * b}") &&
-          col(s"h${2 * b + 1}") === col(s"v${2 * b + 1}"))
-        .reduce(_ || _)
-      vsig.join(full, "doc_id")
-        .select(expr("nsub * 1000 DIV n").as("s_m"),
-          when(fired, 1L).otherwise(0L).as("fired"))
-        .withColumn("q1", expr("1000 - s_m * s_m DIV 1000"))
-        .withColumn("q2", expr("q1 * q1 DIV 1000"))
-        .withColumn("q4", expr("q2 * q2 DIV 1000"))
-        .withColumn("theo", expr("1000 - q4 * q4 DIV 1000"))
-        .groupBy(least(lit(9L), expr("s_m DIV 100")).as("decile"))
-        .agg(count(lit(1)).as("n_pairs"),
-          expr("sum(fired) * 1000 DIV count(1)").as("obs_milli"),
-          expr("sum(theo) DIV count(1)").as("theo_milli"))
-        .select(lit(batchId).as("batch_id"), col("decile"),
-          col("n_pairs"), col("obs_milli"), col("theo_milli"),
-          (col("obs_milli") - col("theo_milli")).as("gap_milli"))
-        .write.mode("append").parquet(reportDir)
-    } finally { sh.unpersist(); () }
+    commitBatch(spark, reportDir, batchId, Nil) { append =>
+      val uniq = batch.dropDuplicates("doc_id")
+      val sh = shingleArrivals(uniq).cache() // full sig + subset sigs
+      try {
+        def mins(g: String => org.apache.spark.sql.Column, pre: String) =
+          (0 until 16).map(j =>
+            min((lit(hashA(j)) * g("h") + lit(hashB(j))) % 2147483647L)
+              .as(s"$pre$j"))
+        val full = sh.groupBy(col("doc_id"))
+          .agg(max(col("n")).as("n"), mins(col, "h"): _*)
+        val ks = {
+          val ss = spark; import ss.implicits._
+          (1L to 7L).toDF("k")
+        }
+        val vsig = sh.crossJoin(broadcast(ks))
+          .filter(pmod(col("h"), lit(8L)) < col("k"))
+          .groupBy(col("doc_id"), col("k"))
+          .agg(count(lit(1)).as("nsub"), mins(col, "v"): _*)
+        val fired = (0 until 8).map(b =>
+          col(s"h${2 * b}") === col(s"v${2 * b}") &&
+            col(s"h${2 * b + 1}") === col(s"v${2 * b + 1}"))
+          .reduce(_ || _)
+        append(vsig.join(full, "doc_id")
+          .select(expr("nsub * 1000 DIV n").as("s_m"),
+            when(fired, 1L).otherwise(0L).as("fired"))
+          .withColumn("q1", expr("1000 - s_m * s_m DIV 1000"))
+          .withColumn("q2", expr("q1 * q1 DIV 1000"))
+          .withColumn("q4", expr("q2 * q2 DIV 1000"))
+          .withColumn("theo", expr("1000 - q4 * q4 DIV 1000"))
+          .groupBy(least(lit(9L), expr("s_m DIV 100")).as("decile"))
+          .agg(count(lit(1)).as("n_pairs"),
+            expr("sum(fired) * 1000 DIV count(1)").as("obs_milli"),
+            expr("sum(theo) DIV count(1)").as("theo_milli"))
+          .select(lit(batchId).as("batch_id"), col("decile"),
+            col("n_pairs"), col("obs_milli"), col("theo_milli"),
+            (col("obs_milli") - col("theo_milli")).as("gap_milli")),
+          reportDir)
+      } finally { sh.unpersist(); () }
+    }
   }
 
   /** Drift verdict over the probe's report: a J-decile ALARMS when
@@ -1222,7 +1179,7 @@ object StreamOps {
     * distinct words via [[graft.ops.Curation.bpeEncodePieces]], no
     * training jobs, no index reads) — and one
     * `(batch_id, words, pieces, fertility_milli)` row lands in
-    * `reportDir`, batchId-idempotent like the other probes. Work
+    * `reportDir`, which commits the batch ([[Durable.commitBatch]]). Work
     * scales with the batch, never the corpus; drifted text shows as
     * fertility outside the calibration envelope (unseen words stay
     * unmerged, pieces/word rises toward chars/word). */
@@ -1230,19 +1187,18 @@ object StreamOps {
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     graft.cdc.GraftFunctions.register(spark)
-    if (readParquetOpt(spark, reportDir)
-        .exists(hasRow("batch_id", batchId))) return
-    val occ = batch.dropDuplicates("doc_id")
-      .select(explode(graft.ops.Text.toksCol).as("tok"))
-    val wp = graft.ops.Curation.bpeEncodePieces(
-      occ.select(col("tok")).distinct(), picks)
-    occ.join(wp, "tok")
-      .agg(count(lit(1)).as("words"),
-        coalesce(sum(col("pieces")), lit(0L)).as("pieces"))
-      .select(lit(batchId).as("batch_id"), col("words"), col("pieces"),
-        when(col("words") > 0, expr("pieces * 1000 DIV words"))
-          .otherwise(lit(1000L)).as("fertility_milli"))
-      .write.mode("append").parquet(reportDir)
+    commitBatch(spark, reportDir, batchId, Nil) { append =>
+      val occ = batch.dropDuplicates("doc_id")
+        .select(explode(graft.ops.Text.toksCol).as("tok"))
+      val wp = graft.ops.Curation.bpeEncodePieces(
+        occ.select(col("tok")).distinct(), picks)
+      append(occ.join(wp, "tok")
+        .agg(count(lit(1)).as("words"),
+          coalesce(sum(col("pieces")), lit(0L)).as("pieces"))
+        .select(lit(batchId).as("batch_id"), col("words"), col("pieces"),
+          when(col("words") > 0, expr("pieces * 1000 DIV words"))
+            .otherwise(lit(1000L)).as("fertility_milli")), reportDir)
+    }
   }
 
   /** Drift verdict over the fertility probe's report: ONE row —
@@ -1282,10 +1238,9 @@ object StreamOps {
     * equals the batch census's global distinct-doc DF exactly (the
     * parity StreamStaticContamSpec pins). Append cost is the batch's
     * own gram-type volume; at 100 TB this is the MERGE-incremented
-    * df column on the bucketed index table. Idempotency is two
-    * layers: the batchId marker in `reportDir` short-circuits exact
-    * replays, and the half-committed window (df rows landed, report
-    * didn't) is closed by the sidecar's own gen rows — the append is
+    * df column on the bucketed index table. The report commits the
+    * batch ([[Durable.commitBatch]]); df rows an older binary left
+    * mid-batch are kept by the sidecar's own gen rows — the append is
     * skipped when gen == batchId already exists, and the report
     * counts those durable rows. A DOC-level redelivery under a NEW
     * batchId still over-counts df by design (documented bound: DF
@@ -1296,48 +1251,41 @@ object StreamOps {
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     graft.cdc.GraftFunctions.register(spark)
-    // the sidecar itself is compaction-maintained now — heal a torn
-    // publish before the gen-guard reads below
-    recoverCompaction(dfDir)
-    // heal a torn roster publish BEFORE the roster read: a stranded
-    // `_docs_compact_tmp` with no live dir (pre-r14 forgetBatch crash
-    // window) would otherwise read as an empty roster, and this
-    // batch's blind re-append would then resurrect the dir while
-    // recoverCompaction later DELETES the stranded pre-crash copy —
-    // permanently losing the erasure guard (r13 advisor finding)
-    recoverCompaction(dfDir + "_docs")
-    if (readParquetOpt(spark, reportDir)
-        .exists(hasRow("batch_id", batchId))) return
-    // half-committed crash window (df rows landed, report didn't):
-    // unlike the gram index there is no anti-join to absorb a replay
-    // — a blind re-append would double every df for this gen. The
-    // sidecar's own gen rows are the durable truth: skip the append
-    // when they already exist, then report from them (the
-    // ivfIngestBatch n_arrived contract).
-    val uniq = batch.dropDuplicates("doc_id")
-    if (!readParquetOpt(spark, dfDir).exists(hasRow("gen", batchId))) {
-      graft.ops.Text.gram8Of(uniq)
-        .groupBy(col("g")).agg(count(lit(1)).as("df"))
-        .withColumn("gen", lit(batchId))
-        .write.mode("append").parquet(dfDir)
+    // the heal mends a torn roster publish BEFORE the roster read: a
+    // stranded pre-r14 `_docs_compact_tmp` would read as an empty
+    // roster, and the blind re-append would resurrect the dir while
+    // the recovery DELETES the pre-crash copy (r13 advisor finding)
+    commitBatch(spark, reportDir, batchId, Seq(dfDir, dfDir + "_docs")) {
+      append =>
+      // df rows an older binary left mid-batch: unlike the gram index
+      // there is no anti-join to absorb a replay — a blind re-append
+      // would double every df for this gen. The sidecar's own gen rows
+      // are the durable truth: skip the append when they already exist,
+      // then report from them (the ivfIngestBatch n_arrived contract).
+      val uniq = batch.dropDuplicates("doc_id")
+      def noGen(dir: String) = readParquetOpt(spark, dir)
+        .forall(_.filter(col("gen") === batchId).isEmpty)
+      if (noGen(dfDir)) {
+        append(graft.ops.Text.gram8Of(uniq)
+          .groupBy(col("g")).agg(count(lit(1)).as("df"))
+          .withColumn("gen", lit(batchId)), dfDir)
+      }
+      // Ingest ROSTER sidecar (dfDir + "_docs"): which doc_ids'
+      // increments the df rows carry. forgetBatch decrements ONLY for
+      // roster docs — without it, erasing a doc whose content matches
+      // ingested grams (a rejected duplicate) would subtract evidence
+      // a SURVIVING doc contributed. Same gen-guard idempotency as the
+      // df rows themselves.
+      if (noGen(dfDir + "_docs")) {
+        append(uniq.select(col("doc_id")).withColumn("gen", lit(batchId)),
+          dfDir + "_docs")
+      }
+      val nTypes = spark.read.parquet(dfDir)
+        .filter(col("gen") === batchId).count()
+      append(spark.range(1).select(
+        lit(batchId).as("batch_id"),
+        lit(nTypes).as("n_gram_types")), reportDir)
     }
-    // Ingest ROSTER sidecar (dfDir + "_docs"): which doc_ids'
-    // increments the df rows carry. forgetBatch decrements ONLY for
-    // roster docs — without it, erasing a doc whose content matches
-    // ingested grams (a rejected duplicate) would subtract evidence
-    // a SURVIVING doc contributed. Same gen-guard idempotency as the
-    // df rows themselves.
-    if (!readParquetOpt(spark, dfDir + "_docs")
-        .exists(hasRow("gen", batchId))) {
-      uniq.select(col("doc_id")).withColumn("gen", lit(batchId))
-        .write.mode("append").parquet(dfDir + "_docs")
-    }
-    val nTypes = spark.read.parquet(dfDir)
-      .filter(col("gen") === batchId).count()
-    spark.range(1).select(
-      lit(batchId).as("batch_id"),
-      lit(nTypes).as("n_gram_types"))
-      .write.mode("append").parquet(reportDir)
   }
 
   /** Reclaim the DF sidecar's erased mass — the ENFORCEMENT half of
@@ -1428,44 +1376,43 @@ object StreamOps {
     * BOTH verdicts per doc — raw (any train hit, q231's rule) and
     * refined (hits counted only on informative grams, total train
     * DF <= `dfCap`). One equi-join keyed on the gram hash against
-    * the per-gram DF rollup; verdict append is the commit marker,
-    * batchId-idempotent like [[contaminationProbeBatch]]. */
+    * the per-gram DF rollup; the verdicts commit the batch
+    * ([[Durable.commitBatch]]). */
   def contaminationProbeRefinedBatch(dfDir: String, verdictsDir: String,
       dfCap: Long = 10L)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     graft.cdc.GraftFunctions.register(spark)
-    // the sidecar is compaction-maintained (compactDfSidecar) — heal
-    // a torn publish rather than failing the probe read
-    recoverCompaction(dfDir)
-    if (readParquetOpt(spark, verdictsDir)
-        .exists(hasRow("batch_id", batchId))) return
-    val uniq = batch.dropDuplicates("doc_id")
-    val ev = graft.ops.Text.gram8Of(uniq)
-    // df > 0: a gram fully erased by forgetBatch leaves zero-total
-    // rows behind (increments + negative deltas); it is no longer in
-    // train and must not count as a hit — without the filter the
-    // refined path would flag content the exact-gram probe correctly
-    // reads clean (review finding). Never-forgotten corpora are
-    // unaffected (df >= 1 always).
-    val tr = spark.read.parquet(dfDir)
-      .groupBy(col("g")).agg(sum(col("df")).as("df"))
-      .filter(col("df") > 0)
-    val pd = ev.join(tr, Seq("g"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_grams"),
-        count(col("df")).as("n_hit_raw"),
-        count(when(col("df") <= dfCap, 1)).as("n_hit_inf"))
-    uniq.select(col("doc_id"))
-      .join(pd, Seq("doc_id"), "left")
-      .select(lit(batchId).as("batch_id"), col("doc_id"),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        coalesce(col("n_hit_raw"), lit(0L)).as("n_hit_raw"),
-        coalesce(col("n_hit_inf"), lit(0L)).as("n_hit_inf"),
-        (coalesce(col("n_hit_raw"), lit(0L)) * 5 >=
-          coalesce(col("n_grams"), lit(1L))).as("raw_flag"),
-        (coalesce(col("n_hit_inf"), lit(0L)) * 5 >=
-          coalesce(col("n_grams"), lit(1L))).as("refined_flag"))
-      .write.mode("append").parquet(verdictsDir)
+    // the sidecar is compaction-maintained (compactDfSidecar) — the
+    // heal mends a torn publish rather than failing the probe read
+    commitBatch(spark, verdictsDir, batchId, Seq(dfDir)) { append =>
+      val uniq = batch.dropDuplicates("doc_id")
+      val ev = graft.ops.Text.gram8Of(uniq)
+      // df > 0: a gram fully erased by forgetBatch leaves zero-total
+      // rows behind (increments + negative deltas); it is no longer in
+      // train and must not count as a hit — without the filter the
+      // refined path would flag content the exact-gram probe correctly
+      // reads clean (review finding). Never-forgotten corpora are
+      // unaffected (df >= 1 always).
+      val tr = spark.read.parquet(dfDir)
+        .groupBy(col("g")).agg(sum(col("df")).as("df"))
+        .filter(col("df") > 0)
+      val pd = ev.join(tr, Seq("g"), "left")
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_grams"),
+          count(col("df")).as("n_hit_raw"),
+          count(when(col("df") <= dfCap, 1)).as("n_hit_inf"))
+      append(uniq.select(col("doc_id"))
+        .join(pd, Seq("doc_id"), "left")
+        .select(lit(batchId).as("batch_id"), col("doc_id"),
+          coalesce(col("n_grams"), lit(0L)).as("n_grams"),
+          coalesce(col("n_hit_raw"), lit(0L)).as("n_hit_raw"),
+          coalesce(col("n_hit_inf"), lit(0L)).as("n_hit_inf"),
+          (coalesce(col("n_hit_raw"), lit(0L)) * 5 >=
+            coalesce(col("n_grams"), lit(1L))).as("raw_flag"),
+          (coalesce(col("n_hit_inf"), lit(0L)) * 5 >=
+            coalesce(col("n_grams"), lit(1L))).as("refined_flag")),
+        verdictsDir)
+    }
   }
 
   /** foreachBatch right-to-be-forgotten cascade — q277's live half:
@@ -1508,15 +1455,18 @@ object StreamOps {
     *    gen rows in the replay check.
     *  - **label store**: the forgotten docs' own rows are erased in
     *    place (src='erased') so they stop ANCHORING future
-    *    inheritance without destroying the ingest stream's commit
-    *    markers; rows that inherited FROM them keep their labels
+    *    inheritance without destroying the ingest stream's redelivery
+    *    guards; rows that inherited FROM them keep their labels
     *    (see the `labelsDir` param note).
     *
-    * Idempotency: the report row is the commit marker (batchId-
-    * checked, written LAST); every mutation is individually
+    * Idempotency: the report row commits the batch
+    * ([[Durable.commitBatch]]); every mutation is individually
     * replay-safe (tombstones only for still-live docs, anti-join
-    * rewrites, gen-guarded df deltas), so the half-committed crash
-    * window re-runs to the identical store state. A crash-replayed
+    * rewrites, per-gram gen-guarded df deltas), so an uncommitted
+    * attempt re-runs to the identical store state. The df delta
+    * append is the one a replay keeps (`swept = false`): the roster
+    * removal after it is an in-place rewrite no replay undoes, so a
+    * swept delta could never be re-derived. A crash-replayed
     * batch reports the RESIDUAL delta its attempt observed (possibly
     * zeros); store state, not the report, is the audit truth —
     * ForgetSpec pins replayed state == uninterrupted state.
@@ -1537,8 +1487,8 @@ object StreamOps {
         * docs' OWN rows are erased IN PLACE (label nulled,
         * src='erased') so they stop anchoring inheritance — influence
         * removal, same contract as the dedup tombstones — while the
-        * rows keep serving as the ingest stream's commit markers and
-        * redelivery guards. Rows that merely INHERITED FROM a
+        * rows keep serving as the ingest stream's redelivery guards
+        * (and legacy commit rows). Rows that merely INHERITED FROM a
         * forgotten doc keep their labels (the label was learned while
         * the source was legitimately present — erasing it would
         * cascade deletion through derived knowledge, which is a
@@ -1573,223 +1523,209 @@ object StreamOps {
         "to know which grams were exclusive to the forgotten docs")
     val spark = batch.sparkSession
     graft.cdc.GraftFunctions.register(spark)
-    // torn-publish healing for every store the cascade touches —
-    // INCLUDING the ingest roster (dfDir + "_docs"): before r14 the
-    // roster was rewritten under the whole-dir demote-promote
-    // publish, so a crash between its two renames left the live dir
-    // missing with _compact_tmp stranded; readParquetOpt then read
-    // the roster as EMPTY and every future DF decrement silently
-    // no-oped — a permanently lost roster (r13 advisor finding).
-    // recoverCompaction republishes any such stranded state; the
-    // per-file rewrite below no longer opens that window, but
-    // pre-upgrade stranded dirs (and the other stores' compactions)
-    // still need the heal.
-    (dedupIndexDir ++ ivfIndexDir ++ vecStoreDir ++ trainGramsDir ++
-      dfDir ++ dfDir.map(_ + "_docs") ++ labelsDir ++ calDir)
-      .foreach(recoverCompaction)
-    if (readParquetOpt(spark, reportDir)
-        .exists(hasRow("batch_id", batchId))) return
-    val uniq = batch.dropDuplicates("doc_id").cache()
-    try {
-      val ids = uniq.select(col("doc_id"))
-      val nDocs = uniq.count()
-      // Per-file hit census shared by every rewrite below: ONE
-      // key-column scan maps the forget keys to the part FILES that
-      // hold them. Driver state is O(hit files), never O(rows) —
-      // compaction bounds every store's file count, and the budget
-      // guard makes a regression loud (the boundedCollect contract).
-      def hitFileCounts(hits: DataFrame)
-          : Array[org.apache.spark.sql.Row] = {
-        val hf = hits.groupBy(col("_file")).agg(count(lit(1)).as("n"))
-          .limit(65537).collect()
-        require(hf.length <= 65536,
-          "per-file erasure hit census exceeded its 65536-file " +
-            "budget — compaction must bound the store's file count")
-        hf
-      }
-      // File-pruned anti-join rewrite (r13 verdict ask 3): rewrite
-      // ONLY the part files containing forget hits, each via a
-      // single-file scratch write moved atomically onto its original
-      // path ([[replaceStoreFile]]). An RTBF trickle now touches
-      // O(hit files), not O(store) — the MERGE-touching-files shape
-      // the 100 TB posture promised — and untouched files stay
-      // BYTE-IDENTICAL (ForgetSpec pins it), so the store-health
-      // pane's file count is stable under an erasure trickle. A crash
-      // leaves every file either original or fully rewritten; a
-      // replay sees only the residual hits (the documented
-      // residual-delta report contract). Returns rows removed by THIS
-      // attempt (0 on a replay that already removed).
-      // `keys` must carry exactly the column `key`.
-      def rewriteMinus(dir: String, key: String, keys: DataFrame): Long =
-        readParquetOpt(spark, dir).map { df0 =>
+    // every store the cascade touches is declared, so the heal covers
+    // the ingest roster (dfDir + "_docs") too: a roster a pre-r14
+    // whole-dir publish left torn would read as EMPTY, and every
+    // future DF decrement would silently no-op (r13 advisor finding)
+    val stores = (dedupIndexDir ++ ivfIndexDir ++ vecStoreDir ++
+      trainGramsDir ++ dfDir ++ dfDir.map(_ + "_docs") ++ labelsDir ++
+      calDir).toSeq
+    commitBatch(spark, reportDir, batchId, stores) { append =>
+      val uniq = batch.dropDuplicates("doc_id").cache()
+      try {
+        val ids = uniq.select(col("doc_id"))
+        val nDocs = uniq.count()
+        // Per-file hit census shared by every rewrite below: ONE
+        // key-column scan maps the forget keys to the part FILES that
+        // hold them. Driver state is O(hit files), never O(rows) —
+        // compaction bounds every store's file count, and the budget
+        // guard makes a regression loud (the boundedCollect contract).
+        def hitFileCounts(hits: DataFrame)
+            : Array[org.apache.spark.sql.Row] = {
+          val hf = hits.groupBy(col("_file")).agg(count(lit(1)).as("n"))
+            .limit(65537).collect()
+          require(hf.length <= 65536,
+            "per-file erasure hit census exceeded its 65536-file " +
+              "budget — compaction must bound the store's file count")
+          hf
+        }
+        // File-pruned anti-join rewrite (r13 verdict ask 3): rewrite
+        // ONLY the part files containing forget hits, each via a
+        // single-file scratch write moved atomically onto its original
+        // path ([[replaceStoreFile]]). An RTBF trickle now touches
+        // O(hit files), not O(store) — the MERGE-touching-files shape
+        // the 100 TB posture promised — and untouched files stay
+        // BYTE-IDENTICAL (ForgetSpec pins it), so the store-health
+        // pane's file count is stable under an erasure trickle. A crash
+        // leaves every file either original or fully rewritten; a
+        // replay sees only the residual hits (the documented
+        // residual-delta report contract). Returns rows removed by THIS
+        // attempt (0 on a replay that already removed).
+        // `keys` must carry exactly the column `key`.
+        def rewriteMinus(dir: String, key: String, keys: DataFrame): Long =
+          readParquetOpt(spark, dir).map { df0 =>
+            val hf = hitFileCounts(
+              df0.withColumn("_file", input_file_name())
+                .join(keys, Seq(key), "left_semi"))
+            hf.foreach { r =>
+              replaceStoreFile(spark, dir, r.getString(0))(
+                _.join(keys, Seq(key), "left_anti"))
+            }
+            hf.map(_.getLong(1)).sum
+          }.getOrElse(0L)
+        // ---- dedup shingle index: tombstone still-live forgotten docs
+        // Tombstone gen = the DOC'S max(gen) + 1 — the tightest value
+        // that supersedes, chosen over a global max+1 so the tombstone
+        // can never outrun the ingest stream's batchId namespace by
+        // more than one step. If a later ingest batch re-admits the
+        // doc at exactly the tombstone's gen (the one reachable tie),
+        // the live view's n >= 0 filter resolves the tie in favor of
+        // the new content — revival wins, which is the correct
+        // semantics for a fresh submission after erasure.
+        val nDedup = dedupIndexDir.flatMap(readParquetOpt(spark, _)).map { i =>
+          val liveForgot = liveShingles(i)
+            .join(ids, Seq("doc_id"), "left_semi")
+            .groupBy(col("doc_id")).agg(max(col("gen")).as("docgen"))
+            .cache() // count + tombstone append share the index scan
+          try {
+            val n = liveForgot.count()
+            if (n > 0)
+              append(liveForgot
+                .select(col("doc_id"), lit(0L).as("h"), lit(-1L).as("n"),
+                  (col("docgen") + 1).as("gen")), dedupIndexDir.get)
+            n
+          } finally { liveForgot.unpersist(); () }
+        }.getOrElse(0L)
+        // ---- IVF index + raw-vector store: anti-join rewrites --------
+        val vecIds = ids.select(col("doc_id").as("vec_id"))
+        val nIvf = ivfIndexDir.map(rewriteMinus(_, "vec_id", vecIds))
+          .getOrElse(0L)
+        val nStore = vecStoreDir.map(rewriteMinus(_, "vec_id", vecIds))
+          .getOrElse(0L)
+        // ---- train-gram index via the DF sidecar ---------------------
+        val nGrams = trainGramsDir.flatMap { tgDir =>
+          dfDir.map { dd =>
+            val negGen = -batchId - 1
+            val sidecar0 = readParquetOpt(spark, dd)
+            // Only docs on the ingest ROSTER (dfDir + "_docs", written
+            // by trainGramDfIngestBatch) may decrement: a forgotten doc
+            // whose content merely MATCHES ingested grams — a rejected
+            // duplicate, or a doc never train-admitted — must not erase
+            // a surviving doc's evidence. The roster is also the
+            // cross-batch double-forget guard: the first erasure batch
+            // removes the doc from it, so a SECOND request under a new
+            // batchId finds no eligible doc and decrements nothing.
+            val eligible = readParquetOpt(spark, dd + "_docs").map(r =>
+              uniq.join(r.select(col("doc_id")).distinct(),
+                Seq("doc_id"), "left_semi"))
+            for (sc <- sidecar0; el <- eligible) {
+              // the gram join guards content drift: if the erasure
+              // request's text gained grams after ingest, only grams
+              // the sidecar actually carries get negative rows; the
+              // anti-join on this batch's negGen rows makes a replay
+              // append only the grams an earlier attempt did not
+              append(graft.ops.Text.gram8Of(el)
+                .groupBy(col("g")).agg((-count(lit(1))).as("df"))
+                .join(sc.select(col("g")).distinct(), "g")
+                .join(sc.filter(col("gen") === negGen).select(col("g")),
+                  Seq("g"), "left_anti")
+                .withColumn("gen", lit(negGen)), dd, swept = false)
+            }
+            // roster removal AFTER the decrement: a replay keeps the
+            // decrement (negGen rows) and re-runs this idempotent
+            // rewrite
+            rewriteMinus(dd + "_docs", "doc_id", ids)
+            // zeroed grams leave the index — recomputed from the
+            // sidecar's durable totals, so a crash replay re-derives
+            // the SAME zero set and the rewrite is idempotent; a
+            // missing sidecar means nothing was ever ingested, so
+            // nothing can zero
+            readParquetOpt(spark, dd).map { sc =>
+              val zeroed = sc.groupBy(col("g"))
+                .agg(sum(col("df")).as("df"))
+                .filter(col("df") <= 0).select(col("g"))
+              rewriteMinus(tgDir, "g", zeroed)
+            }.getOrElse(0L)
+          }
+        }.getOrElse(0L)
+        // ---- label store: the forgotten doc stops anchoring ----------
+        // ERASE IN PLACE rather than delete: the store's rows are
+        // labelOnIngestBatch's one-verdict-per-doc redelivery guard (and,
+        // in a store an older binary wrote, its commit rows) — deleting
+        // a forgotten doc's row would let a redelivery RE-LABEL the
+        // just-forgotten doc. Nulling the label to src='erased' keeps
+        // the guard while killing anchoring (anchors filter label IS
+        // NOT NULL). Same file pruning as rewriteMinus, but the
+        // transform keeps every row, nulling only the forgotten labels.
+        val nLabels = labelsDir.flatMap(readParquetOpt(spark, _)).map { lb =>
           val hf = hitFileCounts(
-            df0.withColumn("_file", input_file_name())
-              .join(keys, Seq(key), "left_semi"))
+            lb.withColumn("_file", input_file_name())
+              .join(ids, Seq("doc_id"), "left_semi")
+              .filter(col("src") =!= "erased"))
           hf.foreach { r =>
-            replaceStoreFile(spark, dir, r.getString(0))(
-              _.join(keys, Seq(key), "left_anti"))
+            replaceStoreFile(spark, labelsDir.get, r.getString(0)) { fd =>
+              fd.join(ids.withColumn("_f", lit(1)), Seq("doc_id"), "left")
+                .select(col("batch_id"), col("doc_id"),
+                  when(col("_f").isNotNull, lit(null).cast("long"))
+                    .otherwise(col("label")).as("label"),
+                  when(col("_f").isNotNull, lit("erased"))
+                    .otherwise(col("src")).as("src"),
+                  when(col("_f").isNotNull, lit(null).cast("long"))
+                    .otherwise(col("match_doc")).as("match_doc"),
+                  when(col("_f").isNotNull, lit(0L))
+                    .otherwise(col("shared")).as("shared"))
+            }
           }
           hf.map(_.getLong(1)).sum
         }.getOrElse(0L)
-      // ---- dedup shingle index: tombstone still-live forgotten docs
-      // Tombstone gen = the DOC'S max(gen) + 1 — the tightest value
-      // that supersedes, chosen over a global max+1 so the tombstone
-      // can never outrun the ingest stream's batchId namespace by
-      // more than one step. If a later ingest batch re-admits the
-      // doc at exactly the tombstone's gen (the one reachable tie),
-      // the live view's n >= 0 filter resolves the tie in favor of
-      // the new content — revival wins, which is the correct
-      // semantics for a fresh submission after erasure.
-      val nDedup = dedupIndexDir.flatMap(readParquetOpt(spark, _)).map { idx0 =>
-        val idx = if (idx0.columns.contains("gen")) idx0
-          else idx0.withColumn("gen", lit(-1L))
-        val liveForgot = idx
-          .join(idx.groupBy(col("doc_id"))
-            .agg(max(col("gen")).as("gen")), Seq("doc_id", "gen"))
-          .filter(col("n") >= 0)
-          .join(ids, Seq("doc_id"), "left_semi")
-          .groupBy(col("doc_id")).agg(max(col("gen")).as("docgen"))
-          .cache() // count + tombstone append share the index scan
-        try {
-          val n = liveForgot.count()
-          if (n > 0)
-            liveForgot
-              .select(col("doc_id"), lit(0L).as("h"), lit(-1L).as("n"),
-                (col("docgen") + 1).as("gen"))
-              .write.mode("append").parquet(dedupIndexDir.get)
-          n
-        } finally { liveForgot.unpersist(); () }
-      }.getOrElse(0L)
-      // ---- IVF index + raw-vector store: anti-join rewrites --------
-      val vecIds = ids.select(col("doc_id").as("vec_id"))
-      val nIvf = ivfIndexDir.map(rewriteMinus(_, "vec_id", vecIds))
-        .getOrElse(0L)
-      val nStore = vecStoreDir.map(rewriteMinus(_, "vec_id", vecIds))
-        .getOrElse(0L)
-      // ---- train-gram index via the DF sidecar ---------------------
-      val nGrams = trainGramsDir.flatMap { tgDir =>
-        dfDir.map { dd =>
-          val negGen = -batchId - 1
-          val sidecar0 = readParquetOpt(spark, dd)
-          // Only docs on the ingest ROSTER (dfDir + "_docs", written
-          // by trainGramDfIngestBatch) may decrement: a forgotten doc
-          // whose content merely MATCHES ingested grams — a rejected
-          // duplicate, or a doc never train-admitted — must not erase
-          // a surviving doc's evidence. The roster is also the
-          // cross-batch double-forget guard: the first erasure batch
-          // removes the doc from it, so a SECOND request under a new
-          // batchId finds no eligible doc and decrements nothing.
-          val eligible = readParquetOpt(spark, dd + "_docs").map(r =>
-            uniq.join(r.select(col("doc_id")).distinct(),
-              Seq("doc_id"), "left_semi"))
-          val genDone = sidecar0.exists(hasRow("gen", negGen))
-          if (!genDone && sidecar0.nonEmpty && eligible.nonEmpty) {
-            // the gram join guards content drift: if the erasure
-            // request's text gained grams after ingest, only grams
-            // the sidecar actually carries get negative rows
-            graft.ops.Text.gram8Of(eligible.get)
-              .groupBy(col("g")).agg((-count(lit(1))).as("df"))
-              .join(sidecar0.get.select(col("g")).distinct(), "g")
-              .withColumn("gen", lit(negGen))
-              .write.mode("append").parquet(dd)
+        // ---- conformal calibration store: the forgotten doc stops ----
+        // shaping the admission floor (same file-pruned rewrite as the
+        // vector stores; repeats are no-ops on the residual)
+        val nCal = calDir.map(cd => rewriteMinus(cd, "doc_id", ids))
+          .getOrElse(0L)
+        // ---- frame-log exposure: observation, never mutation ---------
+        // (r13 verdict ask 4) One pass over the retained slice of the
+        // log + a broadcast of the forget batch's own ids; the match is
+        // a substring probe on the wire bytes, conservative toward
+        // reporting exposure.
+        val nFrames = frameLogDir.map { ld =>
+          // a configured-but-not-yet-created (or torn-down) log dir
+          // measures ZERO frames, it must not crash the cascade after
+          // the store rewrites have executed: listLogFiles returns the
+          // bare path for a non-directory, which would bypass the
+          // empty-floors guard and fail the read (review finding)
+          if (!new java.io.File(ld).isDirectory) 0L
+          else {
+            // the doc_id's own bytes searched in the transaction's wire
+            // bytes (its frames concatenated; a binary-to-string cast
+            // keeps the bytes as they are)
+            val needles = uniq
+              .select(col("doc_id").cast("string").as("needle"))
+            retainedTx(spark, ld)
+              .select(concat_ws("", transform(col("frames"),
+                _.cast("string"))).as("payload"))
+              .join(broadcast(needles),
+                expr("contains(payload, needle)"), "left_semi")
+              .count()
           }
-          // roster removal AFTER the decrement: a crash replay skips
-          // the decrement via negGen and re-runs this idempotent
-          // rewrite
-          rewriteMinus(dd + "_docs", "doc_id", ids)
-          // zeroed grams leave the index — recomputed from the
-          // sidecar's durable totals, so a crash replay re-derives
-          // the SAME zero set and the rewrite is idempotent; a
-          // missing sidecar means nothing was ever ingested, so
-          // nothing can zero
-          readParquetOpt(spark, dd).map { sc =>
-            val zeroed = sc.groupBy(col("g"))
-              .agg(sum(col("df")).as("df"))
-              .filter(col("df") <= 0).select(col("g"))
-            rewriteMinus(tgDir, "g", zeroed)
-          }.getOrElse(0L)
-        }
-      }.getOrElse(0L)
-      // ---- label store: the forgotten doc stops anchoring ----------
-      // ERASE IN PLACE rather than delete: the store's rows double as
-      // labelOnIngestBatch's commit markers AND its one-verdict-per-
-      // doc redelivery guard — deleting a forgotten doc's row could
-      // remove a batch's ONLY row (marker gone → an at-least-once
-      // replay re-runs the batch and RE-LABELS the just-forgotten
-      // doc). Nulling the label to src='erased' keeps both guards
-      // while killing anchoring (anchors filter label IS NOT NULL).
-      // Same file pruning as rewriteMinus, but erase-IN-PLACE: the
-      // transform keeps every row (commit markers and redelivery
-      // guards survive), nulling only the forgotten docs' labels.
-      val nLabels = labelsDir.flatMap(readParquetOpt(spark, _)).map { lb =>
-        val hf = hitFileCounts(
-          lb.withColumn("_file", input_file_name())
-            .join(ids, Seq("doc_id"), "left_semi")
-            .filter(col("src") =!= "erased"))
-        hf.foreach { r =>
-          replaceStoreFile(spark, labelsDir.get, r.getString(0)) { fd =>
-            fd.join(ids.withColumn("_f", lit(1)), Seq("doc_id"), "left")
-              .select(col("batch_id"), col("doc_id"),
-                when(col("_f").isNotNull, lit(null).cast("long"))
-                  .otherwise(col("label")).as("label"),
-                when(col("_f").isNotNull, lit("erased"))
-                  .otherwise(col("src")).as("src"),
-                when(col("_f").isNotNull, lit(null).cast("long"))
-                  .otherwise(col("match_doc")).as("match_doc"),
-                when(col("_f").isNotNull, lit(0L))
-                  .otherwise(col("shared")).as("shared"))
-          }
-        }
-        hf.map(_.getLong(1)).sum
-      }.getOrElse(0L)
-      // ---- conformal calibration store: the forgotten doc stops ----
-      // shaping the admission floor (same file-pruned rewrite as the
-      // vector stores; repeats are no-ops on the residual)
-      val nCal = calDir.map(cd => rewriteMinus(cd, "doc_id", ids))
-        .getOrElse(0L)
-      // ---- frame-log exposure: observation, never mutation ---------
-      // (r13 verdict ask 4) One pass over the retained slice of the
-      // log + a broadcast of the forget batch's own ids; the match is
-      // a substring probe on the wire bytes, conservative toward
-      // reporting exposure.
-      val nFrames = frameLogDir.map { ld =>
-        // a configured-but-not-yet-created (or torn-down) log dir
-        // measures ZERO frames, it must not crash the cascade after
-        // the store rewrites have executed: listLogFiles returns the
-        // bare path for a non-directory, which would bypass the
-        // empty-floors guard and fail the read (review finding)
-        if (!new java.io.File(ld).isDirectory) 0L
-        else {
-          // the doc_id's own bytes searched in the transaction's wire
-          // bytes (its frames concatenated; a binary-to-string cast
-          // keeps the bytes as they are)
-          val needles = uniq
-            .select(col("doc_id").cast("string").as("needle"))
-          retainedTx(spark, ld)
-            .select(concat_ws("", transform(col("frames"),
-              _.cast("string"))).as("payload"))
-            .join(broadcast(needles),
-              expr("contains(payload, needle)"), "left_semi")
-            .count()
-        }
-      }.getOrElse(-1L)
-      // report LAST — the commit marker. Schema note: r14 widened the
-      // report with n_cal_removed; a reportDir holding pre-r14 rows
-      // must be read with mergeSchema=true (plain parquet read
-      // samples one footer and either hides the new column or nulls
-      // it for old rows, footer-dependent).
-      spark.range(1).select(
-        lit(batchId).as("batch_id"),
-        lit(nDocs).as("n_docs"),
-        lit(nDedup).as("n_dedup_tombstoned"),
-        lit(nIvf).as("n_vecs_removed"),
-        lit(nStore).as("n_store_removed"),
-        lit(nGrams).as("n_grams_removed"),
-        lit(nLabels).as("n_labels_removed"),
-        lit(nCal).as("n_cal_removed"),
-        lit(nFrames).as("n_frames_retained"))
-        .write.mode("append").parquet(reportDir)
-    } finally { uniq.unpersist(); () }
+        }.getOrElse(-1L)
+        // Schema note: r14 widened the report with n_cal_removed; a
+        // reportDir holding pre-r14 rows must be read with
+        // mergeSchema=true (plain parquet read samples one footer and
+        // either hides the new column or nulls it for old rows,
+        // footer-dependent).
+        append(spark.range(1).select(
+          lit(batchId).as("batch_id"),
+          lit(nDocs).as("n_docs"),
+          lit(nDedup).as("n_dedup_tombstoned"),
+          lit(nIvf).as("n_vecs_removed"),
+          lit(nStore).as("n_store_removed"),
+          lit(nGrams).as("n_grams_removed"),
+          lit(nLabels).as("n_labels_removed"),
+          lit(nCal).as("n_cal_removed"),
+          lit(nFrames).as("n_frames_retained")), reportDir)
+      } finally { uniq.unpersist(); () }
+    }
   }
 
   /** One-pane health report across every maintained store — the
@@ -1831,9 +1767,7 @@ object StreamOps {
       bpeEnvelopeMilli: (Long, Long) = (1000L, 2500L)): DataFrame = {
     val ss = spark
     import ss.implicits._
-    def nFiles(dir: String): Long =
-      Option(new java.io.File(dir).listFiles())
-        .map(_.count(_.getName.endsWith(".parquet")).toLong).getOrElse(0L)
+    def nFiles(dir: String): Long = Durable.parquetFiles(dir).size.toLong
     // each store's recommendation fires under ITS OWNER'S policy, not
     // a blanket OR: gen/delta stores (dedup index, DF sidecar) compact
     // on stale fraction (dedupIngestBatch's gate); rewrite-maintained
@@ -1854,15 +1788,8 @@ object StreamOps {
     }
     val rows = Seq.newBuilder[(String, Long, Long, Long, Long, Long, Boolean)]
     dedupIndexDir.foreach { dir =>
-      val (total, live) = readParquetOpt(spark, dir).map { idx0 =>
-        val idx = if (idx0.columns.contains("gen")) idx0
-          else idx0.withColumn("gen", lit(-1L))
-        val liveN = idx
-          .join(idx.groupBy(col("doc_id"))
-            .agg(max(col("gen")).as("gen")), Seq("doc_id", "gen"))
-          .filter(col("n") >= 0).count()
-        (idx.count(), liveN)
-      }.getOrElse((0L, 0L))
+      val (total, live) = readParquetOpt(spark, dir)
+        .map(i => (i.count(), liveShingles(i).count())).getOrElse((0L, 0L))
       rows += row("dedup_index", dir, total, live, ByStale)
     }
     dfDir.foreach { dir =>
@@ -2009,8 +1936,8 @@ object StreamOps {
     *  - the calibration feed is the deterministic 1-in-`calFraction`
     *    md5 split (the same hash q291's audit uses), appended with a
     *    doc_id anti-join so at-least-once replays converge;
-    *  - verdicts `(batch_id, doc_id, q, thr_q, pass)` are written
-    *    LAST as the commit marker; zero-token docs carry q = −1 and
+    *  - verdicts `(batch_id, doc_id, q, thr_q, pass)` commit the batch
+    *    ([[Durable.commitBatch]]); zero-token docs carry q = −1 and
     *    fail the gate EXPLICITLY (an empty doc is not trainable
     *    text; silence would hide the drop);
     *  - erasure: [[forgetBatch]]`(calDir = ...)` removes a forgotten
@@ -2024,64 +1951,59 @@ object StreamOps {
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     graft.cdc.GraftFunctions.register(spark)
-    recoverCompaction(calDir)
-    if (readParquetOpt(spark, verdictsDir)
-        .exists(hasRow("batch_id", batchId))) return
-    val uniq = batch.dropDuplicates("doc_id").cache()
-    try {
-      val scored = uniq
-        .join(graft.ops.Text.qualityScoresOf(uniq), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("q"), lit(-1L)).as("q"))
-      val cal = readParquetOpt(spark, calDir)
-      val floor: Long = cal.map { c0 =>
-        // "a batch never gates itself" must hold on the CRASH-REPLAY
-        // path too: a predecessor that appended this batch's
-        // calibration rows and died before the verdict marker would
-        // otherwise leave the replay deriving its floor partly from
-        // the batch's own scores (different verdicts per crash
-        // timing — the review finding). Anti-joining the batch's ids
-        // out makes the floor identical on first run and any replay.
-        val c = c0.join(uniq.select(col("doc_id")),
-          Seq("doc_id"), "left_anti")
-        val n = c.count()
-        val k = alphaMilli * (n + 1) / 1000L
-        if (k <= 0L) -1L
-        else {
-          // limit() takes an Int, so the k-th order statistic is
-          // clamped at Int.MaxValue — reachable only past ~2.1e9/
-          // alpha calibration rows (alpha=100 milli → a >21e9-row
-          // store), where picking the 2.147e9-th smallest q instead
-          // of the k-th makes the floor strictly more permissive by
-          // an O(1e-2)-quantile sliver. Clamping beats the silent
-          // Long→Int wrap (negative limit → AnalysisException) the
-          // r14 advisor flagged; a store that big should shard its
-          // calibration anyway.
-          val kth = c.orderBy(col("q"), col("doc_id"))
-            .limit(math.min(math.min(k, n), Int.MaxValue.toLong).toInt)
-            .agg(max(col("q")).as("thr"))
-            .collect()
-          kth.headOption.map(_.getAs[Long]("thr")).getOrElse(-1L)
+    commitBatch(spark, verdictsDir, batchId, Seq(calDir)) { append =>
+      val uniq = batch.dropDuplicates("doc_id").cache()
+      try {
+        val scored = uniq
+          .join(graft.ops.Text.qualityScoresOf(uniq), Seq("doc_id"), "left")
+          .select(col("doc_id"), coalesce(col("q"), lit(-1L)).as("q"))
+        val cal = readParquetOpt(spark, calDir)
+        val floor: Long = cal.map { c0 =>
+          // "a batch never gates itself" must hold on the CRASH-REPLAY
+          // path too: calibration rows of this batch that an older
+          // binary appended before dying would otherwise leave the
+          // replay deriving its floor partly from
+          // the batch's own scores (different verdicts per crash
+          // timing — the review finding). Anti-joining the batch's ids
+          // out makes the floor identical on first run and any replay.
+          val c = c0.join(uniq.select(col("doc_id")),
+            Seq("doc_id"), "left_anti")
+          val n = c.count()
+          val k = alphaMilli * (n + 1) / 1000L
+          if (k <= 0L) -1L
+          else {
+            // limit() takes an Int, so the k-th order statistic is
+            // clamped at Int.MaxValue — reachable only past ~2.1e9/
+            // alpha calibration rows (alpha=100 milli → a >21e9-row
+            // store), where picking the 2.147e9-th smallest q instead
+            // of the k-th makes the floor strictly more permissive by
+            // an O(1e-2)-quantile sliver. Clamping beats the silent
+            // Long→Int wrap (negative limit → AnalysisException) the
+            // r14 advisor flagged; a store that big should shard its
+            // calibration anyway.
+            val kth = c.orderBy(col("q"), col("doc_id"))
+              .limit(math.min(math.min(k, n), Int.MaxValue.toLong).toInt)
+              .agg(max(col("q")).as("thr"))
+              .collect()
+            kth.headOption.map(_.getAs[Long]("thr")).getOrElse(-1L)
+          }
+        }.getOrElse(-1L)
+        // the floor is already derived from the pre-batch store
+        val calRows = scored.filter(col("q") >= 0L)
+          .filter(pmod(graft.cdc.GraftFunctions.md5_h32(
+            col("doc_id").cast("string")), lit(calFraction)) === 0L)
+        val fresh = cal match {
+          case Some(c) => calRows.join(c.select(col("doc_id")),
+            Seq("doc_id"), "left_anti")
+          case None => calRows
         }
-      }.getOrElse(-1L)
-      // calibration append FIRST (crash between the two writes
-      // replays into the anti-join, converging), floor already
-      // derived from the pre-batch store
-      val calRows = scored.filter(col("q") >= 0L)
-        .filter(pmod(graft.cdc.GraftFunctions.md5_h32(
-          col("doc_id").cast("string")), lit(calFraction)) === 0L)
-      val fresh = cal match {
-        case Some(c) => calRows.join(c.select(col("doc_id")),
-          Seq("doc_id"), "left_anti")
-        case None => calRows
-      }
-      fresh.select(col("doc_id"), col("q"))
-        .write.mode("append").parquet(calDir)
-      // verdicts LAST — the commit marker
-      scored.select(lit(batchId).as("batch_id"), col("doc_id"),
-          col("q"), lit(floor).as("thr_q"),
-          (col("q") >= 0L && col("q") >= lit(floor)).as("pass"))
-        .write.mode("append").parquet(verdictsDir)
-    } finally { uniq.unpersist(); () }
+        append(fresh.select(col("doc_id"), col("q")), calDir)
+        append(scored.select(lit(batchId).as("batch_id"), col("doc_id"),
+            col("q"), lit(floor).as("thr_q"),
+            (col("q") >= 0L && col("q") >= lit(floor)).as("pass")),
+          verdictsDir)
+      } finally { uniq.unpersist(); () }
+    }
   }
 
   /** foreachBatch label inheritance — q278's live half: each
@@ -2100,8 +2022,9 @@ object StreamOps {
     *
     * One verdict row per arrival — `(batch_id, doc_id, label, src,
     * match_doc, shared)` with src ∈ trusted|inherited|none — appended
-    * to `labelsDir`, which doubles as the batchId commit marker;
-    * cross-batch redelivery anti-joins the store's doc_ids (one
+    * to `labelsDir`, which commits the batch
+    * ([[Durable.commitBatch]]); cross-batch redelivery anti-joins the
+    * store's doc_ids (one
     * verdict per doc_id, the ingest contract: relabeling a `none`
     * doc after better anchors arrive is q278's batch backfill, not
     * this path). Ties break by (shared desc, label asc, match_doc
@@ -2110,84 +2033,77 @@ object StreamOps {
       minShared: Long = 3L)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     graft.cdc.GraftFunctions.register(spark)
-    recoverCompaction(indexDir)
     // the label store itself is rewrite-maintained by forgetBatch's
-    // erase-in-place publish — heal a torn publish BEFORE the
+    // erase-in-place publish — the heal mends a torn publish BEFORE the
     // standing read, or a crash window would read as "first batch"
     // and the eventual recover would destroy the pre-crash store
-    recoverCompaction(labelsDir)
-    if (readParquetOpt(spark, labelsDir)
-        .exists(hasRow("batch_id", batchId))) return
-    val uniq0 = batch.dropDuplicates("doc_id")
-    val standing = readParquetOpt(spark, labelsDir)
-    val uniq = (standing match {
-      case Some(lb) => uniq0.join(lb.select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      case None => uniq0
-    }).cache()
-    try {
-      // anchors: labeled docs standing in the store (trusted OR
-      // previously inherited — that is what makes propagation
-      // transitive across batches)
-      val anchors = standing.map(_
-          .filter(col("label").isNotNull)
-          .select(col("doc_id").as("corpus_doc"), col("label").as("clabel"))
-          .dropDuplicates("corpus_doc"))
-        .getOrElse(spark.emptyDataFrame
-          .withColumn("corpus_doc", lit(0L))
-          .withColumn("clabel", lit(0L))
-          .limit(0))
-      val trusted = uniq.filter(col("label").isNotNull)
-        .select(col("doc_id"), col("label").cast("long").as("label"),
-          lit("trusted").as("src"),
-          lit(null).cast("long").as("match_doc"),
-          lit(0L).as("shared"))
-      val unl = uniq.filter(col("label").isNull)
-      val idx = readParquetOpt(spark, indexDir)
-        .getOrElse(spark.emptyDataFrame)
-      val inherited =
-        if (idx.columns.isEmpty) unl.select(col("doc_id")).limit(0)
-          .withColumn("label", lit(0L))
-          .withColumn("match_doc", lit(0L))
-          .withColumn("shared", lit(0L))
-        else {
-          val withGen = if (idx.columns.contains("gen")) idx
-            else idx.withColumn("gen", lit(-1L))
-          val live = withGen
-            .join(withGen.groupBy(col("doc_id"))
-              .agg(max(col("gen")).as("gen")), Seq("doc_id", "gen"))
-            .filter(col("n") >= 0)
-            .select(col("doc_id").as("corpus_doc"), col("h"))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("doc_id"))
-            .orderBy(col("shared").desc, col("clabel"), col("corpus_doc"))
-          shingleArrivals(unl)
-            .join(live, "h")
-            .filter(col("doc_id") =!= col("corpus_doc"))
-            .join(anchors, "corpus_doc")
-            .groupBy(col("doc_id"), col("corpus_doc"), col("clabel"))
-            .agg(count(lit(1)).as("shared"))
-            .filter(col("shared") >= minShared)
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") === 1)
-            .select(col("doc_id"), col("clabel").as("label"),
-              col("corpus_doc").as("match_doc"), col("shared"))
-        }
-      val verdicts = uniq.select(col("doc_id"))
-        .join(trusted.select(col("doc_id")).withColumn("t", lit(1)),
-          Seq("doc_id"), "left")
-        .filter(col("t").isNull).drop("t")
-        .join(inherited, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("label"),
-          when(col("label").isNotNull, lit("inherited"))
-            .otherwise(lit("none")).as("src"),
-          col("match_doc"), coalesce(col("shared"), lit(0L)).as("shared"))
-        .unionByName(trusted)
-        .withColumn("batch_id", lit(batchId))
-        .select(col("batch_id"), col("doc_id"), col("label"),
-          col("src"), col("match_doc"), col("shared"))
-      verdicts.write.mode("append").parquet(labelsDir)
-    } finally { uniq.unpersist(); () }
+    commitBatch(spark, labelsDir, batchId, Seq(indexDir)) { append =>
+      val uniq0 = batch.dropDuplicates("doc_id")
+      val standing = readParquetOpt(spark, labelsDir)
+      val uniq = (standing match {
+        case Some(lb) => uniq0.join(lb.select(col("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti")
+        case None => uniq0
+      }).cache()
+      try {
+        // anchors: labeled docs standing in the store (trusted OR
+        // previously inherited — that is what makes propagation
+        // transitive across batches)
+        val anchors = standing.map(_
+            .filter(col("label").isNotNull)
+            .select(col("doc_id").as("corpus_doc"), col("label").as("clabel"))
+            .dropDuplicates("corpus_doc"))
+          .getOrElse(spark.emptyDataFrame
+            .withColumn("corpus_doc", lit(0L))
+            .withColumn("clabel", lit(0L))
+            .limit(0))
+        val trusted = uniq.filter(col("label").isNotNull)
+          .select(col("doc_id"), col("label").cast("long").as("label"),
+            lit("trusted").as("src"),
+            lit(null).cast("long").as("match_doc"),
+            lit(0L).as("shared"))
+        val unl = uniq.filter(col("label").isNull)
+        val idx = readParquetOpt(spark, indexDir)
+          .getOrElse(spark.emptyDataFrame)
+        val inherited =
+          if (idx.columns.isEmpty) unl.select(col("doc_id")).limit(0)
+            .withColumn("label", lit(0L))
+            .withColumn("match_doc", lit(0L))
+            .withColumn("shared", lit(0L))
+          else {
+            val live = liveShingles(idx)
+              .select(col("doc_id").as("corpus_doc"), col("h"))
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(col("doc_id"))
+              .orderBy(col("shared").desc, col("clabel"), col("corpus_doc"))
+            shingleArrivals(unl)
+              .join(live, "h")
+              .filter(col("doc_id") =!= col("corpus_doc"))
+              .join(anchors, "corpus_doc")
+              .groupBy(col("doc_id"), col("corpus_doc"), col("clabel"))
+              .agg(count(lit(1)).as("shared"))
+              .filter(col("shared") >= minShared)
+              .withColumn("rn", row_number().over(w))
+              .filter(col("rn") === 1)
+              .select(col("doc_id"), col("clabel").as("label"),
+                col("corpus_doc").as("match_doc"), col("shared"))
+          }
+        val verdicts = uniq.select(col("doc_id"))
+          .join(trusted.select(col("doc_id")).withColumn("t", lit(1)),
+            Seq("doc_id"), "left")
+          .filter(col("t").isNull).drop("t")
+          .join(inherited, Seq("doc_id"), "left")
+          .select(col("doc_id"), col("label"),
+            when(col("label").isNotNull, lit("inherited"))
+              .otherwise(lit("none")).as("src"),
+            col("match_doc"), coalesce(col("shared"), lit(0L)).as("shared"))
+          .unionByName(trusted)
+          .withColumn("batch_id", lit(batchId))
+          .select(col("batch_id"), col("doc_id"), col("label"),
+            col("src"), col("match_doc"), col("shared"))
+        append(verdicts, labelsDir)
+      } finally { uniq.unpersist(); () }
+    }
   }
 
   /** One complete transaction per row over a frame-log dir —
@@ -2310,14 +2226,11 @@ object StreamOps {
     * never doc-sized), so a replayed or half-committed batch can
     * always reconstruct exactly where the stream stood.
     *
-    * Write protocol (manifest THEN totals) makes every failure mode
-    * idempotent:
-    *  - totals row present for this batchId → fully committed, no-op;
-    *  - manifest present but totals missing (crash between the two
-    *    writes) → the totals row is re-derived from the MANIFEST's
-    *    own rows, never recomputed from input, so the repair cannot
-    *    drift from what readers already saw;
-    *  - neither present → normal path.
+    * The totals commit the batch ([[Durable.commitBatch]]). Manifest
+    * rows of this batch that an older binary left without totals are
+    * repaired, not recomputed: the totals row is re-derived from the
+    * MANIFEST's own rows, so the repair cannot drift from what readers
+    * already saw.
     *
     * Within a batch, per-source offsets come from a source-partitioned
     * cumsum ordered by doc_id (PlanGuard: no global window); the base
@@ -2327,41 +2240,42 @@ object StreamOps {
       chunk: Long = 512L)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     import org.apache.spark.sql.expressions.Window
-    // only a missing or empty store reads as "nothing committed": an
-    // unreadable totals store must fail the batch, not restart every
-    // source's offsets at 0
-    val totals = readParquetOpt(spark, totalsDir)
-    if (totals.exists(hasRow("batch_id", batchId))) return
-    if (!readParquetOpt(spark, manifestDir)
-        .exists(hasRow("batch_id", batchId))) {
-      val base = totals.fold(spark.emptyDataFrame
-          .select(lit("").as("source"), lit(0L).as("base")).limit(0))(
-        _.filter(col("batch_id") < batchId)
-          .groupBy(col("source")).agg(sum(col("toks")).as("base")))
-      val wSrc = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      batch.select(col("doc_id"), col("source"),
-          col("n_toks").cast("long").as("n"))
-        .filter(col("n") >= 1)
-        .dropDuplicates("doc_id")
-        .withColumn("cumIn", sum(col("n")).over(wSrc))
-        .join(broadcast(base), Seq("source"), "left")
-        .select(lit(batchId).as("batch_id"), col("source"),
-          col("doc_id"), col("n"),
-          (coalesce(col("base"), lit(0L)) + col("cumIn") - col("n"))
-            .as("start_off"))
-        .select(col("batch_id"), col("source"), col("doc_id"),
-          col("n"), col("start_off"),
-          expr(s"start_off DIV $chunk").as("first_chunk"),
-          expr(s"(start_off + n - 1) DIV $chunk").as("last_chunk"))
-        .write.mode("append").parquet(manifestDir)
+    commitBatch(spark, totalsDir, batchId, Seq(manifestDir)) { append =>
+      // only a missing or empty store reads as "no totals": an unreadable
+      // totals store must fail the batch, not restart every source's
+      // offsets at 0
+      val totals = readParquetOpt(spark, totalsDir)
+      if (readParquetOpt(spark, manifestDir)
+          .forall(_.filter(col("batch_id") === batchId).isEmpty)) {
+        val base = totals.fold(spark.emptyDataFrame
+            .select(lit("").as("source"), lit(0L).as("base")).limit(0))(
+          _.filter(col("batch_id") < batchId)
+            .groupBy(col("source")).agg(sum(col("toks")).as("base")))
+        val wSrc = Window.partitionBy(col("source")).orderBy(col("doc_id"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        append(batch.select(col("doc_id"), col("source"),
+            col("n_toks").cast("long").as("n"))
+          .filter(col("n") >= 1)
+          .dropDuplicates("doc_id")
+          .withColumn("cumIn", sum(col("n")).over(wSrc))
+          .join(broadcast(base), Seq("source"), "left")
+          .select(lit(batchId).as("batch_id"), col("source"),
+            col("doc_id"), col("n"),
+            (coalesce(col("base"), lit(0L)) + col("cumIn") - col("n"))
+              .as("start_off"))
+          .select(col("batch_id"), col("source"), col("doc_id"),
+            col("n"), col("start_off"),
+            expr(s"start_off DIV $chunk").as("first_chunk"),
+            expr(s"(start_off + n - 1) DIV $chunk").as("last_chunk")),
+          manifestDir)
+      }
+      // totals derive from the manifest's rows — the repair path reads
+      // back EXACTLY what was written
+      append(spark.read.parquet(manifestDir)
+        .filter(col("batch_id") === batchId)
+        .groupBy(col("source")).agg(sum(col("n")).as("toks"))
+        .select(lit(batchId).as("batch_id"), col("source"), col("toks")),
+        totalsDir)
     }
-    // totals derive from the manifest's committed rows — the repair
-    // path after a crash reads back EXACTLY what was written
-    spark.read.parquet(manifestDir)
-      .filter(col("batch_id") === batchId)
-      .groupBy(col("source")).agg(sum(col("n")).as("toks"))
-      .select(lit(batchId).as("batch_id"), col("source"), col("toks"))
-      .write.mode("append").parquet(totalsDir)
   }
 }

@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * document (cores, dataset, bench output dir, bench passes), no
   * one-off mains in the library packages, no unbuffered frame-log
   * reads in the streaming package, one ack-state file per log dir, one
-  * crash protocol and one "empty store" reading in the streaming
-  * package, one place that installs Spark settings on a user's
+  * crash protocol, one batch-commit protocol and one "empty store"
+  * reading in the streaming package, one place that installs Spark settings on a user's
   * session, one table of native SQL functions — and the one session's
   * settings pinned, so a drift from the benchmark's copy fails here
   * instead of silently timing a different plan. */
@@ -111,6 +111,17 @@ class SourceLintSpec extends AnyFunSuite {
     // publish, so a durability change (an fsync, a rename retry) is one edit
     val bad = streamingSites(
       """ATOMIC_MOVE|renameTo\(|createTempFile\(|createLink\(""".r)
+      .filterNot(_._1 == "graft/streaming/Durable.scala")
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("streaming appends and marks batch commits only in Durable") {
+    // every foreachBatch store commits through Durable.commitBatch: an
+    // append elsewhere skips the sweep a crashed attempt needs, and a
+    // commit check by rows or by a marker name elsewhere is a second
+    // commit protocol
+    val bad = streamingSites(
+      """mode\("append"\)|_batch-|hasRow\("batch_id"""".r)
       .filterNot(_._1 == "graft/streaming/Durable.scala")
     assert(bad.isEmpty, bad.mkString("\n"))
   }
